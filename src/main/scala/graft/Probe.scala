@@ -88,63 +88,6 @@ object Probe {
       println("capped candidates: star contract preserves survivors (checked)")
     }
 
-    // ---- staging hook: under `persist` (the default and the 100-TB mode)
-    // building an operator must not trigger a Spark job, and all modes must
-    // compute identical results. Opt-in `local` is EAGER localCheckpoint —
-    // lazy local checkpoints deadlock when a broadcast-exchange thread
-    // materializes them against the DAG scheduler (see Staging scaladoc),
-    // so job-free construction is asserted for persist only.
-    {
-      import graft.operators.{Dedup, Staging}
-      // count only jobs whose START TIME falls inside the build window —
-      // the listener also receives events of EARLIER jobs still queued in
-      // the async bus at registration, which a plain counter miscounts
-      @volatile var jobsStarted = 0
-      @volatile var t0 = Long.MaxValue
-      @volatile var t1 = Long.MaxValue
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (js.time >= t0 && js.time <= t1) jobsStarted += 1
-      }
-      spark.sparkContext.addSparkListener(listener)
-      // map-only staged frame under persist: zero jobs at build
-      spark.conf.set(Staging.ConfKey, "persist")
-      t0 = System.currentTimeMillis()
-      val built = Dedup.spanDedup(base.select("doc_id", "text"), "text", "doc_id")
-      t1 = System.currentTimeMillis()
-      Thread.sleep(1000) // listener delivery is async
-      require(jobsStarted == 0,
-        s"building spanDedup triggered $jobsStarted Spark job(s) — " +
-          "staging a map-only frame under persist must be job-free")
-      // shuffle-bearing staged frame (the band table): persist must stay
-      // FULLY lazy on this shape too (CacheManager only marks the level)
-      jobsStarted = 0
-      t0 = System.currentTimeMillis()
-      val builtPairs = Dedup.ngramJaccardPairs(
-        base.select("doc_id", "text"), "text", "doc_id")
-      t1 = System.currentTimeMillis()
-      Thread.sleep(1000)
-      require(jobsStarted == 0,
-        s"building ngramJaccardPairs under staging=persist triggered " +
-          s"$jobsStarted Spark job(s) — persist staging must be fully lazy")
-      spark.sparkContext.removeSparkListener(listener)
-      // result equality across staging modes (persist is the 100-TB setting)
-      val persistPairs = builtPairs.count()
-      val persistSpans = Dedup.spanDedup(base.select("doc_id", "text"),
-        "text", "doc_id").count()
-      spark.conf.set(Staging.ConfKey, "local")
-      require(Dedup.ngramJaccardPairs(base.select("doc_id", "text"),
-        "text", "doc_id").count() == persistPairs,
-        "staging mode changed the ngramJaccardPairs result")
-      require(built.count() == persistSpans &&
-        Dedup.spanDedup(base.select("doc_id", "text"), "text", "doc_id")
-          .count() == persistSpans,
-        "staging mode changed the spanDedup result")
-      println("staging: persist build job-free and fully lazy, " +
-        "modes result-identical (checked)")
-    }
-
     // ---- cross-corpus screen: precomputed reference bands (the
     // band-once-reuse-per-batch ingest shape) must equal the recompute form
     {
@@ -311,13 +254,6 @@ object Probe {
       qv.unpersist(); truthAll.unpersist()
     }
 
-    // ---- near-dup cluster propagation: rounds are bounded by component
-    // DIAMETER, not size — a 50k-doc STAR (the realistic near-dup shape: one
-    // boilerplate template matching many docs) converges in ~2 rounds; the
-    // 30-link chain is the adversarial diameter case (1 round per link, the
-    // shape the maxIters guard exists for). Per-round cost is one equi-join
-    // + partial agg over (id, label) pairs — shuffle volume never grows with
-    // rounds.
     // ---- as-of join skew: one hot key carrying 90% of both sides must
     // spread across time slices — the as-of window partitions by
     // (key, slice), never by key alone, so no single task sorts the hot
@@ -336,6 +272,10 @@ object Probe {
     println("asof plan: window partitioned by (key, time-slice) (checked)")
     timed("asof join (hot key 90% @1M rows)")(asof.count())
 
+    // ---- near-dup clusters: a 50k-doc STAR (the realistic near-dup shape:
+    // one boilerplate template matching many docs) plus a 30-link chain
+    // (the adversarial diameter case for label propagation); star rounds
+    // stay O(log² n) on both
     val nDocs = 100000L
     val docsIds = spark.range(nDocs).select(col("id").as("doc_id"))
     val star = spark.range(1L, 50000L)
@@ -1295,12 +1235,12 @@ object Probe {
           f"256f $t256%.2f s — per-frame container re-parse is back?")
     }
 
-    // ---- exploded-stage passthrough (round-10 q32/q84 attribution): the
-    // shingle frame of ngramJaccardPairs is an Exploded stage — BIGGER
-    // than its parquet input, so the default mode recomputes it per
-    // consumer instead of columnar-caching it (cache measured 2-4× the
-    // recompute CPU at sf1, see Staging's scaladoc). An InMemoryRelation
-    // reappearing in the q32 plan means a call site lost its shape hint.
+    // ---- exploded frames are not staged (round-10 q32/q84 attribution):
+    // the shingle frame of ngramJaccardPairs is BIGGER than its parquet
+    // input, so it is recomputed per consumer instead of columnar-cached
+    // (cache measured 2-4× the recompute CPU at sf1, see Staging's
+    // scaladoc). An InMemoryRelation reappearing in the q32 plan means a
+    // call site staged an exploded frame.
     {
       val q32 = graft.SparkEntry.queries("q32_jaccard_pairs")(spark, dir)
       val plan = q32.queryExecution.optimizedPlan.toString

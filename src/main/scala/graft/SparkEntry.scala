@@ -44,10 +44,8 @@ object SparkEntry {
     // flag). Scale-adaptive by construction: AQE coalesces toward
     // advisoryPartitionSizeInBytes, so a large cached frame keeps its
     // parallelism (guide §2.2).
-    // env toggle for A/B measurement only; default ON
-    if (sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "1") != "0")
-      spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    spark.conf.set(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     spark
   }
 
@@ -921,8 +919,8 @@ object SparkEntry {
     // near-dup CLUSTER assignment: connected components over the minhash-LSH
     // candidate graph (min reachable doc id), vs q41's pair-drop policy.
     // Oracle computes true reachability with a recursive CTE; the Spark side
-    // iterates min-label propagation to a fixpoint — both are exact
-    // components, so they agree.
+    // runs large-star/small-star rounds (Graph.connectedComponentsStar) —
+    // both are exact components, so they agree.
     Q("q54_dedup_clusters", Some(
       s"""${dMinhashSig.replaceFirst("^WITH ", "WITH RECURSIVE ")}, bands AS (SELECT doc_id, CAST(seed_id // 4 AS INT) AS band_id, list_reduce(list_prepend(CAST(0 AS BIGINT), list(minhash ORDER BY seed_id)), (acc, x) -> (acc*131 + x) % 2147483647) AS band_hash FROM sig GROUP BY doc_id, CAST(seed_id // 4 AS INT)), cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b FROM bands l JOIN bands r ON l.band_id = r.band_id AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id), e AS (SELECT doc_a AS s, doc_b AS t FROM cand UNION ALL SELECT doc_b AS s, doc_a AS t FROM cand), reach(s, t) AS (SELECT s, t FROM e UNION SELECT reach.s, e2.t FROM reach JOIN e e2 ON reach.t = e2.s) SELECT d.doc_id, CAST(LEAST(d.doc_id, COALESCE(MIN(reach.t), d.doc_id)) AS BIGINT) AS cluster_id FROM documents d LEFT JOIN reach ON d.doc_id = reach.s GROUP BY d.doc_id ORDER BY d.doc_id"""),
       (s, dir) => {
@@ -4759,10 +4757,9 @@ object SparkEntry {
         .orderBy("doc_a", "doc_b")),
 
     // EXACT connected components by alternating large-star/small-star
-    // (Kiveris et al. 2014) over the MinHash candidate graph — the
-    // O(log² n)-round scale path for arbitrary component shapes (plain
-    // label propagation needs diameter rounds); same ground truth as
-    // q54's reachability oracle, distinct operator
+    // (Kiveris et al. 2014) over the MinHash candidate graph — O(log² n)
+    // rounds for arbitrary component shapes; q54 runs the same operator
+    // through nearDupClusters' column names, against the same ground truth
     Q("q316_cc_large_small_star", Some(
       s"""${dMinhashSig.replaceFirst("^WITH ", "WITH RECURSIVE ")}, bands AS (SELECT doc_id, CAST(seed_id // 4 AS INT) AS band_id, list_reduce(list_prepend(CAST(0 AS BIGINT), list(minhash ORDER BY seed_id)), (acc, x) -> (acc*131 + x) % 2147483647) AS band_hash FROM sig GROUP BY doc_id, CAST(seed_id // 4 AS INT)), cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b FROM bands l JOIN bands r ON l.band_id = r.band_id AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id), e AS (SELECT doc_a AS s, doc_b AS t FROM cand UNION ALL SELECT doc_b AS s, doc_a AS t FROM cand), reach(s, t) AS (SELECT s, t FROM e UNION SELECT reach.s, e2.t FROM reach JOIN e e2 ON reach.t = e2.s) SELECT d.doc_id AS node_id, CAST(LEAST(d.doc_id, COALESCE(MIN(reach.t), d.doc_id)) AS BIGINT) AS component_id FROM documents d LEFT JOIN reach ON d.doc_id = reach.s GROUP BY d.doc_id ORDER BY node_id"""),
       (s, dir) => {

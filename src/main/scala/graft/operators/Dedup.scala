@@ -253,49 +253,14 @@ object Dedup {
    * keeping C; component clustering is the policy that keeps exactly one
    * doc per transitive duplicate group.
    *
-   * Iterative min-label propagation to a fixpoint: each round every doc
-   * takes the min label among itself and its neighbors — converges in
-   * diameter rounds (near-dup components are tiny chains, so a handful).
-   * Each round is one equi-join + partial-agg groupBy on doc ids; labels
-   * checkpoint per round so lineage stays flat. All-integer and
-   * order-insensitive → deterministic on any cluster layout.
+   * Components come from [[Graph.connectedComponentsStar]] (exact on any
+   * graph shape, O(log² n) rounds even on long chains); this entry point
+   * only renames its output to (doc_id, cluster_id).
    */
-  def nearDupClusters(docs: DataFrame, candidates: DataFrame, idCol: String,
-      maxIters: Int = 50): DataFrame = {
-    val edges = candidates.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(candidates.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    var labels = docs.select(col(idCol).as("doc_id"), col(idCol).as("cluster_id"))
-      .localCheckpoint()
-    var changed = true
-    var rounds = 0
-    while (changed) {
-      // plain label propagation converges in component-DIAMETER rounds; a
-      // pathological chain (diameter ≈ component size) would loop for as
-      // many rounds as it is long — cap it with a clear error rather than
-      // burn a cluster silently. Near-dup graphs are star/clique-ish (tiny
-      // diameter); hitting the cap means the input is not a near-dup graph.
-      if (rounds >= maxIters)
-        throw new IllegalStateException(
-          s"nearDupClusters did not converge after $maxIters rounds — the " +
-            "candidate graph has a component with diameter > maxIters; " +
-            "raise maxIters or pre-partition the graph")
-      rounds += 1
-      val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src")).agg(min(col("cluster_id")).as("nbr_min"))
-        .withColumnRenamed("src", "doc_id")
-      val next = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint()
-      changed = next
-        .join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
-        .filter(col("cluster_id") =!= col("prev")).limit(1).count() > 0
-      labels = next
-    }
-    labels
-  }
+  def nearDupClusters(docs: DataFrame, candidates: DataFrame,
+      idCol: String): DataFrame =
+    Graph.connectedComponentsStar(docs, idCol, candidates, "doc_a", "doc_b")
+      .select(col("node_id").as("doc_id"), col("component_id").as("cluster_id"))
 
   // ------------------------------------------------------- embedding near-dup
 
@@ -473,12 +438,11 @@ object Dedup {
     // the equi-joins shuffle longs, never text. (Hash collisions perturb the
     // count identically in any engine computing the same fold — the operator
     // is defined over the hashed shingle set.) The shingle frame feeds the
-    // gate, the DF count and both verify sides — an EXPLODED stage (see
-    // [[Staging]]): by default each consumer recomputes the codegen'd
-    // scan+hash map, measured cheaper (and stabler) than caching a frame
-    // bigger than its parquet input.
-    val sh0 = Staging.stage(shingleHashRows(docs, textCol, idCol, shingleN),
-      Staging.Exploded)
+    // gate, the DF count and both verify sides, yet is not staged: each
+    // consumer recomputes the codegen'd scan+hash map, measured cheaper (and
+    // stabler) than caching a frame bigger than its parquet input (see
+    // [[Staging]]).
+    val sh0 = shingleHashRows(docs, textCol, idCol, shingleN)
     // gate: minhash signatures from the SAME shingle rows (identical to
     // minhashSignatures(docs, …) without re-running tokenize+hash), banded
     // and bucket-joined — one partial-agg groupBy + one narrow self-join.
@@ -536,8 +500,7 @@ object Dedup {
       shingleN: Int = 3, minContainPct: Int = 50,
       maxShingleDF: Int = 100,
       numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val sh0 = Staging.stage(shingleHashRows(docs, textCol, idCol, shingleN),
-      Staging.Exploded)
+    val sh0 = shingleHashRows(docs, textCol, idCol, shingleN)
     val sigs = signaturesFromShingles(sh0, numHashes)
     val cand = minhashCandidates(minhashBands(sigs, rowsPerBand))
     val overCap = sh0.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -591,10 +554,9 @@ object Dedup {
   def spanDedup(docs: DataFrame, textCol: String, idCol: String,
       spanTokens: Int = 8, minCount: Int = 2): DataFrame = {
     // the span frame feeds the count, the anti-join, and the per-doc totals
-    // — an EXPLODED stage (see [[Staging]]): recomputed per consumer by
-    // default, cheaper than caching a frame bigger than its input
-    val spanRows = Staging.stage(tileSpans(docs, textCol, idCol, spanTokens),
-      Staging.Exploded)
+    // but is not staged: recomputing it per consumer is cheaper than caching
+    // a frame bigger than its input (see [[Staging]])
+    val spanRows = tileSpans(docs, textCol, idCol, spanTokens)
     val common = spanRows.groupBy(col("span"))
       .agg(count(lit(1)).as("c")).filter(col("c") >= minCount).select(col("span"))
     val kept = spanRows.join(common, Seq("span"), "left_anti")
@@ -1029,11 +991,9 @@ object Dedup {
     require(maxShingleDF >= 1, s"maxShingleDF must be >= 1, got $maxShingleDF")
     val t2 = minCosinePermille.toLong * minCosinePermille // ≤ 10⁶
     // the explode+window shingle scan feeds the DF count, the cap filter
-    // AND both verify sides — an EXPLODED stage, recomputed per consumer
-    // by default (see [[Staging]], the ngramJaccardPairs shape)
-    val rows0 = Staging.stage(
-      TextAnalysis.shingleHashRows(docs, textCol, idCol, shingleN),
-      Staging.Exploded)
+    // AND both verify sides, recomputed per consumer (see [[Staging]], the
+    // ngramJaccardPairs shape)
+    val rows0 = TextAnalysis.shingleHashRows(docs, textCol, idCol, shingleN)
     val dfreq = rows0.groupBy("h").agg(count(lit(1)).as("df"))
     // cap filter mirrors ngramJaccardPairs: the OVER-cap shingle set is
     // tiny by construction (≤ rows/cap members) — broadcast anti-join

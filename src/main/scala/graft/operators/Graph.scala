@@ -259,12 +259,9 @@ object Graph {
    * "Connected Components in MapReduce and Beyond", SoCC 2014 — public):
    * each round hooks every node closer to its component minimum, and the
    * edge set converges to per-component stars in O(log² n) rounds even on
-   * CHAIN-shaped components — the case where plain min-label propagation
-   * ([[graft.operators.Dedup.nearDupClusters]]) needs diameter rounds and
-   * deliberately throws past its cap. Use this as the scale path when the
-   * candidate graph's shape is unknown (cross-source link graphs, long
-   * coreference chains); the label-propagation form stays the cheaper
-   * choice on star/clique-shaped near-dup graphs.
+   * CHAIN-shaped components, where plain min-label propagation needs
+   * diameter rounds. [[graft.operators.Dedup.nearDupClusters]] is this
+   * operator with near-dup column names.
    *
    * Skew-safe translation of the per-node star steps: the per-node
    * neighbor minimum is a partial-agg groupBy (never a collected

@@ -155,16 +155,7 @@ object RecordMapper {
       keyFormat: Format = Format.Json,
       valueFormat: Format = Format.Json,
       keepCols: Seq[String] = Seq.empty,
-      captureErrors: Boolean = false,
-      /** BATCH callers only (VERDICT r11 #4): spread a narrow single-split
-        * scan to session parallelism ahead of the per-record decode
-        * projection (from_json / Avro / json_tuple run per record — the
-        * decode map is the scan stage's cost). [[graft.sources.Scan.rescue]]
-        * is a no-op once the input is already that parallel (always at
-        * 100 TB) and on non-scan inputs. Micro-batch callers (SinkPipeline)
-        * keep the default: their per-batch cost is overhead-bound and the
-        * r11 A/B measured the extra exchange as a net loss there. */
-      parallelizeDecode: Boolean = false): DataFrame = {
+      captureErrors: Boolean = false): DataFrame = {
 
     val entries = binding.mapping
     val byTarget: Map[String, Source] =
@@ -185,9 +176,7 @@ object RecordMapper {
             col(decoded))
         case _ => (df, col(src))
       }
-    val recordsPar =
-      if (parallelizeDecode) graft.sources.Scan.rescue(records) else records
-    val (rec1, keyBase) = predecode(recordsPar, "key", keyFormat)
+    val (rec1, keyBase) = predecode(records, "key", keyFormat)
     val (rec2, valueBase) = predecode(rec1, "value", valueFormat)
 
     // Format.Json with ≥2 mapped fields: parse the document ONCE per record

@@ -5,64 +5,23 @@ import org.apache.spark.storage.StorageLevel
 
 /**
  * Staging hook for DataFrames that feed multiple downstream stages (the
- * band table of a dedup gate, the shingle frame of a Jaccard verify, the
- * span tiling of a span-dedup pass): compute the stage once instead of once
- * per consumer.
+ * band table of a dedup gate, the count table of a classifier, the
+ * per-doc signatures of a near-dup pass): compute the stage once instead
+ * of once per consumer.
  *
- * The MECHANISM is a deployment decision, so it is a session config rather
- * than a call-site choice (`spark.graft.staging`):
+ * The mechanism is `persist(MEMORY_AND_DISK)`. It keeps lineage, so a lost
+ * executor recomputes the lost partitions instead of failing the job, and
+ * it is fully lazy: building a staged operator runs no Spark job, and
+ * intermediates spill to disk rather than pinning executor memory. Stage
+ * only compact frames (aggregated or one row per item). A frame with one
+ * row per token, shingle or span is larger than the scan it derives from
+ * and cheaper to recompute per consumer than to cache: measured at sf1 on
+ * `ngramJaccardPairs`, caching the exploded shingle frame cost 122-259 s
+ * CPU against a 64 s steady state recomputing it.
  *
- *  - `persist` (default): `persist(MEMORY_AND_DISK)` — keeps lineage, so a
- *    lost executor recomputes the lost partitions instead of failing the
- *    job, and FULLY LAZY (CacheManager materialization is thread-safe, no
- *    checkpoint locks). The 100-TB setting, and the setting for "building
- *    an operator must not run jobs": constructing a staged operator costs
- *    nothing until an action runs, and intermediates spill to disk rather
- *    than pinning executor memory. Costs keeping the upstream lineage
- *    alive (deeper plans) and a possible recompute on failure.
- *    Applies to COMPACT stages only — see the shape hint below.
- *  - `local`: `localCheckpoint(eager = true)` — blocks cached on executors
- *    with TRUNCATED lineage. Occasionally useful on local[32] to cut very
- *    deep lineages, but NOT fault-tolerant on a real cluster (losing an
- *    executor loses blocks with no lineage to recompute from) and EAGER by
- *    necessity, not preference: operator CONSTRUCTION runs a Spark job and
- *    materializes the whole staged frame into executor storage before
- *    first use — ~10× regressions were measured on sf1 staged-operator
- *    probes when this was the default (round 7). Eagerness is forced
- *    because the lazy variant DEADLOCKS when its first materialization
- *    happens on a broadcast-exchange thread concurrently with DAG-scheduler
- *    stage submission — `RDD.doCheckpoint` locks `RDDCheckpointData$` while
- *    the scheduler holds the RDD lock in `getCacheLocs` and each waits on
- *    the other (jstack-confirmed Java-level deadlock in the test suite,
- *    `Dedup.semanticDedup` under a broadcast join).
- *  - `none`: pass-through — every consumer recomputes the stage. For plan
- *    debugging and for single-consumer call shapes.
- *
- * SHAPE HINT (round-10, the q32/q84 sf1 attribution): the call site
- * declares whether the staged frame is [[Compact]] (aggregated or
- * one-row-per-item — band tables, count tables, per-doc signatures; the
- * cache pays) or [[Exploded]] (one row per token/shingle/span — LARGER
- * than the input scan it derives from, produced by a codegen'd map with
- * no shuffle). Under `persist`, Exploded stages are NOT cached: measured
- * at sf1 on q32 (`ngramJaccardPairs`), the columnar encode+decode of the
- * exploded shingle frame costs 122-259 s CPU / 6.7-25 s wall across
- * captures, while recomputing it per consumer reaches a 64 s CPU /
- * 4.8 s wall steady state — the in-memory columnar write of a frame
- * bigger than its parquet input is strictly worse than re-running the
- * scan+map, and at 100 TB it would also spill ~3-10× the input bytes to
- * executor disk. Catalyst recomputes the map from the (column-pruned,
- * pushed-down) scan per consumer instead. (Residual run-to-run CPU swings
- * on this query are JIT warm-up, not the plan: a 6-run fresh-JVM capture
- * declined monotonically 180→117→117→69→65→64 s CPU with ZERO spill bytes
- * and zero stage evictions — Bench's sf1 probe sidecar now carries
- * cpu_sec / max_task_sec / jit_ms per run so captures self-adjudicate.)
- * `spark.graft.staging.exploded=cache` restores the old behavior for A/B
- * measurement.
- *
- * LIFETIME (the round-9 ownership contract): under `persist`, every staged
- * frame registers a plan in the session CacheManager, which — unlike
- * localCheckpoint blocks, reclaimed by the ContextCleaner — holds it until
- * explicitly unpersisted. Operators stage frames INTERNAL to their plans,
+ * LIFETIME (the round-9 ownership contract): every staged frame registers
+ * a plan in the session CacheManager, which holds it until explicitly
+ * unpersisted. Operators stage frames INTERNAL to their plans,
  * so callers can't pair stage/unstage themselves. Stage() therefore tracks
  * every persisted frame in a SESSION-SCOPED FIFO registry with a budget
  * (`spark.graft.staging.budget`, default 64 live frames): staging past the
@@ -76,18 +35,8 @@ import org.apache.spark.storage.StorageLevel
  */
 object Staging {
 
-  val ConfKey = "spark.graft.staging"
   val BudgetKey = "spark.graft.staging.budget"
-  val ExplodedKey = "spark.graft.staging.exploded"
   val DefaultBudget = 64
-
-  /** Call-site shape hint — see the class scaladoc. */
-  sealed trait Shape
-  /** Aggregated / one-row-per-item frame: the cache pays. Default. */
-  case object Compact extends Shape
-  /** One row per token/shingle/span — larger than the scan it derives
-    * from, cheap codegen'd recompute: under `persist`, NOT cached. */
-  case object Exploded extends Shape
 
   // WeakHashMap: a session that ends (and is no longer referenced) drops its
   // queue with it. All mutation synchronized on the registry — stage() can
@@ -103,28 +52,11 @@ object Staging {
   private val evictions = new java.util.concurrent.atomic.AtomicLong(0)
   def evictionCount: Long = evictions.get
 
-  def stage(df: DataFrame): DataFrame = stage(df, Compact)
-
-  def stage(df: DataFrame, shape: Shape): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "persist") match {
-      case "local"   => df.localCheckpoint(eager = true)
-      case "persist" =>
-        val cacheIt = shape match {
-          case Compact  => true
-          case Exploded =>
-            // A/B override only; default is the measured winner (recompute)
-            df.sparkSession.conf.get(ExplodedKey, "recompute") == "cache"
-        }
-        if (!cacheIt) df
-        else {
-          val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-          register(p)
-          p
-        }
-      case "none"    => df
-      case other => throw new IllegalArgumentException(
-        s"$ConfKey must be local|persist|none, got '$other'")
-    }
+  def stage(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    register(p)
+    p
+  }
 
   private def register(df: DataFrame): Unit = registry.synchronized {
     val q = registry.computeIfAbsent(df.sparkSession,

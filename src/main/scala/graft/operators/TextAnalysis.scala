@@ -197,9 +197,9 @@ object TextAnalysis {
       textCol: String, idCol: String,
       shingleN: Int = 3, window: Int = 4,
       minShared: Int = 2, maxFpDF: Int = 100): org.apache.spark.sql.DataFrame = {
-    val fps = Staging.stage(
-      winnowedFingerprints(docs, textCol, idCol, shingleN, window),
-      Staging.Exploded)
+    // exploded frame (one row per fingerprint): recomputed per consumer,
+    // never staged (see [[Staging]])
+    val fps = winnowedFingerprints(docs, textCol, idCol, shingleN, window)
     val overCap = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxFpDF).select(col("fp"))
     val kept = fps.join(broadcast(overCap), Seq("fp"), "left_anti")
@@ -775,8 +775,7 @@ object TextAnalysis {
       idCol: String, pairs: org.apache.spark.sql.DataFrame, n: Int = 2)
       : org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    val hashes = Staging.stage(shingleHashRows(docs, textCol, idCol, n),
-      Staging.Exploded)
+    val hashes = shingleHashRows(docs, textCol, idCol, n)
     val sizes = hashes.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val p = pairs.select(col("cand_id"), col("ref_id"))
     val ov = p

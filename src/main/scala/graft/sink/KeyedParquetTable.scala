@@ -1,6 +1,7 @@
 package graft.sink
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -132,8 +133,18 @@ class KeyedParquetTable(
         m.buckets.toSeq.sorted.map { case (k, v) => s"$k:$v" })).mkString("\n")
     val tmp = rootPath.resolve("CURRENT.tmp")
     Files.writeString(tmp, body)
+    // durable before visible: a crash after the rename must not leave a
+    // CURRENT whose bytes (or whose directory entry) never reached disk
+    fsync(tmp)
+    fsync(rootPath)
     Files.move(tmp, currentFile, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
+    fsync(rootPath)
+  }
+
+  private def fsync(p: java.nio.file.Path): Unit = {
+    val ch = FileChannel.open(p, StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
   }
 
   def lastAppliedBatchId: Long = currentMeta.lastFor(DefaultBinding)
@@ -313,13 +324,17 @@ class KeyedParquetTable(
   }
 
   /** Drop version directories no longer referenced by any bucket pointer
-    * (bounded disk; the manifest always stays valid). */
+    * (bounded disk; the manifest always stays valid). `_SUCCESS` goes
+    * first: a reader holding a stale manifest that races the deletion then
+    * fails [[readBuckets]]' completed-version check instead of reading an
+    * already-deleted bucket leaf as empty state. */
   def vacuum(): Unit = {
     val m = currentMeta
     val live = m.buckets.values.toSet
     (1 to m.maxV).filterNot(live.contains).foreach { old =>
       val dir = rootPath.resolve(s"v$old")
       if (Files.exists(dir)) {
+        Files.deleteIfExists(dir.resolve("_SUCCESS"))
         Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
           .forEach(p => Files.deleteIfExists(p))
       }
@@ -479,19 +494,16 @@ object KeyedParquetTable {
     * ONE session could plan an unrelated concurrent scan with the floor
     * applied (correct plans, possibly fewer splits than intended) or
     * restore a stale value; give each pipeline its own session
-    * (spark.newSession()) in that topology, or set
-    * spark.graft.microbatch.splitFloor=off. */
+    * (spark.newSession()) in that topology. */
   private[graft] def withMicroBatchSplits[A](
-      spark: SparkSession)(f: => A): A =
-    if (spark.conf.get("spark.graft.microbatch.splitFloor", "1") == "off") f
-    else {
-      val key = "spark.sql.files.minPartitionNum"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "1")
-      try f
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+      spark: SparkSession)(f: => A): A = {
+    val key = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
+  }
 }

@@ -337,7 +337,7 @@ class SinkPipeline(
         "value", Seq("partition", "offset"),
         numHashes = numHashes, rowsPerBand = rowsPerBand))
       // feeds the state lookup, the in-batch min, and the sightings merge —
-      // compute the banding once (mechanism per spark.graft.staging)
+      // compute the banding once
     // near:<k>x<r>:<ttl>: same sliding horizon as exactTtl — bands quiet for
     // a full horizon stop blocking (and expire physically below).
     // Bucket set collected ONCE: the sightings merge below keys on the

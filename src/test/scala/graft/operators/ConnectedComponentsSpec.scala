@@ -5,9 +5,8 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSuite
 
 /** Exact large-star/small-star connected components (Kiveris et al. 2014):
-  * ground truth by serial union-find, chain graphs past the
-  * label-propagation diameter cap, isolated nodes, and agreement with
-  * nearDupClusters on a low-diameter graph. */
+  * ground truth by serial union-find, long chains in few rounds, isolated
+  * nodes, and the nearDupClusters entry point built on it. */
 class ConnectedComponentsSpec extends SparkSuite {
 
   private lazy val s = sqlc
@@ -52,13 +51,13 @@ class ConnectedComponentsSpec extends SparkSuite {
     val ids = (1L to 120L)
     val es = (1L until 120L).map(i => (i, i + 1))
     // maxIters=12 IS the round-count assertion: plain propagation needs
-    // 119 rounds here (nearDupClusters throws at its 50-round cap)
+    // 119 rounds here
     val out = run(ids, es, maxIters = 12)
     assert(out == ids.map(_ -> 1L).toMap)
-    intercept[IllegalStateException] {
-      Dedup.nearDupClusters(nodesDf(ids),
-        edgesDf(es), "doc_id").collect()
-    }
+    // the near-dup entry point converges on the same chain
+    val clusters = Dedup.nearDupClusters(nodesDf(ids), edgesDf(es), "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clusters == out)
   }
 
   test("matches serial union-find on a seeded random graph with isolated " +

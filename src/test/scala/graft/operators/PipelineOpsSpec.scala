@@ -85,24 +85,6 @@ class PipelineOpsSpec extends SparkSuite {
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 9L -> 9L))
   }
 
-  test("near-dup clusters: maxIters caps pathological chain diameters with a clear error") {
-    // a 12-link chain needs ~11 propagation rounds — over a cap of 3
-    val ids = (1L to 12L).map(i => (i, s"t$i"))
-    val d = docs(ids: _*)
-    val l = new java.util.ArrayList[Row]()
-    (1L until 12L).foreach(i => l.add(Row(i, i + 1)))
-    val cands = s.createDataFrame(l, StructType(Seq(
-      StructField("doc_a", LongType), StructField("doc_b", LongType))))
-    val e = intercept[IllegalStateException] {
-      Dedup.nearDupClusters(d, cands, "doc_id", maxIters = 3).collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
-    // with room to converge the same chain collapses to one component
-    val ok = Dedup.nearDupClusters(d, cands, "doc_id", maxIters = 20)
-      .collect().map(r => r.getLong(1)).distinct
-    assert(ok.toSeq == Seq(1L))
-  }
-
   test("span dedup drops repeated tiles, rebuilds from survivors, empties all-boilerplate docs") {
     // spans of 4 tokens; "b1 b2 b3 b4" repeats across docs 1 and 2 → dropped
     // from both; doc 3 is ALL boilerplate → clean_text empty, row kept

@@ -60,32 +60,48 @@ class StagingSpec extends SparkSuite {
     assert(b.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  test("Exploded stages pass through under persist; ExplodedKey=cache restores caching") {
+  test("building spanDedup and ngramJaccardPairs starts no Spark job") {
     val s = sqlc
-    Staging.releaseAll(s)
-    val exploded = docs().select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
-    // default: recompute — no cache entry, no registry slot (measured at
-    // sf1: columnar encode of explode-shaped frames costs 2-4x their
-    // recompute, with 1.7x run-to-run CPU variance — see Staging scaladoc)
-    val st = Staging.stage(exploded, Staging.Exploded)
-    assert(st.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(Staging.registeredCount(s) == 0)
-    // compact default is unchanged
-    val comp = Staging.stage(exploded.groupBy("token").count())
-    assert(comp.storageLevel.useMemory || comp.storageLevel.useDisk)
-    assert(Staging.registeredCount(s) == 1)
-    Staging.releaseAll(s)
-    // A/B override restores the old behavior
-    s.conf.set(Staging.ExplodedKey, "cache")
+    val sc = s.sparkContext
+    // job group of every job start the listener has seen, in bus order
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def inGroup[A](g: String)(f: => A): A = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    // jobs started while `build` ran; a marker job run after it bounds
+    // the wait, since the bus delivers job starts in order
+    def jobsToBuild(name: String)(build: => Any): Int = {
+      inGroup(name)(build)
+      val marker = s"$name-marker"
+      inGroup(marker)(s.range(1).count())
+      val deadline = System.currentTimeMillis() + 60000
+      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(marker), "marker job never reached the listener")
+      groups.toArray.count(_ == name)
+    }
+    sc.addSparkListener(listener)
     try {
-      val cached = Staging.stage(exploded, Staging.Exploded)
-      assert(cached.storageLevel.useMemory || cached.storageLevel.useDisk)
-      assert(Staging.registeredCount(s) == 1)
-      // same rows either way
-      assert(cached.count() == st.count())
+      val d = docs()
+      // map-only exploded frame (the span tiling)
+      assert(jobsToBuild("build-spanDedup")(
+        Dedup.spanDedup(d, "text", "doc_id")) == 0,
+        "building spanDedup must be job-free")
+      // shuffle-bearing staged frame (the band table): persist must stay
+      // fully lazy on this shape too (CacheManager only marks the level)
+      assert(jobsToBuild("build-ngramJaccardPairs")(
+        Dedup.ngramJaccardPairs(d, "text", "doc_id")) == 0,
+        "building ngramJaccardPairs must be job-free")
     } finally {
-      s.conf.unset(Staging.ExplodedKey)
+      sc.removeSparkListener(listener)
       Staging.releaseAll(s)
     }
   }

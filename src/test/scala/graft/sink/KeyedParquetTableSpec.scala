@@ -147,6 +147,24 @@ class KeyedParquetTableSpec extends SparkSuite {
     assert(t.state().count() == 4)
   }
 
+  test("a manifest pointing at a version that lost a leaf fails the read loudly") {
+    val root = Files.createTempDirectory("graft-stale").toString
+    val t = new KeyedParquetTable(s, table, root, numBuckets = 2)
+    t.applyBatch(mapped((1L, 1L, 100L), (2L, 2L, 100L), (3L, 3L, 100L),
+      (4L, 4L, 100L)), batchId = 1L)
+    val v1 = Paths.get(root, "v1")
+    val leaves = Files.list(v1).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("__bucket="))
+    assert(leaves.length == 2)
+    // the state a vacuum of v1 leaves when it stops after its first leaf:
+    // _SUCCESS is already gone, so the missing leaf cannot pass as a
+    // completed version's zero-row bucket
+    Files.delete(v1.resolve("_SUCCESS"))
+    graft.streaming.SinkPipeline.deleteTree(leaves.head)
+    val e = intercept[IllegalArgumentException] { t.state().count() }
+    assert(e.getMessage.contains("referenced by the manifest"))
+  }
+
   test("cell-wise merge mode: disjoint-column writes interleave across micro-batches") {
     val wide = SinkTable("ks", "cw", StructType(Seq(
       StructField("my_pk", LongType), StructField("my_value", LongType),
