@@ -590,8 +590,8 @@ object Bench {
     // ---- ingest-time DSIR quality-gate cost (VERDICT r9 #5): the same
     // fresh-store whole-frame batch as sink_dedup_batch, plus
     // quality=dsir:<thr> in front — this row minus sink_dedup_batch is the
-    // gate's marginal per-batch cost (feature pass + bucket partial-agg +
-    // broadcast histogram join + keep semi-join + counter agg). The
+    // gate's marginal per-batch cost (a per-row scoring kernel and filter
+    // in the batch's map stage; the model loads once per pipeline). The
     // histogram trains ONCE outside the timer (training is offline by
     // contract; the gate only READS the persisted model). ----
     // helpers hoisted to main scope so the sf1 probe section reuses the

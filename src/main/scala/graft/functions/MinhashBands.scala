@@ -16,10 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * Bit-identical to the batch pipeline
  * `Dedup.minhashBands(Dedup.minhashSignatures(…))` (pinned by the
  * batch-equivalence spec and q78's oracle, which is q25's oracle):
- *  - tokens: maximal runs of non-`\s` characters (Java regex `\s` =
- *    space, `\t`, `\n`, `\u000B`, `\f`, `\r`) — exactly
- *    `split(trim(text), "\\s+")` minus empties;
- *  - token hash: `(acc·31 + codepoint) mod p` ([[StringFoldHash]]);
+ *  - tokens and token hashes: [[StringFoldHash.tokenFolds]] — maximal
+ *    runs of non-`\s` characters, each folded `(acc·31 + codepoint) mod p`;
  *  - shingle hash at position i: fold `(acc·131 + tokenHash) mod p` over
  *    tokens i..i+n−1;
  *  - min-hash j: min over shingles of `(a_j·sh + b_j) mod p` with the
@@ -48,39 +46,12 @@ object MinhashBanding {
     StructField("band_hash", LongType, nullable = false))),
     containsNull = false)
 
-  private def isWs(c: Char): Boolean = // Java regex \s
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
   /** Shared by interpreted eval and generated code. */
   def bands(text: UTF8String, numHashes: Int, shingleN: Int,
       rowsPerBand: Int): GenericArrayData = {
-    val s = text.toString
-    val n = s.length
-    // pass 1: token hashes in one scan — no token strings materialize
-    var th = new Array[Long](16)
-    var nTok = 0
-    var acc = 0L
-    var inTok = false
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (isWs(c)) {
-        if (inTok) {
-          if (nTok == th.length) th = java.util.Arrays.copyOf(th, nTok * 2)
-          th(nTok) = acc; nTok += 1; acc = 0L; inTok = false
-        }
-        i += 1
-      } else {
-        val cp = s.codePointAt(i)
-        acc = (acc * 31L + cp) % Prime
-        inTok = true
-        i += Character.charCount(cp)
-      }
-    }
-    if (inTok) {
-      if (nTok == th.length) th = java.util.Arrays.copyOf(th, nTok + 1)
-      th(nTok) = acc; nTok += 1
-    }
+    // pass 1: token hashes
+    val th = StringFoldHash.tokenFolds(text)
+    val nTok = th.length
     if (nTok < shingleN) return EmptyBands
     // pass 2: positional shingle fold
     val nSh = nTok - shingleN + 1

@@ -34,6 +34,44 @@ object StringFoldHash {
     }
     acc
   }
+
+  private def isWs(c: Char): Boolean = // Java regex \s
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  /** [[fold]] of every whitespace token of `text`, in order, in one scan —
+    * no token strings materialize. Tokens are maximal runs of non-`\s`
+    * characters (Java regex `\s` = space, `\t`, `\n`, `\u000B`, `\f`,
+    * `\r`): exactly `split(trim(text), "\\s+")` minus empties. The
+    * tokenizer under [[MinhashBanding]] and [[DsirFeatures]]. */
+  def tokenFolds(text: UTF8String): Array[Long] = {
+    val s = text.toString
+    val n = s.length
+    var th = new Array[Long](16)
+    var nTok = 0
+    var acc = 0L
+    var inTok = false
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (isWs(c)) {
+        if (inTok) {
+          if (nTok == th.length) th = java.util.Arrays.copyOf(th, nTok * 2)
+          th(nTok) = acc; nTok += 1; acc = 0L; inTok = false
+        }
+        i += 1
+      } else {
+        val cp = s.codePointAt(i)
+        acc = (acc * 31L + cp) % Prime
+        inTok = true
+        i += Character.charCount(cp)
+      }
+    }
+    if (inTok) {
+      if (nTok == th.length) th = java.util.Arrays.copyOf(th, nTok + 1)
+      th(nTok) = acc; nTok += 1
+    }
+    if (nTok == th.length) th else java.util.Arrays.copyOf(th, nTok)
+  }
 }
 
 case class StringFoldHashExpr(child: Expression) extends UnaryExpression {

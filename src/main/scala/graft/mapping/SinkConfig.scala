@@ -139,11 +139,13 @@ object SinkConfig {
         * reachable from config): `none` (default) |
         * `dsir:<minWqAvgQ>:<histDir>` — score each record's text value
         * against the trained histogram persisted at `histDir` (the parquet
-        * layout [[graft.operators.Sampling.dsirHistogram]] writes) and drop
-        * records whose per-feature qlog2 importance ratio (`w_q_avg`,
-        * 1024ths of a bit, signed) is below the threshold: "only ingest
-        * what looks like the target corpus". Tombstones always pass — a
-        * quality gate must never block a delete. */
+        * layout [[graft.operators.Sampling.dsirHistogram]] writes, loaded
+        * once per pipeline and required to be dense: 1024 rows, buckets
+        * 0..1023, no null `lr_q`) and drop records whose per-feature qlog2
+        * importance ratio (`w_q_avg`, 1024ths of a bit, signed) is below
+        * the threshold: "only ingest what looks like the target corpus".
+        * The gate is a per-row filter in the batch's map stage. Tombstones
+        * always pass — a quality gate must never block a delete. */
       quality: String = "none") {
     require(Set("row", "cell", "entry").contains(mergeMode),
       s"mergeMode must be row, cell or entry (got '$mergeMode')")

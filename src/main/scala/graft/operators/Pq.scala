@@ -64,8 +64,10 @@ object Pq {
       if (maxDriver <= 0) Array.empty[Row]
       else v0.limit(maxDriver + 1).collect()
     // same serial work budget as kmeansOnQuantized: all subspaces together
-    // touch rows·cellsPerSub·dims·iters multiplies
+    // touch rows·cellsPerSub·dims·iters multiplies; a null vector goes to
+    // the distributed loop, as there
     if (maxDriver > 0 && probe.length <= maxDriver && probe.nonEmpty &&
+        probe.forall(!_.isNullAt(1)) &&
         probe.length.toLong * cellsPerSub *
           probe(0).getSeq[Long](1).length * iters <= 4000000000L) {
       val ids = probe.map(_.getLong(0))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -312,12 +312,11 @@ object Sampling {
    * per-feature mean (both engines' int division truncates toward zero) —
    * the length-independent ranking key.
    *
-   * Shape at 100 TB: feature extraction is map-only (one native codegen'd
-   * hash per token); the ONLY wide stages are the two bucket-keyed
-   * aggregations (corpus histogram, per-doc feature counts). The histogram
-   * is ≤ B rows — staged once (tiny cache footprint) and broadcast into the
-   * scoring join, so scoring never shuffles the corpus a second time. No
-   * collect anywhere; totals fold in as a 1-row cross join.
+   * Shape at 100 TB: feature extraction is one native codegen'd kernel
+   * per row ([[graft.functions.DsirFeatures]]); training's ONLY wide stage
+   * is the bucket-keyed corpus histogram. The trained model is ≤ B rows, so
+   * scoring collects it once and is then a single map-only `select` per
+   * document — no explode, no aggregation, no join, no shuffle.
    *
    * Output: (doc_id, n_feats, w_q, w_q_avg) for every raw doc —
    * feature-less docs score (0, 0, 0) rather than vanishing.
@@ -327,42 +326,28 @@ object Sampling {
     dsirScore(raw, dsirHistogram(target, raw, textCol, nBuckets),
       textCol, idCol, nBuckets)
 
-  /** Hashed unigram+bigram feature buckets: every non-`textCol` column of
-    * `d` passes through, plus one `bucket` row per feature OCCURRENCE
-    * (unigrams then bigrams, with multiplicity). The shared extraction
-    * under [[dsirHistogram]] and [[dsirScore]] — both sides of a
-    * train-offline / score-online split must bucket identically. */
-  private def dsirFeatBuckets(d: DataFrame, textCol: String,
-      nBuckets: Int): DataFrame = {
-    val b = lit(nBuckets.toLong)
-    val p = lit(TextAnalysis.HashPrime)
-    val others = d.columns.toIndexedSeq.filter(_ != textCol).map(col)
-    d.select(others :+ transform(TextAnalysis.tokens(col(textCol)),
-        t => TextAnalysis.stringHash(t)).as("__th"): _*)
-      .select(others :+ explode(concat(
-        transform(col("__th"), h => h % b),
-        when(size(col("__th")) < 2, array().cast(ArrayType(LongType)))
-          .otherwise(transform(arrays_zip(
-            slice(col("__th"), lit(1), size(col("__th")) - 1).as("a"),
-            slice(col("__th"), lit(2), size(col("__th")) - 1).as("b")),
-            pr => ((pr.getField("a") * 131L + pr.getField("b")) % p) % b))))
-        .as("bucket"): _*)
-  }
+  /** Hashed unigram+bigram feature buckets of `text`, one array element per
+    * feature OCCURRENCE (unigrams then bigrams, with multiplicity) — the
+    * kernel [[dsirScoreOf]] scores with, so training and scoring bucket
+    * identically. Null text has no features. */
+  private def dsirBuckets(text: Column, nBuckets: Int): Column =
+    GraftBridge.column(graft.functions.DsirBucketsExpr(
+      GraftBridge.expression(text.cast(StringType)), nBuckets))
 
   /** The trained DSIR model: a DENSE `nBuckets`-row (bucket, lr_q) table —
     * `lr_q` the add-1-smoothed qlog2 likelihood ratio of the bucket under
     * the target vs the raw feature distribution. Dense (buckets absent
-    * from BOTH corpora carry the zero-count ratio) so scoring a future
-    * corpus through an inner join is total: a doc hitting a bucket neither
-    * training corpus ever saw still scores. Persist with
-    * `hist.write.parquet(dir)` to train offline and score at ingest (the
-    * sink's `quality = dsir:…` stage reads exactly this layout). */
+    * from BOTH corpora carry the zero-count ratio) so every feature of a
+    * future corpus scores, even one in a bucket neither training corpus
+    * ever saw. Persist with `hist.write.parquet(dir)` to train offline and
+    * score at ingest (the sink's `quality = dsir:…` stage reads exactly
+    * this layout). */
   def dsirHistogram(target: DataFrame, raw: DataFrame, textCol: String,
       nBuckets: Int = 1024): DataFrame = {
-    val fb = dsirFeatBuckets(
-        target.select(col(textCol), lit(true).as("is_t")), textCol, nBuckets)
-      .unionByName(dsirFeatBuckets(
-        raw.select(col(textCol), lit(false).as("is_t")), textCol, nBuckets))
+    def feats(d: DataFrame, isT: Boolean) = d.select(
+      explode(dsirBuckets(col(textCol), nBuckets)).as("bucket"),
+      lit(isT).as("is_t"))
+    val fb = feats(target, isT = true).unionByName(feats(raw, isT = false))
     // corpus histogram: ≤ nBuckets rows — the one staged (tiny) frame;
     // reused by the totals fold and the ratio projection
     val ct = Staging.stage(fb.groupBy(col("bucket")).agg(
@@ -382,28 +367,56 @@ object Sampling {
         Retrieval.qlog2(col("tr") + nBuckets.toLong)).as("lr_q"))
   }
 
-  /** Score `docs` against a trained [[dsirHistogram]]: one map-only feature
-    * pass, one (doc, bucket) partial agg, one broadcast join against the
-    * B-row histogram. Output (doc_id, n_feats, w_q, w_q_avg); feature-less
-    * docs score (0, 0, 0) rather than vanishing. */
-  def dsirScore(docs: DataFrame, histogram: DataFrame, textCol: String,
-      idCol: String, nBuckets: Int = 1024): DataFrame = {
-    val db = dsirFeatBuckets(
-        docs.select(col(idCol).as("doc_id"), col(textCol)), textCol, nBuckets)
-      .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("n"))
-    val sc = db.join(broadcast(histogram), Seq("bucket"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n")).as("n_feats"), sum(col("n") * col("lr_q")).as("w_q"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(sc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_feats"), lit(0L)).as("n_feats"),
-        coalesce(col("w_q"), lit(0L)).as("w_q"),
-        // TRUNCATING division (toward zero) on the signed total — both
-        // engines' integer division truncates (DuckDB `//`, Catalyst DIV)
-        coalesce(IntMath.idiv(col("w_q"), col("n_feats")), lit(0L))
-          .as("w_q_avg"))
+  /** Collect a trained [[dsirHistogram]] into its dense in-memory form:
+    * `model(b)` = bucket b's `lr_q`. One small job (≤ nBuckets rows).
+    * Fails loudly unless the table is exactly dense — `nBuckets` rows,
+    * buckets 0..nBuckets−1 each once, no null `lr_q` — since a missing
+    * bucket would otherwise score as a silent zero. */
+  def dsirModel(histogram: DataFrame, nBuckets: Int = 1024): Array[Long] = {
+    val rows = histogram
+      .select(col("bucket").cast(LongType), col("lr_q").cast(LongType))
+      .collect()
+    require(rows.length == nBuckets,
+      s"DSIR model is not dense: ${rows.length} rows, expected $nBuckets")
+    val model = new Array[Long](nBuckets)
+    val seen = new java.util.BitSet(nBuckets)
+    rows.foreach { r =>
+      require(!r.isNullAt(0) && r.getLong(0) >= 0L &&
+        r.getLong(0) < nBuckets && !seen.get(r.getLong(0).toInt),
+        s"DSIR model is not dense: bucket ${r.get(0)} is null, out of " +
+          s"[0, $nBuckets) or repeated")
+      require(!r.isNullAt(1), s"DSIR model has a null lr_q at bucket ${r.get(0)}")
+      seen.set(r.getLong(0).toInt)
+      model(r.getLong(0).toInt) = r.getLong(1)
+    }
+    model
   }
+
+  /** `struct<n_feats, w_q>` of `text` against a [[dsirModel]] — the one
+    * per-row scorer behind [[dsirScore]] and the sink's quality gate.
+    * Null or feature-less text scores (0, 0). */
+  def dsirScoreOf(text: Column, model: Array[Long]): Column =
+    GraftBridge.column(graft.functions.DsirScoreExpr(
+      GraftBridge.expression(coalesce(text.cast(StringType), lit(""))), model))
+
+  /** `w_q_avg` of a [[dsirScoreOf]] struct: w_q DIV n_feats, TRUNCATING
+    * toward zero on the signed total (both engines' integer division
+    * truncates — DuckDB `//`, Catalyst DIV); 0 for a feature-less row. */
+  def dsirAvg(score: Column): Column =
+    when(score.getField("n_feats") > 0L,
+      IntMath.idiv(score.getField("w_q"), score.getField("n_feats")))
+      .otherwise(0L)
+
+  /** Score `docs` against a trained [[dsirHistogram]]: the histogram is
+    * collected into its dense model ([[dsirModel]]), then scoring is one
+    * map-only `select` per doc. Output (doc_id, n_feats, w_q, w_q_avg), one
+    * row per input row; feature-less docs score (0, 0, 0). */
+  def dsirScore(docs: DataFrame, histogram: DataFrame, textCol: String,
+      idCol: String, nBuckets: Int = 1024): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        dsirScoreOf(col(textCol), dsirModel(histogram, nBuckets)).as("__s"))
+      .select(col("doc_id"), col("__s.n_feats").as("n_feats"),
+        col("__s.w_q").as("w_q"), dsirAvg(col("__s")).as("w_q_avg"))
 
   /**
    * Dedup-aware resampling weights: instead of DROPPING exact duplicates

@@ -241,7 +241,10 @@ object Similarity {
     // past it, fall back to the distributed loop (the probe cost one job)
     def driverWorkOk(dims: Int): Boolean =
       probe.length.toLong * k * dims * iters <= 4000000000L
+    // a null vector has no driver-side arithmetic: the distributed loop
+    // takes it (the driver path would NPE on it)
     if (maxDriver > 0 && probe.length <= maxDriver && probe.nonEmpty &&
+        probe.forall(!_.isNullAt(1)) &&
         driverWorkOk(probe(0).getSeq[Long](1).length)) {
       val ids = probe.map(_.getLong(0))
       val vecs = probe.map(_.getSeq[Long](1).toArray)

@@ -50,9 +50,11 @@ class SinkPipeline(
 
   private val stores = TrieMap[String, KeyedParquetTable]()
 
-  /** DSIR histogram frames by model dir — plan-only cache (see
-    * [[qualityFilter]]): avoids one listing + schema inference per batch. */
-  private val histFrames = TrieMap[String, DataFrame]()
+  /** Dense DSIR models by model dir (see [[qualityFilter]]), loaded once
+    * per pipeline: the trained histogram is an immutable model directory
+    * (training is offline by contract). A failed load is never cached —
+    * the next batch retries it. */
+  private val dsirModels = TrieMap[String, Array[Long]]()
 
   def store(spark: org.apache.spark.sql.SparkSession, b: SinkConfig.TableBinding): KeyedParquetTable =
     stores.getOrElseUpdate(b.qualifiedTable,
@@ -155,75 +157,55 @@ class SinkPipeline(
     * a delete. Feature-less values (empty text) score (0,0,0) and pass iff
     * 0 ≥ threshold — set a positive threshold to also drop empties.
     *
-    * Cost per batch: one map-only feature pass + a (record, bucket)
-    * partial agg + a broadcast join against the B-row histogram, and a
-    * semi-join back on (partition, offset). The scored frame is staged for
-    * its consumers and released via the returned thunk once the binding's
-    * writes are durable. Counters: qualityKeptCount / qualityDroppedCount
-    * (dedup-counter naming) — the counts ride an [[Observation]] on the
-    * staged scored frame, which fires when the WRITE path's touched-bucket
-    * job materializes the stage (the kept semi-join reads it), so the gate
-    * costs ZERO driver actions of its own per batch — the previous shape
-    * ran a dedicated `scored.agg(...).head()` job (one full dsirScore
-    * execution's worth of stages) before the write ever started (guide
-    * §1.2: don't run a separate pass for numbers another job already
-    * produces). The counts thunk is read only AFTER the table merge is
-    * durable — marking before applyBatch would double-count on a failed
-    * batch's replay — with a fallback one-row agg for the (rare) plans
-    * whose observation never fired (e.g. an all-tombstone slice whose
-    * scored subtree was optimized away). */
-  private def qualityFilter(spark: org.apache.spark.sql.SparkSession,
+    * The model is collected once per pipeline into its dense in-memory form
+    * ([[graft.operators.Sampling.dsirModel]], which fails the batch loudly
+    * on a non-dense table), so per batch the gate is
+    * `slice.withColumn(keep).observe(kept, dropped).filter(keep)`: one
+    * native per-row kernel inside the batch's map stage — no join, no
+    * shuffle, no staged frame, and a generated class that is identical in
+    * every batch. Counters: qualityKeptCount / qualityDroppedCount
+    * (dedup-counter naming; tombstones count as neither) — they ride an
+    * [[Observation]] that fires with the first downstream job (the write
+    * path's touched-bucket collect, or the dedup stage's), so the gate
+    * costs ZERO driver actions of its own per batch. The counts thunk is
+    * read only AFTER the table merge is durable — marking before
+    * applyBatch would double-count on a failed batch's replay — with a
+    * fallback one-row agg for plans whose observation never fires. */
+  private[streaming] def qualityFilter(spark: org.apache.spark.sql.SparkSession,
       b: SinkConfig.TableBinding, slice: DataFrame)
-      : (DataFrame, Option[() => Unit], Option[() => (Long, Long)]) =
+      : (DataFrame, Option[() => (Long, Long)]) =
     b.qualityDsirParams match {
-      case None => (slice, None, None)
+      case None => (slice, None)
       case Some((minAvgQ, histDir)) =>
-        // per-pipeline frame cache: the trained histogram is an immutable
-        // model directory (training is offline by contract), but building
-        // the frame costs a driver-side listing + footer schema inference —
-        // re-paid EVERY batch when constructed inline (guide §6 file
-        // listing). The cached object is only a plan: each batch's jobs
-        // still read the files, nothing is materialized across batches.
-        val hist = histFrames.getOrElseUpdate(histDir,
-          spark.read.parquet(histDir))
-        val keyed = slice.withColumn("__qid",
-          concat_ws("/", col("partition"), col("offset")))
-        val scorable = keyed.filter(col("value").isNotNull)
-          .select(col("__qid"), col("value")
-            .cast(org.apache.spark.sql.types.StringType).as("__qtext"))
+        val model = dsirModels.getOrElseUpdate(histDir,
+          try graft.operators.Sampling.dsirModel(spark.read.parquet(histDir))
+          catch { case e: Exception => throw new IllegalStateException(
+            s"quality=dsir model at $histDir failed to load; failing the " +
+              "batch for retry", e) })
+        val score = graft.operators.Sampling.dsirScoreOf(col("value"), model)
+        val gated = slice.withColumn("__keep", col("value").isNull ||
+          graft.operators.Sampling.dsirAvg(score) >= minAvgQ)
+        val keptExpr = coalesce(sum(when(col("value").isNotNull &&
+          col("__keep"), 1L).otherwise(0L)), lit(0L)).as("kept")
+        val droppedExpr = coalesce(sum(when(col("__keep"), 0L).otherwise(1L)),
+          lit(0L)).as("dropped")
         val obs = new Observation()
-        val scored = graft.operators.Staging.stage(
-          graft.operators.Sampling
-            .dsirScore(scorable, hist, "__qtext", "__qid")
-            .withColumn("__keep", col("w_q_avg") >= minAvgQ)
-            .observe(obs,
-              coalesce(sum(when(col("__keep"), 1L).otherwise(0L)), lit(0L))
-                .as("kept"),
-              coalesce(sum(when(col("__keep"), 0L).otherwise(1L)), lit(0L))
-                .as("dropped")))
+        val out = gated.observe(obs, keptExpr, droppedExpr)
+          .filter(col("__keep")).drop("__keep")
         val counts = () => {
           // the metrics arrive asynchronously on the listener bus; drain it
           // first so the free (no-extra-job) path is deterministic once the
-          // write job has completed (ADVICE r11 #4)
+          // write job has completed
           org.apache.spark.sql.GraftBridge.drainListeners(spark)
           val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
           if (m.contains("kept"))
             (m("kept").asInstanceOf[Long], m("dropped").asInstanceOf[Long])
           else {
-            val cnt = scored.agg(
-              coalesce(sum(when(col("__keep"), 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(col("__keep"), 0L).otherwise(1L)), lit(0L)))
-              .head()
+            val cnt = gated.agg(keptExpr, droppedExpr).head()
             (cnt.getLong(0), cnt.getLong(1))
           }
         }
-        val keepIds = scored.filter(col("__keep"))
-          .select(col("doc_id").as("__qid"))
-        val kept = keyed.join(keepIds, Seq("__qid"), "left_semi")
-        val tombstones = keyed.filter(col("value").isNull)
-        val out = kept.unionByName(tombstones)
-          .select(slice.columns.toIndexedSeq.map(col): _*)
-        (out, Some(() => graft.operators.Staging.unstage(scored)), Some(counts))
+        (out, Some(counts))
     }
 
   /** Filter a topic slice down to first-seen content. Returns the filtered
@@ -479,9 +461,10 @@ class SinkPipeline(
     }
 
   /** Wall milliseconds of the last processed batch's synchronous stages
-    * (`count` = persist + topic counts; `quality` = DSIR score + counter
-    * agg; `dedup` = state lookup + filter plan; `write` = mapping + merge
-    * jobs; `sightings` = deferred dedup-state commit) — phase-level
+    * (`count` = persist + topic counts; `quality` = DSIR gate plan, plus
+    * the one-time model load; `dedup` = state lookup + filter plan;
+    * `write` = mapping + merge jobs; `quality_counts` = the gate's counter
+    * read; `sightings` = deferred dedup-state commit) — phase-level
     * attribution for a per-batch wall-time regression in a long stream
     * (VERDICT r10 #2: an 8-batch rising series was unattributable from
     * totals alone). Plain bookkeeping, always on: five nanoTime reads per
@@ -558,7 +541,7 @@ class SinkPipeline(
       toApply.foreach { b =>
         // quality gate FIRST (drop out-of-domain content before paying
         // dedup-state reads/writes for it), then content dedup
-        val (screened, releaseQuality, qualityCounts) = phase("quality") {
+        val (screened, qualityCounts) = phase("quality") {
           qualityFilter(spark, b, recs.filter(col("topic") === b.topic))
         }
         val (forTopic, commitSightings) = phase("dedup") {
@@ -673,9 +656,6 @@ class SinkPipeline(
         // record this batch's content hashes only after the table merge is
         // durable (see dedupFilter's replay contract)
         phase("sightings") { commitSightings.foreach(_.apply()) }
-        // the binding's writes are durable — release the staged quality
-        // scores (they fed the counter agg and the keep semi-join)
-        phase("release") { releaseQuality.foreach(_.apply()) }
       }
       // automatic vacuum cadence: every N-th processed batch sweeps expired
       // rows out of UNTOUCHED buckets of every TTL'd dedup store (the

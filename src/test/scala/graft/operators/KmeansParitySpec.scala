@@ -78,4 +78,30 @@ class KmeansParitySpec extends SparkSuite {
     s.conf.unset(Similarity.DriverMaxRowsKey)
     assert(a === b)
   }
+
+  test("driver gate: a null vector takes the distributed loop, not an NPE") {
+    val s = sqlc
+    import s.implicits._
+    val df = corpus(200, 8).unionByName(
+      Seq((99999999L, Option.empty[Seq[Double]])).toDF("vec_id", "embedding"))
+    def sortedCb(cb: org.apache.spark.sql.DataFrame) =
+      cb.select("sub_id", "cell_id", "cv", "cn2").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toList,
+          r.getLong(3)))
+        .sortBy(t => (t._1, t._2)).toList
+    def both[A](run: => A): (A, A) = {
+      s.conf.set(Similarity.DriverMaxRowsKey, "131072")
+      val gated = run
+      s.conf.set(Similarity.DriverMaxRowsKey, "0") // force distributed
+      val dist = run
+      s.conf.unset(Similarity.DriverMaxRowsKey)
+      (gated, dist)
+    }
+    val (a, b) = both(collectSorted(
+      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2)))
+    assert(a.nonEmpty && a === b)
+    val (c, d) = both(sortedCb(Pq.trainCodebooks(df, "vec_id", "embedding",
+      numSubspaces = 2, cellsPerSub = 4, iters = 2)))
+    assert(c.nonEmpty && c === d)
+  }
 }

@@ -61,49 +61,18 @@ class StagingSpec extends SparkSuite {
   }
 
   test("building spanDedup and ngramJaccardPairs starts no Spark job") {
-    val s = sqlc
-    val sc = s.sparkContext
-    // job group of every job start the listener has seen, in bus order
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def inGroup[A](g: String)(f: => A): A = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    // jobs started while `build` ran; a marker job run after it bounds
-    // the wait, since the bus delivers job starts in order
-    def jobsToBuild(name: String)(build: => Any): Int = {
-      inGroup(name)(build)
-      val marker = s"$name-marker"
-      inGroup(marker)(s.range(1).count())
-      val deadline = System.currentTimeMillis() + 60000
-      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains(marker), "marker job never reached the listener")
-      groups.toArray.count(_ == name)
-    }
-    sc.addSparkListener(listener)
     try {
       val d = docs()
       // map-only exploded frame (the span tiling)
-      assert(jobsToBuild("build-spanDedup")(
-        Dedup.spanDedup(d, "text", "doc_id")) == 0,
+      assert(jobsDuring("build-spanDedup")(
+        Dedup.spanDedup(d, "text", "doc_id"))._2 == 0,
         "building spanDedup must be job-free")
       // shuffle-bearing staged frame (the band table): persist must stay
       // fully lazy on this shape too (CacheManager only marks the level)
-      assert(jobsToBuild("build-ngramJaccardPairs")(
-        Dedup.ngramJaccardPairs(d, "text", "doc_id")) == 0,
+      assert(jobsDuring("build-ngramJaccardPairs")(
+        Dedup.ngramJaccardPairs(d, "text", "doc_id"))._2 == 0,
         "building ngramJaccardPairs must be job-free")
-    } finally {
-      sc.removeSparkListener(listener)
-      Staging.releaseAll(s)
-    }
+    } finally Staging.releaseAll(sqlc)
   }
 
   test("budget eviction unpersists the OLDEST stage and keeps results correct") {

@@ -810,13 +810,13 @@ class SinkPipelineSpec extends SparkSuite {
     }
   }
 
-  test("quality=dsir gate: off-domain records drop at ingest, " +
-      "tombstones always pass, counters track kept/dropped") {
+  /** Train the two-corpus DSIR model into `histDir`; returns a threshold
+    * midway between an in-domain and an off-domain text's w_q_avg, picked
+    * from the trained model itself (no magic constants). Target =
+    * spark-ish docs, raw = a mixed corpus. */
+  private def trainQualityModel(histDir: String, inText: String,
+      outText: String): Long = {
     import s.implicits._
-    val root = Files.createTempDirectory("graft-quality").toString
-    val histDir = Files.createTempDirectory("graft-quality-hist").toString
-
-    // train the model offline: target = spark-ish docs, raw = mixed corpus
     val target = Seq((1L, "spark query join table scan"),
       (2L, "query join spark table merge")).toDF("doc_id", "text")
     val raw = Seq((10L, "spark query join filter"),
@@ -824,19 +824,21 @@ class SinkPipelineSpec extends SparkSuite {
       (12L, "dog cat bird fish horse")).toDF("doc_id", "text")
     graft.operators.Sampling.dsirHistogram(target, raw, "text")
       .write.mode("overwrite").parquet(histDir)
-
-    // pick the threshold from the trained model itself: midway between an
-    // in-domain and an off-domain text's w_q_avg (no magic constants)
-    val inText = "spark table query join"
-    val outText = "cat dog fish bird"
-    val hist = s.read.parquet(histDir)
     val scores = graft.operators.Sampling.dsirScore(
         Seq((1L, inText), (2L, outText)).toDF("id", "text"),
-        hist, "text", "id")
+        s.read.parquet(histDir), "text", "id")
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(scores(1L) > scores(2L),
-      s"in-domain must outscore off-domain: $scores")
-    val thr = (scores(1L) + scores(2L)) / 2
+    assert(scores(1L) > scores(2L), s"in-domain must outscore off-domain: $scores")
+    (scores(1L) + scores(2L)) / 2
+  }
+
+  test("quality=dsir gate: off-domain records drop at ingest, " +
+      "tombstones always pass, counters track kept/dropped") {
+    val root = Files.createTempDirectory("graft-quality").toString
+    val histDir = Files.createTempDirectory("graft-quality-hist").toString
+    val inText = "spark table query join"
+    val outText = "cat dog fish bird"
+    val thr = trainQualityModel(histDir, inText, outText)
 
     val config = SinkConfig.parse(Map(
       "topic.orders.ks.t2.mapping" -> "my_pk=key, my_text=value",
@@ -861,25 +863,95 @@ class SinkPipelineSpec extends SparkSuite {
     assert(pipe.recordCount("orders.ks.t2.qualityDroppedCount").value == 1L)
   }
 
-  test("quality gate replay contract: counters mark only after a durable " +
-      "write; dedup drop counter excludes quality drops") {
-    import s.implicits._
-    val histDir = Files.createTempDirectory("graft-q2-hist").toString
-    val target = Seq((1L, "spark query join table scan"),
-      (2L, "query join spark table merge")).toDF("doc_id", "text")
-    val raw = Seq((10L, "spark query join filter"),
-      (11L, "cat dog fish bird mouse"),
-      (12L, "dog cat bird fish horse")).toDF("doc_id", "text")
-    graft.operators.Sampling.dsirHistogram(target, raw, "text")
-      .write.mode("overwrite").parquet(histDir)
+  test("quality gate is a map-side filter: counts ride the downstream job, " +
+      "tombstones pass, and a batch costs no extra Spark job") {
     val inText = "spark table query join"
     val outText = "cat dog fish bird"
-    val hist = s.read.parquet(histDir)
-    val scores = graft.operators.Sampling.dsirScore(
-        Seq((1L, inText), (2L, outText)).toDF("id", "text"),
-        hist, "text", "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    val thr = (scores(1L) + scores(2L)) / 2
+    val histDir = Files.createTempDirectory("graft-q3-hist").toString
+    val thr = trainQualityModel(histDir, inText, outText)
+    def cfg(quality: Option[String]) = SinkConfig.parse(Map(
+      "topic.orders.ks.t2.mapping" -> "my_pk=key, my_text=value") ++
+      quality.map("topic.orders.ks.t2.quality" -> _))
+
+    // the gate on its own: counts resolve with ZERO jobs once any
+    // downstream action has run over the filtered slice
+    val gateCfg = cfg(Some(s"dsir:$thr:$histDir"))
+    val b = gateCfg.bindings.head
+    val pipe = new SinkPipeline(gateCfg, Map("ks.t2" -> t2),
+      Files.createTempDirectory("graft-q3").toString)
+    val slice = batch(
+      ("orders", 0L, "1", inText, 1000L),
+      ("orders", 1L, "2", outText, 2000L),
+      ("orders", 2L, "3", null, 3000L),
+      ("orders", 3L, "4", outText + " mouse", 4000L))
+    val (out, counts) = pipe.qualityFilter(s, b, slice)
+    assert(out.columns.toSeq == slice.columns.toSeq)
+    assert(out.select("offset").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(0L, 2L), "in-domain record and tombstone pass, off-domain drop")
+    val (kd, jobs) = jobsDuring("quality-counts")(counts.get.apply())
+    assert(kd == ((1L, 2L)), "kept excludes the tombstone; dropped = 2")
+    assert(jobs == 0, s"the gate's counts ran $jobs extra job(s)")
+
+    // end to end: counters, a tombstone through the gate, and the same
+    // number of jobs per batch as the binding without the gate (both
+    // pipelines keep everything, so the rest of the plan is identical;
+    // batch 0 pays the one-time model load)
+    val keepAll = new SinkPipeline(cfg(Some(s"dsir:${Long.MinValue}:$histDir")),
+      Map("ks.t2" -> t2), Files.createTempDirectory("graft-q3-all").toString)
+    val noGate = new SinkPipeline(cfg(None),
+      Map("ks.t2" -> t2), Files.createTempDirectory("graft-q3-none").toString)
+    val gated = new SinkPipeline(gateCfg, Map("ks.t2" -> t2), Files.createTempDirectory("graft-q3-e2e").toString)
+    Seq(keepAll, noGate, gated).foreach(_.processBatch(batch(
+      ("orders", 0L, "1", inText, 1000L),
+      ("orders", 1L, "2", outText, 2000L)), 0L))
+    val next = batch(
+      ("orders", 2L, "1", null, 3000L),
+      ("orders", 3L, "5", inText + " scan", 4000L),
+      ("orders", 4L, "6", outText, 5000L))
+    val (_, withGate) = jobsDuring("with-gate")(keepAll.processBatch(next, 1L))
+    val (_, without) = jobsDuring("without-gate")(noGate.processBatch(next, 1L))
+    assert(withGate == without,
+      s"the quality gate added ${withGate - without} job(s) to the batch")
+    gated.processBatch(next, 1L)
+    assert(gated.store(s, b).state().select("my_pk").collect()
+      .map(_.getLong(0)).toSeq == Seq(5L), "tombstone deleted key 1")
+    assert(gated.recordCount("orders.ks.t2.qualityKeptCount").value == 2L)
+    assert(gated.recordCount("orders.ks.t2.qualityDroppedCount").value == 2L)
+  }
+
+  test("quality model: a non-dense model fails the batch loudly, and the " +
+      "failed load is not cached") {
+    import s.implicits._
+    val inText = "spark table query join"
+    val histDir = Files.createTempDirectory("graft-q4-hist").toString
+    val thr = trainQualityModel(histDir, inText, "cat dog fish bird")
+    val good = s.read.parquet(histDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val badDir = Files.createTempDirectory("graft-q4-bad").toString
+    good.filter(_._1 != 7L).toSeq.toDF("bucket", "lr_q")
+      .write.mode("overwrite").parquet(badDir)
+    val config = SinkConfig.parse(Map(
+      "topic.orders.ks.t2.mapping" -> "my_pk=key, my_text=value",
+      "topic.orders.ks.t2.quality" -> s"dsir:$thr:$badDir"))
+    val pipe = new SinkPipeline(config, Map("ks.t2" -> t2),
+      Files.createTempDirectory("graft-q4").toString)
+    val rec = batch(("orders", 0L, "1", inText, 1000L))
+    val e = intercept[IllegalStateException](pipe.processBatch(rec, 0L))
+    assert(e.getMessage.contains(badDir) &&
+      e.getCause.getMessage.contains("not dense"), e.getMessage)
+    // the model dir is repaired in place: the retried batch loads it
+    good.toSeq.toDF("bucket", "lr_q").write.mode("overwrite").parquet(badDir)
+    pipe.processBatch(rec, 0L)
+    assert(pipe.recordCount("orders.ks.t2.qualityKeptCount").value == 1L)
+    assert(pipe.store(s, config.bindings.head).state().count() == 1L)
+  }
+
+  test("quality gate replay contract: counters mark only after a durable " +
+      "write; dedup drop counter excludes quality drops") {
+    val histDir = Files.createTempDirectory("graft-q2-hist").toString
+    val inText = "spark table query join"
+    val outText = "cat dog fish bird"
+    val thr = trainQualityModel(histDir, inText, outText)
 
     // (a) a batch that fails AFTER the quality agg (unmappable key under
     // ignoreErrors=None) must not mark quality counters: the retry would

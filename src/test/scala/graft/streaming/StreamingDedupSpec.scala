@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -20,6 +20,30 @@ class StreamingDedupSpec extends SparkSuite {
     rows.foreach { case (id, t) => l.add(Row(id, t)) }
     s.createDataFrame(l, schema).coalesce(1).write.parquet(dir)
   }
+
+  /** Id of the query's last completed batch, -1 before the first. */
+  private def lastBatchId(q: StreamingQuery): Long =
+    Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+
+  /** Wait until `q` reports progress satisfying `done` — progress is
+    * posted only after a batch has committed to its sink — failing with
+    * `what` past the deadline. Waits on the query, never on the clock: a
+    * slow batch delays the check instead of racing it. */
+  private def awaitProgress(q: StreamingQuery, what: String,
+      timeoutMs: Long = 60000L)(done: Seq[StreamingQueryProgress] => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while (!done(q.recentProgress.toSeq) && q.isActive &&
+        System.currentTimeMillis() < deadline)
+      q.awaitTermination(50L)
+    q.exception.foreach(e => throw e)
+    assert(done(q.recentProgress.toSeq), what)
+  }
+
+  /** Wait for the batch that reads a file written after batch `after`:
+    * with one file per trigger, the first later batch with input rows. */
+  private def awaitInputBatch(q: StreamingQuery, after: Long): Unit =
+    awaitProgress(q, s"no batch after $after read the new file")(
+      _.exists(p => p.batchId > after && p.numInputRows > 0))
 
   test("streaming dedup emits first-seen docs once across micro-batches") {
     import s.implicits._
@@ -56,39 +80,38 @@ class StreamingDedupSpec extends SparkSuite {
       .trigger(Trigger.ProcessingTime("200 milliseconds")).start()
     // processing-time state timeouts make every batch "require another
     // batch", so noNewData never latches and processAllAvailable would
-    // block forever — poll the sink instead
+    // block forever — wait for the batch that read each new file instead
     def emitted(): Seq[Long] =
       s.table("sdttl_out").collect().map(_.getAs[Long]("docId")).sorted.toSeq
-    def awaitEmitted(expected: Seq[Long]): Unit = {
-      val deadline = System.currentTimeMillis() + 60000L
-      while (System.currentTimeMillis() < deadline && emitted() != expected)
-        Thread.sleep(200L)
-      assert(emitted() == expected)
+    def writeAndAwait(dir: String, rows: (Long, String)*): Unit = {
+      val after = lastBatchId(q)
+      write(dir, rows: _*)
+      awaitInputBatch(q, after)
     }
     try {
       // batch 1: two hashes enter state
-      write(src + "/f1", (1L, "aaa"), (2L, "bbb"))
-      awaitEmitted(Seq(1L, 2L))
+      writeAndAwait(src + "/f1", (1L, "aaa"), (2L, "bbb"))
+      assert(emitted() == Seq(1L, 2L))
       // inside the horizon: duplicate drops (and re-arms aaa's timer)
+      val armed = lastBatchId(q)
       write(src + "/f2", (3L, "aaa"))
       Thread.sleep(1500L)
+      awaitInputBatch(q, armed)
       assert(emitted() == Seq(1L, 2L))
       // a full quiet horizon passes: aaa and bbb expire
       Thread.sleep(horizonMs + 2000L)
-      write(src + "/f3", (4L, "ccc"))
-      awaitEmitted(Seq(1L, 2L, 4L))
+      writeAndAwait(src + "/f3", (4L, "ccc"))
+      assert(emitted() == Seq(1L, 2L, 4L))
       // the expired hash re-admits
-      write(src + "/f4", (5L, "aaa"))
-      awaitEmitted(Seq(1L, 2L, 4L, 5L))
+      writeAndAwait(src + "/f4", (5L, "aaa"))
+      assert(emitted() == Seq(1L, 2L, 4L, 5L))
       // state is bounded by ACTIVE hashes: 3 distinct hashes were seen but
       // only {ccc, aaa} survive the expiry (bbb is gone)
-      val deadline = System.currentTimeMillis() + 30000L
       def liveRows(): Option[Long] = q.recentProgress.reverse.collectFirst {
         case p if p.stateOperators.nonEmpty => p.stateOperators.head.numRowsTotal
       }
-      while (System.currentTimeMillis() < deadline && !liveRows().contains(2L))
-        Thread.sleep(200L)
-      assert(liveRows().contains(2L), s"expected 2 live state rows, got ${liveRows()}")
+      awaitProgress(q, s"expected 2 live state rows, got ${liveRows()}",
+        timeoutMs = 30000L)(_ => liveRows().contains(2L))
     } finally q.stop()
   }
 
@@ -142,16 +165,12 @@ class StreamingDedupSpec extends SparkSuite {
       // before doc 2 ages out, so a restart too slow for the horizon must
       // fail HERE (a clear environment diagnosis), not as a bogus
       // no-pair-emitted assertion downstream.
-      try {
-        val deadline = System.currentTimeMillis() + 25000L
-        while (System.currentTimeMillis() < deadline &&
-            !q.recentProgress.exists(_.numInputRows > 0))
-          Thread.sleep(200L)
-        assert(q.recentProgress.exists(_.numInputRows > 0),
-          "stream made no progress within 25s (query restart slower than " +
-            "the test horizon — environment, not product)")
-        Thread.sleep(1000L) // sink epoch commit
-      } finally q.stop()
+      // Progress is posted after the batch's sink commit, so the file
+      // sink's output is durable once the data batch shows up.
+      try awaitProgress(q, "stream made no progress within 25s (query " +
+          "restart slower than the test horizon — environment, not product)",
+          timeoutMs = 25000L)(_.exists(_.numInputRows > 0))
+      finally q.stop()
     }
     def pairs(): Set[(Long, Long)] =
       try s.read.parquet(outDir).collect()
@@ -311,22 +330,23 @@ class StreamingDedupSpec extends SparkSuite {
       .trigger(Trigger.ProcessingTime("200 milliseconds")).start()
     def emitted(): Set[(Long, Long)] = s.table("ndttl_out").collect()
       .map(r => (r.getAs[Long]("docA"), r.getAs[Long]("docB"))).toSet
-    def awaitEmitted(expected: Set[(Long, Long)]): Unit = {
-      val deadline = System.currentTimeMillis() + 60000L
-      while (System.currentTimeMillis() < deadline && emitted() != expected)
-        Thread.sleep(200L)
-      assert(emitted() == expected)
-    }
     try {
       // inside the horizon: the near-dup pairs
+      val before = lastBatchId(q)
       write(src + "/f1", (1L, a))
       write(src + "/f2", (2L, b))
-      awaitEmitted(Set((1L, 2L)))
+      // one file per trigger: both files are read once two batches after
+      // `before` have taken input
+      awaitProgress(q, "the two near-dup files were not both read")(
+        _.count(p => p.batchId > before && p.numInputRows > 0) >= 2)
+      assert(emitted() == Set((1L, 2L)))
       // a full quiet horizon passes: the buckets forget docs 1 and 2 — a
       // third look-alike arrives to EMPTY buckets and pairs with nothing
       Thread.sleep(horizonMs + 2500L)
+      val quiet = lastBatchId(q)
       write(src + "/f3", (3L, c))
       Thread.sleep(3000L)
+      awaitInputBatch(q, quiet)
       assert(emitted() == Set((1L, 2L)),
         s"expired buckets must not pair: ${emitted()}")
     } finally q.stop()
