@@ -10,16 +10,24 @@ import org.apache.spark.sql.execution.FormattedMode
  * strategy, PushedFilters) are reviewable without running Spark.
  *
  * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
- * (query list `all` dumps every declared query).
+ * Each list item is a name prefix: `q32_jaccard_pairs` selects one query,
+ * `q31` every query whose name starts with it, `all` every declared query.
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.length != 4) {
+      System.err.println(
+        "usage: graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...|all>")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val tag = args(2)
-    val names: Seq[String] =
-      if (args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
+    val prefixes =
+      if (args(3) == "all") Seq("")
       else args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => prefixes.exists(n.startsWith))
     java.nio.file.Files.createDirectories(outDir)
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")

@@ -1571,7 +1571,8 @@ object SparkEntry {
     // capped band candidates (the dup-dense hardening of q26): buckets over
     // the cap emit only the (bucket-min, other) star — n−1 pairs instead of
     // n²/2 — which preserves the applyNearDedup survivor set and the
-    // nearDupClusters components (Probe-pinned). Cap forced to 2 here so
+    // nearDupClusters components (PipelineOpsSpec pins the survivor set on
+    // the sf0.001 corpus with this cap). Cap forced to 2 here so
     // real sf buckets exercise BOTH the all-pairs and the star paths; the
     // oracle applies the identical size gate.
     Q("q82_capped_candidates", Some(

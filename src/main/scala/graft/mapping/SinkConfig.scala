@@ -109,10 +109,10 @@ object SinkConfig {
         * when several bindings write DISJOINT columns of one table out of
         * timestamp order.
         * `entry`: cell-wise plus per-MAP-ENTRY writetimes for every MapType
-        * column ([[graft.operators.Upserts.mergeIntoEntryWise]] — reference
-        * KAF-98, changelog/README.md:10): a record's map value upserts or
-        * removes individual entries (null value removes under
-        * `nullToUnset=false`) instead of replacing the whole cell. */
+        * column ([[graft.operators.Upserts.mergeIntoCellWise]] with
+        * `entryCols` — reference KAF-98, changelog/README.md:10): a record's
+        * map value upserts or removes individual entries (null value removes
+        * under `nullToUnset=false`) instead of replacing the whole cell. */
       mergeMode: String = "row",
       /** Content-level dedup stage between decode and merge (the online form
         * of [[graft.streaming.StreamingDedup]], reachable from config):

@@ -266,11 +266,11 @@ object Dedup {
 
   /**
    * Named LSH configurations for [[embeddingNearDupPairs]] with recall floors
-   * MEASURED against brute-force ground truth (Probe, sf0.1 embeddings) —
-   * the floors are asserted by the Probe run, so they are contracts, not
-   * aspirations. Band length sets recall (collision prob at cosine c is
-   * 1 − (1 − (1−acos(c)/π)^planes)^tables); the per-bucket cap bounds the
-   * candidate volume either way.
+   * MEASURED against brute-force ground truth — PipelineOpsSpec asserts the
+   * floors on planted perturbed copies of the sf0.001 vectors, so they are
+   * contracts, not aspirations. Band length sets recall (collision prob at
+   * cosine c is 1 − (1 − (1−acos(c)/π)^planes)^tables); the per-bucket cap
+   * bounds the candidate volume either way.
    */
   sealed abstract class NearDupPreset(
       val numTables: Int, val planesPerTable: Int)
@@ -304,7 +304,7 @@ object Dedup {
    * RECALL is set by the band length, and the cosine filter is a PRECISION
    * post-filter, not a completeness claim: with random hyperplanes, a pair
    * at cosine c collides in one table with prob (1−acos(c)/π)^planes.
-   * Measured against brute-force ground truth (Probe, sf0.1 embeddings):
+   * Measured against brute-force ground truth on the sf0.1 embeddings:
    * the 8×12 default recalls ~5% of cos ≥ 0.4 pairs but ≥ ~90% of
    * cos ≥ 0.95 pairs — it is a TRUE-near-dup configuration. Hunting looser
    * duplicates needs a shorter band and/or more tables (8×6 measures ~44%
@@ -666,12 +666,12 @@ object Dedup {
 
   /** [[crossCorpusNearDup]] against a PRECOMPUTED reference band table
     * (from [[refCorpusBands]], typically read back from parquet). Identical
-    * output to the two-corpus form when the geometry matches — Probe pins
-    * reuse == recompute; a `__geometry` tag in the band table (present on
-    * anything [[refCorpusBands]] built) is verified row-level against this
-    * call's parameters, so a stale-parameter call fails instead of silently
-    * admitting everything. Hand-built band tables without the tag skip the
-    * check. */
+    * output to the two-corpus form when the geometry matches —
+    * PipelineOpsSpec pins reuse == recompute; a `__geometry` tag in the band
+    * table (present on anything [[refCorpusBands]] built) is verified
+    * row-level against this call's parameters, so a stale-parameter call
+    * fails instead of silently admitting everything. Hand-built band tables
+    * without the tag skip the check. */
   def crossCorpusNearDupPrebanded(newDocs: DataFrame, refBands: DataFrame,
       textCol: String, idCol: String,
       numHashes: Int = 16, shingleN: Int = 3, rowsPerBand: Int = 4): DataFrame = {

@@ -340,8 +340,8 @@ object Layout {
    * tables bucketed the same way equi-join WITHOUT a shuffle (and without
    * a sort, with sortBy) — at 100 TB this converts every recurring
    * fact-fact join on the bucket key from the cluster's biggest exchange
-   * into a map-side zip, paid once at write time. Probe asserts the
-   * no-Exchange plan on real testdata.
+   * into a map-side zip, paid once at write time. SkewLayoutSpec asserts
+   * the no-Exchange plan.
    */
   def bucketedMirror(df: DataFrame, table: String, key: String,
       buckets: Int): Unit = {

@@ -532,11 +532,10 @@ object Similarity {
   /**
    * Recall@k of an approximate neighbor result against exact ground truth
    * — ANN quality measurement as a first-class operator (the dial every
-   * IVF/LSH deployment tunes against; until now this lived only in the
-   * Probe harness). Both inputs are (query_id, item_id, ...) top-k frames,
-   * e.g. [[ivfTopKTrained]] vs [[bruteForceTopK]]. The join keys on
-   * (query, item) — k·|queries| rows a side, trivially small relative to
-   * the searches that produced them.
+   * IVF/LSH deployment tunes against). Both inputs are
+   * (query_id, item_id, ...) top-k frames, e.g. [[ivfTopKTrained]] vs
+   * [[bruteForceTopK]]. The join keys on (query, item) — k·|queries| rows a
+   * side, trivially small relative to the searches that produced them.
    *
    * Output: (query_id, n_hits, recall_pct) with `recall_pct` the integer
    * `100·hits DIV k` — every query appears (zero-hit queries included via

@@ -190,114 +190,41 @@ object Upserts {
    *    covered cells null out, cells written after T survive; a row with no
    *    surviving cells disappears
    *
-   * Output: pk + regular cols + per-cell `__wt_<col>` + `__writetime`
-   * (= greatest live cell wt, for compatibility with row-level readers).
+   * `entryCols` (MapType regular columns; `mergeMode=entry`, reference
+   * KAF-98) reconcile INSIDE the collection instead — one writetime per map
+   * entry, persisted in a parallel `__wtmap_<col>: map<K,long>` state
+   * column. This is the whole-pipeline form of [[mergeMapEntries]]: the
+   * batch is the sink's routed, mapped micro-batch (one map VALUE per
+   * record, plus `__mode` / `__writetime`), not a pre-exploded entry stream.
+   * A record's map value is read as a SET OF ENTRY ACTIONS (the reference
+   * reaches these semantics through `UPDATE t SET mapCol[:key] = :value`
+   * provided queries, ProvidedQueryCCMIT.java:478-545): entries upsert
+   * independently under per-entry LWW; entries the record does not mention
+   * are never touched; a null/empty map contributes no actions. A null entry
+   * VALUE is the removal marker when `nullToUnset = false` and a dropped
+   * no-op when `nullToUnset = true` — mirroring [[mergeMapEntries]].
+   * Within-batch compaction keeps one surviving ACTION per pk (row grain)
+   * but map entries union across every upsert record of the batch (entry
+   * grain); a DELETE at wt T also covers map entries with wt <= T; empty
+   * maps normalize to null.
+   *
+   * Output: pk + regular cols + per-cell `__wt_<col>` (per-entry
+   * `__wtmap_<col>` for entry columns) + `__writetime` (= greatest live
+   * cell or entry wt, for compatibility with row-level readers).
    * TTL/expiry is not modeled here (use [[mergeInto]] for row expiry).
    * Same plan shape as [[mergeInto]]: one full-outer pk join, partial-agg
-   * compaction before it — cell wts add one long column per regular column,
-   * nothing else.
+   * compaction before it — cell wts add one long column per regular column.
+   * Each entry column adds one explode + per-entry partial-agg compaction +
+   * refold on the BATCH only, joined back on pk (state maps are never
+   * exploded — the entry reconciliation runs inside `map_zip_with`), so the
+   * extra work is O(batch entries), not O(state).
    */
   def mergeIntoCellWise(
       state: DataFrame,
       batch: DataFrame,
       table: SinkTable,
-      nullToUnset: Boolean = true): DataFrame = {
-
-    val pk = table.primaryKey
-    val wt = RecordMapper.WritetimeCol
-    val mode = RecordMapper.ModeCol
-    def cellWt(c: String) = s"__wt_$c"
-
-    val batchCols = batch.columns.toSet
-    val mappedRegular = table.regularCols.filter(batchCols.contains)
-
-    val tiebreak = orderableTiebreak(batch)
-    val compacted = lwwCompact(batch, pk, Seq(col(wt), tiebreak))
-
-    val s = state.alias("s")
-    val b = compacted.alias("b")
-    val joinCond = pk.map(k => col(s"s.$k") <=> col(s"b.$k")).reduce(_ && _)
-    val joined = s.join(b, joinCond, "full_outer")
-
-    val inBatch = col(s"b.$mode").isNotNull
-    val isDelete = inBatch && col(s"b.$mode") === RecordMapper.ModeDelete
-
-    val pkCols = pk.map(k => coalesce(col(s"b.$k"), col(s"s.$k")).as(k))
-    val cellCols: Seq[Column] = table.regularCols.flatMap { c =>
-      val sCell = if (state.columns.contains(c)) col(s"s.$c")
-        else lit(null).cast(table.schema(c).dataType)
-      val sWt = if (state.columns.contains(cellWt(c))) col(s"s.${cellWt(c)}")
-        else lit(null).cast(LongType)
-      val survivesDelete = sWt.isNotNull && sWt > col(s"b.$wt")
-      val deleted = when(survivesDelete, sCell).otherwise(lit(null))
-      val deletedWt = when(survivesDelete, sWt).otherwise(lit(null).cast(LongType))
-      if (!mappedRegular.contains(c))
-        Seq(when(isDelete, deleted).otherwise(sCell).as(c),
-          when(isDelete, deletedWt).otherwise(sWt).as(cellWt(c)))
-      else {
-        val bCell = col(s"b.$c")
-        val cellWins = inBatch && !isDelete &&
-          (sWt.isNull || col(s"b.$wt") >= sWt)
-        val overwrite =
-          if (nullToUnset) cellWins && bCell.isNotNull else cellWins
-        Seq(
-          when(isDelete, deleted)
-            .otherwise(when(overwrite, bCell).otherwise(sCell)).as(c),
-          when(isDelete, deletedWt)
-            .otherwise(when(overwrite, col(s"b.$wt")).otherwise(sWt))
-            .as(cellWt(c)))
-      }
-    }
-    val liveWts = table.regularCols.map(c => col(cellWt(c)))
-    val anyCellLive = table.regularCols.map(c => col(c).isNotNull)
-      .reduceOption(_ || _).getOrElse(lit(true))
-
-    joined
-      .select((pkCols ++ cellCols): _*)
-      // a row whose cells are all gone (full tombstone coverage, or a delete
-      // of an absent row) disappears
-      .filter(anyCellLive)
-      .withColumn(wt, greatest(
-        (liveWts :+ lit(Long.MinValue).cast(LongType)): _*))
-  }
-
-  /**
-   * ENTRY-level sink merge (`mergeMode=entry`, reference KAF-98): scalar
-   * regular columns reconcile exactly like [[mergeIntoCellWise]] (per-cell
-   * writetimes), and every MapType regular column reconciles INSIDE the
-   * collection — one writetime per map entry, persisted in a parallel
-   * `__wtmap_<col>: map<K,long>` state column. This is the whole-pipeline
-   * form of [[mergeMapEntries]]: the batch here is the sink's routed,
-   * mapped micro-batch (one map VALUE per record, plus `__mode` /
-   * `__writetime`), not a pre-exploded entry stream.
-   *
-   * A record's map value is read as a SET OF ENTRY ACTIONS, the declared
-   * contract of entry mode (the reference reaches these semantics through
-   * `UPDATE t SET mapCol[:key] = :value` provided queries,
-   * ProvidedQueryCCMIT.java:478-545): entries upsert independently under
-   * per-entry LWW; entries the record does not mention are never touched;
-   * a null/empty map contributes no actions. A null entry VALUE is the
-   * removal marker when `nullToUnset = false` and a dropped no-op when
-   * `nullToUnset = true` — mirroring [[mergeMapEntries]]. Whole-row
-   * semantics follow the cell-wise merge: within-batch compaction keeps
-   * one surviving ACTION per pk (row grain) but map entries union across
-   * every upsert record of the batch (entry grain — the point of the
-   * mode); a DELETE at wt T is a row tombstone covering scalar cells AND
-   * map entries with wt <= T; a row with no live cells and no live
-   * entries disappears (empty maps normalize to null).
-   *
-   * Plan shape: the scalar path is the cell-wise full-outer pk join; each
-   * map column adds one explode + per-entry partial-agg compaction +
-   * refold on the BATCH only (state maps are never exploded — the entry
-   * reconciliation runs inside `map_zip_with`), joined back on pk. Batch
-   * frames are micro-batch sized, so the extra per-map-column work is
-   * O(batch entries), not O(state).
-   */
-  def mergeIntoEntryWise(
-      state: DataFrame,
-      batch: DataFrame,
-      table: SinkTable,
-      nullToUnset: Boolean = true): DataFrame = {
+      nullToUnset: Boolean = true,
+      entryCols: Seq[String] = Nil): DataFrame = {
 
     val pk = table.primaryKey
     val wt = RecordMapper.WritetimeCol
@@ -306,19 +233,17 @@ object Upserts {
     def wtMapCol(c: String) = s"__wtmap_$c"
 
     val batchCols = batch.columns.toSet
-    val mapCols = table.regularCols.filter(c =>
-      table.schema(c).dataType.isInstanceOf[MapType])
-    val scalarCols = table.regularCols.filterNot(mapCols.contains)
+    val scalarCols = table.regularCols.filterNot(entryCols.contains)
     val mappedScalar = scalarCols.filter(batchCols.contains)
-    val mappedMap = mapCols.filter(batchCols.contains)
+    val mappedMap = entryCols.filter(batchCols.contains)
 
     val tiebreak = orderableTiebreak(batch)
     val rowWinner = lwwCompact(batch, pk, Seq(col(wt), tiebreak))
 
-    // per map column: explode upsert records' maps into entry actions,
+    // per entry column: explode upsert records' maps into entry actions,
     // per-entry LWW compaction (partial-agg, map-side), refold to ONE
     // struct-map per pk. Only the batch explodes — never state.
-    val entryMaps: Seq[(String, DataFrame)] = mappedMap.map { m =>
+    val combined = mappedMap.foldLeft(rowWinner) { (acc, m) =>
       val ex = batch
         .filter(col(mode) === RecordMapper.ModeUpsert && col(m).isNotNull)
         .select((pk.map(col) ++ Seq(col(wt), tiebreak.as("__tb"),
@@ -326,17 +251,13 @@ object Upserts {
       // nullToUnset: a null entry value is a no-op and must not shadow an
       // older live write under the within-batch compaction
       val pre = if (nullToUnset) ex.filter(col("__v").isNotNull) else ex
-      val compactE = pre
+      val bm = pre
         .groupBy((pk :+ "__k").map(col): _*)
         .agg(max_by(struct(col("__v").as("v"), col(wt).as("t")),
           struct(col(wt), col("__tb"))).as("__e"))
-      val bm = compactE
         .groupBy(pk.map(col): _*)
         .agg(map_from_entries(collect_list(
           struct(col("__k"), col("__e")))).as(s"__bm_$m"))
-      m -> bm
-    }
-    val combined = entryMaps.foldLeft(rowWinner) { case (acc, (_, bm)) =>
       acc.join(bm, pk, "left")
     }
 
@@ -349,8 +270,6 @@ object Upserts {
     val isDelete = inBatch && col(s"b.$mode") === RecordMapper.ModeDelete
 
     val pkCols = pk.map(k => coalesce(col(s"b.$k"), col(s"s.$k")).as(k))
-
-    // scalar columns: the cell-wise reconciliation verbatim
     val scalarOut: Seq[Column] = scalarCols.flatMap { c =>
       val sCell = if (state.columns.contains(c)) col(s"s.$c")
         else lit(null).cast(table.schema(c).dataType)
@@ -377,9 +296,9 @@ object Upserts {
       }
     }
 
-    // map columns: entry reconciliation inside map_zip_with over the
+    // entry columns: entry reconciliation inside map_zip_with over the
     // (value, writetime) struct-map view of state
-    val mapOut: Seq[Column] = mapCols.flatMap { m =>
+    val entryOut: Seq[Column] = entryCols.flatMap { m =>
       val mt = table.schema(m).dataType.asInstanceOf[MapType]
       val entryT = StructType(Seq(
         StructField("v", mt.valueType), StructField("t", LongType)))
@@ -420,12 +339,14 @@ object Upserts {
 
     val liveWts: Seq[Column] =
       scalarCols.map(c => col(cellWt(c))) ++
-        mapCols.map(m => array_max(map_values(col(wtMapCol(m)))))
-    val anyCellLive = (scalarCols ++ mapCols).map(c => col(c).isNotNull)
+        entryCols.map(m => array_max(map_values(col(wtMapCol(m)))))
+    val anyCellLive = table.regularCols.map(c => col(c).isNotNull)
       .reduceOption(_ || _).getOrElse(lit(true))
 
     joined
-      .select((pkCols ++ scalarOut ++ mapOut): _*)
+      .select((pkCols ++ scalarOut ++ entryOut): _*)
+      // a row whose cells are all gone (full tombstone coverage, or a delete
+      // of an absent row) disappears
       .filter(anyCellLive)
       .withColumn(wt, greatest(
         (liveWts :+ lit(Long.MinValue).cast(LongType)): _*))

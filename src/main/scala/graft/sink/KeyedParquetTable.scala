@@ -56,9 +56,9 @@ class KeyedParquetTable(
       * granularity, for bindings writing disjoint columns out of order);
       * `entry`: cell-wise plus per-MAP-ENTRY writetimes persisted as
       * `__wtmap_<col>` state columns for every MapType column
-      * ([[Upserts.mergeIntoEntryWise]] — reference KAF-98: a record's map
-      * value upserts/removes individual entries instead of replacing the
-      * cell). */
+      * ([[Upserts.mergeIntoCellWise]] with `entryCols` — reference KAF-98:
+      * a record's map value upserts/removes individual entries instead of
+      * replacing the cell). */
     mergeMode: String = "row") {
 
   require(Set("row", "cell", "entry").contains(mergeMode),
@@ -431,12 +431,11 @@ class KeyedParquetTable(
         val merged =
           if (table.counterCols.nonEmpty)
             Upserts.mergeCounters(stTouched, Upserts.counterCombine(batchP, table), table)
-          else if (mergeMode == "entry")
-            Upserts.mergeIntoEntryWise(stTouched, batchP, table, nullToUnset)
-          else if (mergeMode == "cell")
-            Upserts.mergeIntoCellWise(stTouched, batchP, table, nullToUnset)
-          else
+          else if (mergeMode == "row")
             Upserts.mergeInto(stTouched, batchP, table, nullToUnset)
+          else
+            Upserts.mergeIntoCellWise(stTouched, batchP, table, nullToUnset,
+              entryCols = if (mergeMode == "entry") table.mapCols else Nil)
         val next = retain.map(merged.filter).getOrElse(merged)
         val plan = capWrite(next.withColumn(BucketCol, bucketOf))
         plan.queryExecution.executedPlan // force analysis/optimization here

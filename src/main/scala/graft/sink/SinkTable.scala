@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{MapType, StructType}
 
 /**
  * Sink-side table metadata: schema + primary key + counter columns.
@@ -26,6 +26,9 @@ case class SinkTable(
   val primaryKey: Seq[String] = partitionKey ++ clusteringKey
   def regularCols: Seq[String] =
     schema.fieldNames.toSeq.filterNot(c => primaryKey.contains(c))
+  /** Regular MapType columns: reconciled per entry under `mergeMode=entry`. */
+  def mapCols: Seq[String] =
+    regularCols.filter(c => schema(c).dataType.isInstanceOf[MapType])
   def qualified: String = s"$keyspace.$name"
 
   require(primaryKey.nonEmpty, s"table $qualified needs a primary key")

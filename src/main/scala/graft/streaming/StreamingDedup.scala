@@ -169,7 +169,8 @@ object StreamingDedup {
    * shingle fold per downstream reference, measured ~67× slower still).
    * The native expression is both ~30× faster and shape-proof: there is
    * exactly one fold, inside one generated function, whatever Catalyst
-   * does to the projections (Probe asserts the single-occurrence plan).
+   * does to the projections (PlanInventorySpec asserts the
+   * single-occurrence plan on q78).
    */
   def bandRows(docs: DataFrame, textCol: String, keyCols: Seq[String],
       numHashes: Int = 16, shingleN: Int = 3, rowsPerBand: Int = 4): DataFrame = {

@@ -14,7 +14,7 @@ class EntrySpec extends SparkSuite {
     // spot-check a cheap one per family
     val s = sqlc
     Seq("q02_map_json_fields", "q23_dedup_exact", "q33_ann_topk").foreach { q =>
-      assert(SparkEntry.queries(q)(s, "/root/testdata/sf0.001").count() > 0)
+      assert(SparkEntry.queries(q)(s, SparkSuite.Sf0001).count() > 0)
     }
   }
 }

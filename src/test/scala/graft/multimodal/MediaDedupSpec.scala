@@ -139,6 +139,14 @@ class MediaDedupSpec extends SparkSuite {
     assert(pairs.exists { case (a, b, h) => a == 1L && b == 2L && h <= 3 })
     assert(pairs.filter { case (a, b, _) => b == 3L || a == 3L }
       .forall { case (_, _, h) => h >= 30 })
+    // the band join stays an equi-join on (band_id, band_val): a nested
+    // loop or cartesian product would be corpus² whatever the banding
+    withoutAutoBroadcast {
+      val plan = physicalPlan(MediaDedup
+        .phashCandidatePairs(imgs, "img_id", "payload", lit(2)))
+      assert(!plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"), plan)
+    }
   }
 
   test("phashCandidatePairs radius: recall vs brute force is exact at " +
@@ -254,6 +262,14 @@ class MediaDedupSpec extends SparkSuite {
     assert(r.getLong(2) == r.getLong(3))
     assert(r.getLong(0) != r.getLong(2)) // different clips sign apart
     assert(r.getBoolean(4) && r.getBoolean(5))
+    // over generated 64-frame clips the plan holds the single-scan native
+    // call, not a per-frame demux (which re-parses the container per frame)
+    val plan = s.range(2L)
+      .select(MediaDedup.videoSignature(Multimodal.synthClip(lit(16L),
+        lit(64), col("id") % 31L, col("id")), lit(2)).as("sig"))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("graft_avi_signature") &&
+      !plan.contains("graft_avi_frame"), plan)
   }
 
   test("synthClip native generator is bit-identical to the composed " +

@@ -84,6 +84,15 @@ class ConnectedComponentsSpec extends SparkSuite {
     val lp = Dedup.nearDupClusters(nodesDf(ids), edgesDf(es), "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == lp)
+    // a 500-doc star (one boilerplate template matching many docs) plus a
+    // 31-doc chain among 1000 docs: every member but the two roots moves
+    import org.apache.spark.sql.functions.col
+    val hubEdges = edgesDf((1L until 500L).map(i => (0L, i)) ++
+      (600L until 630L).map(i => (i, i + 1)))
+    val moved = Dedup.nearDupClusters(s.range(1000L).toDF("doc_id"),
+        hubEdges, "doc_id")
+      .filter(col("cluster_id") =!= col("doc_id")).count()
+    assert(moved == 499L + 31L - 1L)
   }
 
   test("empty edge set: every node is its own component") {

@@ -36,6 +36,29 @@ class PipelineOpsSpec extends SparkSuite {
     assert(cands.toSeq == Seq((1L, 2L)))
   }
 
+  test("minhash candidate cap: a dup-dense bucket stars to n-1 pairs, " +
+      "and the star keeps the applyNearDedup survivors") {
+    // 2000 byte-identical docs share one bucket per band: uncapped that is
+    // n²/2 pairs, the cap's star contract emits (bucket-min, other) only
+    val oneDoc = (1 to 40).map(i => s"w$i").mkString(" ")
+    val dense = s.range(2000L)
+      .select(col("id").as("doc_id"), lit(oneDoc).as("text"))
+    val denseBands = Dedup.minhashBands(
+      Dedup.minhashSignatures(dense, "text", "doc_id"))
+    assert(Dedup.minhashCandidates(denseBands, maxBucketSize = 64)
+      .count() == 1999L)
+    // a cap of 2 stars the ordinary buckets of a real corpus too
+    val corpus = s.read.parquet(s"${SparkSuite.Sf0001}/documents.parquet")
+      .select("doc_id", "text")
+    val bands = Dedup.minhashBands(
+      Dedup.minhashSignatures(corpus, "text", "doc_id"))
+    def survivors(cap: Int) = Dedup.applyNearDedup(corpus,
+        Dedup.minhashCandidates(bands, maxBucketSize = cap), "doc_id")
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    val all = survivors(0)
+    assert(all.size < 500 && survivors(2) == all)
+  }
+
   test("simhash of near-identical docs is close in hamming distance") {
     val base = (1 to 80).map(i => s"w$i").mkString(" ")
     val near = base.replace("w40", "w40x")
@@ -236,8 +259,8 @@ class PipelineOpsSpec extends SparkSuite {
   }
 
   test("embedding near-dup presets: pinned configs, same plan as explicit params") {
-    // the preset constants are a DOCUMENTED contract (recall floors measured
-    // in Probe against brute force) — pin them so a silent change trips here
+    // the preset constants are a DOCUMENTED contract (recall floors asserted
+    // below against brute force) — pin them so a silent change trips here
     assert(Dedup.NearDupPreset.Strict95.numTables == 8 &&
       Dedup.NearDupPreset.Strict95.planesPerTable == 12)
     assert(Dedup.NearDupPreset.Broad40.numTables == 16 &&
@@ -258,6 +281,48 @@ class PipelineOpsSpec extends SparkSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(viaPreset == explicit && viaPreset == Seq((0L, 1L)))
     }
+
+    // recall floors vs brute-force truth. The natural vectors hold almost
+    // no pair near cos 0.9 (none above 0.7 at sf0.1), so plant near-dups:
+    // a perturbed copy of every 4th vector (±30% multiplicative
+    // per-coordinate sine noise → cos ≈ 0.95-0.99). The truth is still
+    // brute-forced, so recall is measured against the planted pairs'
+    // actual cosines, not the intent.
+    val base = s.read.parquet(s"${SparkSuite.Sf0001}/embeddings.parquet")
+    val emb = base.select("vec_id", "embedding").unionByName(
+      base.filter(col("vec_id") % 4 === 0).select(
+        (col("vec_id") + 10000000L).as("vec_id"),
+        expr("transform(embedding, (x, i) -> x * cast(1.0d + 0.3d * " +
+          "sin(cast(vec_id AS DOUBLE) * 13.0d + cast(i AS DOUBLE)) AS FLOAT))")
+          .as("embedding")))
+    val qv = emb.select(col("vec_id"), Similarity.quantize(col("embedding")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+      .sortBy(_._1)
+    def dot(a: Array[Long], b: Array[Long]): Long = {
+      var acc = 0L; var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+    // the same integer cosine as Similarity.dotQ / norm2Q, pair by pair
+    val n2 = qv.map { case (_, v) => dot(v, v) }
+    val truth = for {
+      i <- qv.indices; j <- (i + 1) until qv.length
+      c = dot(qv(i)._2, qv(j)._2) / math.sqrt((n2(i) * n2(j)).toDouble)
+      if c >= 0.4
+    } yield (qv(i)._1, qv(j)._1) -> c
+    def recallPct(p: Dedup.NearDupPreset, minCos: Double): Double = {
+      val got = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding", p)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val want = truth.collect { case (pair, c) if c >= minCos => pair }
+      assert(want.length >= 100, s"only ${want.length} true pairs at $minCos")
+      want.count(got.contains) * 100.0 / want.length
+    }
+    val strict = recallPct(Dedup.NearDupPreset.Strict95, 0.9)
+    val broad = recallPct(Dedup.NearDupPreset.Broad40, 0.4)
+    info(f"recall: Strict95 @cos>=0.9 $strict%.1f%%, " +
+      f"Broad40 @cos>=0.4 $broad%.1f%%")
+    assert(strict >= 70.0, f"Strict95 recall@cos>=0.9 $strict%.1f%% < 70%%")
+    assert(broad >= 40.0, f"Broad40 recall@cos>=0.4 $broad%.1f%% < 40%%")
   }
 
   test("lshCandidates skips buckets over the fan-out cap") {
@@ -343,6 +408,10 @@ class PipelineOpsSpec extends SparkSuite {
     val out = Dedup.contamination(corpus, evalSet, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 2L))) // "the quick brown","quick brown fox"
+    // the eval shingle set broadcasts, so the corpus side never shuffles
+    withoutAutoBroadcast {
+      assert(broadcasts(Dedup.contamination(corpus, evalSet, "text", "doc_id")))
+    }
   }
 
   test("multimodal stub decode preserves ids and emits plausible metadata") {
@@ -373,6 +442,12 @@ class PipelineOpsSpec extends SparkSuite {
     val serial = Packing.packPlan(d, "text", "doc_id", seqLen = 5, nBuckets = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
     assert(serial.toSeq == out.map(t => (t._1, t._3)).toSeq)
+    // two-stage prefix scan: bucket offsets broadcast onto a keyed window,
+    // never a global WindowExec
+    withoutAutoBroadcast {
+      val plan = Packing.packPlan(d, "text", "doc_id", seqLen = 5, nBuckets = 3)
+      assert(broadcasts(plan) && unkeyedWindows(plan).isEmpty)
+    }
   }
 
   test("pack plan matches a serial scan on seeded random corpora") {
@@ -442,6 +517,11 @@ class PipelineOpsSpec extends SparkSuite {
     // order: doc1@0, doc2@4, doc3@9 (straddles the 10-token budget → kept),
     // doc4@12 (past budget → dropped)
     assert(out.toSeq == Seq((1L, 0L), (2L, 4L), (3L, 9L)))
+    // the per-score offsets broadcast: the pack plan's two-stage scan
+    withoutAutoBroadcast {
+      assert(broadcasts(
+        Packing.budgetSelect(d, "score", "doc_id", "n_tokens", 10L)))
+    }
   }
 
   test("canonical pick prefers the trusted source, then lowest id") {
@@ -470,6 +550,10 @@ class PipelineOpsSpec extends SparkSuite {
     assert(Sampling.epochShuffle(d, "doc_id", 1, nBuckets = 1)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("shuffle_rank")))
       .sortBy(_._1).toSeq == e1.sortBy(_._1).toSeq)
+    // the bucket offsets broadcast: a global rank without a global sort
+    withoutAutoBroadcast {
+      assert(broadcasts(Sampling.epochShuffle(d, "doc_id", 1, nBuckets = 7)))
+    }
   }
 
   test("asof join: greatest right time <= left time, equal ts matches, keys isolated") {
@@ -525,6 +609,12 @@ class PipelineOpsSpec extends SparkSuite {
         if (r.isNullAt(3)) -1L else r.getLong(3))).sorted.toSeq
     val single = run(1)
     assert(single.nonEmpty && single == run(5) && single == run(64))
+    // the hot key spreads over time slices: the as-of window partitions by
+    // (key, slice), never by key alone
+    val asofWindows = windows(AsofJoin.asofJoin(hl, hr, "k", "t", Seq("v")))
+      .filter(_.windowExpressions.exists(_.name == "__asof"))
+    assert(asofWindows.nonEmpty && asofWindows.forall(
+      _.partitionSpec.flatMap(_.references.map(_.name)).contains("__tb")))
   }
 
   test("asof nearest: minimizes |dt|, ties go backward, no-match stays null") {
@@ -755,6 +845,21 @@ class PipelineOpsSpec extends SparkSuite {
     assert(viaParquet.toSeq == recompute.toSeq)
     // and the fixture actually screens: doc 1 collides with ref, doc 2 not
     assert(viaParquet.toSeq == Seq((1L, 1L, false), (2L, 0L, true)))
+
+    // the same equality on the sf0.001 corpus split into even/odd ids
+    val corpus = s.read.parquet(s"${SparkSuite.Sf0001}/documents.parquet")
+      .select("doc_id", "text")
+    val evens = corpus.filter(col("doc_id") % 2 === 0)
+    val odds = corpus.filter(col("doc_id") % 2 =!= 0)
+    val oddDir = java.nio.file.Files
+      .createTempDirectory("graft-refbands").toString
+    Dedup.refCorpusBands(odds, "text", "doc_id")
+      .write.mode("overwrite").parquet(oddDir)
+    val reuse = Dedup.crossCorpusNearDupPrebanded(evens,
+      s.read.parquet(oddDir), "text", "doc_id")
+    val recomputed = Dedup.crossCorpusNearDup(evens, odds, "text", "doc_id")
+    assert(reuse.exceptAll(recomputed).isEmpty &&
+      recomputed.exceptAll(reuse).isEmpty)
   }
 
   test("qlog2 is exact on powers of two and monotone between them") {
@@ -1115,6 +1220,9 @@ class PipelineOpsSpec extends SparkSuite {
     // doc 2 fits in one short chunk; doc 3 (whitespace only) emits none
     assert(out.filter(_._1 == 2L).toSeq == Seq((2L, 0, 0L, 3L, "a b c")))
     assert(!out.exists(_._1 == 3L))
+    // map-only: tokenize → bounded explode → slice, no shuffle at all
+    assert(!physicalPlan(TextAnalysis.chunkDocs(d, "text", "doc_id", 5, 2))
+      .contains("Exchange"))
     intercept[IllegalArgumentException] {
       TextAnalysis.chunkDocs(d, "text", "doc_id", 5, 5)
     }
@@ -1694,6 +1802,12 @@ class PipelineOpsSpec extends SparkSuite {
     // 40 → bucket 6 → n_le 63 → 630000; 1 → bucket 1 → n_le 1 → 10000;
     // 100 → bucket 7 → n_le 100 → 1000000
     assert(out == Map(1L -> 630000L, 2L -> 10000L, 3L -> 1000000L))
+    // the target side meets the dense sketch in a broadcast equality join,
+    // so scoring ships the sketch, never the targets
+    withoutAutoBroadcast {
+      assert(physicalPlan(Stats.logHistPercentileScore(target, "v", ref, "v"))
+        .contains("BroadcastHashJoin"))
+    }
   }
 
   test("status enrichment: every event gets exactly its at-time status") {
@@ -2042,6 +2156,17 @@ class PipelineOpsSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(pruned == plain) // no false negatives → identical result
     assert(pruned.map(_._1) == Set(1L, 7L))
+    // and on sf0.001 orders ⋈ BUILDING customers
+    val dir = SparkSuite.Sf0001
+    val o = s.read.parquet(s"$dir/orders.parquet")
+      .select(col("o_orderkey"), col("o_custkey").as("custkey"))
+    val c = s.read.parquet(s"$dir/customer.parquet")
+      .filter(col("c_mktsegment") === "BUILDING")
+      .select(col("c_custkey").as("custkey"), col("c_nationkey"))
+    val viaBloom = Stats.bloomPrunedJoin(o, c, "custkey")
+    val direct = o.join(c, "custkey")
+    assert(viaBloom.count() > 0 && viaBloom.exceptAll(direct).isEmpty &&
+      direct.exceptAll(viaBloom).isEmpty)
   }
 
   test("temperatureWeights: uniform at α=0, proportional at α=1") {
@@ -2232,6 +2357,9 @@ class PipelineOpsSpec extends SparkSuite {
     // boundary = p50 value 5 → bin0 = 1..5 (no pos), bin1 = 6..10 (2 pos)
     assert(out(0L) == (5L, 0L, 0L, 1L, 5L))
     assert(out(1L) == (5L, 2L, 400000L, 6L, 10L))
+    // binning is map-only: the boundaries are literals, so no window at all
+    assert(windows(Stats.binTargetRates(df, "v", "lbl", "pos", nBins = 2))
+      .isEmpty)
   }
 
   test("cooccurrencePairs: support counts, minSupport, and the group cap") {
@@ -2727,6 +2855,8 @@ class PipelineOpsSpec extends SparkSuite {
       .collect()
     assert(out.forall(_.getAs[Long]("woe_q") == 0L))
     assert(out.forall(_.getAs[Long]("iv_total_q") == 0L))
+    // binning is map-only: no window at all
+    assert(windows(Stats.woeIvReport(df, "v", "lab", "p", nBins = 2)).isEmpty)
   }
 
   test("woeIvReport: separated label concentrates IV") {
@@ -2894,6 +3024,13 @@ class PipelineOpsSpec extends SparkSuite {
     assert(out("v_pos") == ((1L, 250000L)))
     assert(out("st_not_null") == ((1L, 250000L)))
     assert(out("st_domain") == ((2L, 500000L))) // null AND 'bad' violate
+    // one aggregate pass: no window, no join
+    val plan = Quality.ruleAudit(df, Seq("v_pos" -> (col("v") > 0L)))
+      .queryExecution.optimizedPlan
+    assert(plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, plan)
   }
 
   test("aggState: merge(build(A), build(B)) equals build(A ∪ B)") {
@@ -2975,6 +3112,15 @@ class PipelineOpsSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(viaBm == direct)
+    // the combos on sf0.001 events: event type × value band
+    val ev = graft.sources.KafkaLike.events(s, SparkSuite.Sf0001)
+      .select(col("event_id"), col("event_type"),
+        IntMath.idiv(floor(col("value") * 100).cast(LongType), lit(10000L))
+          .as("vb"))
+    val evCombos = Layout.bitmapAndCounts(
+      Layout.bitmapIndex(ev, "event_id", "event_type"),
+      Layout.bitmapIndex(ev, "event_id", "vb"))
+    assert(evCombos.count() == ev.groupBy("event_type", "vb").count().count())
   }
 
   test("sortKeyAdvisor: sorting by the target scores 0, a shuffled key " +
@@ -3026,6 +3172,17 @@ class PipelineOpsSpec extends SparkSuite {
     // full sketch: k=2 over {10,20,30} → kth min 20 → est (k−1)·S/20
     val f = Stats.kmvSketch(Seq(10L, 20L, 30L).toDF("h"), "h", 2)
     assert(f.collect().map(_.getLong(0)).toSeq == Seq(10L, 20L))
+    // a full k=128 sketch over the sf0.01 viewers (150 distinct) lands
+    // within 15% of the exact count: mix31 makes the k-th minimum honest
+    val views = graft.sources.KafkaLike.events(s, SparkSuite.Sf001)
+      .filter(col("event_type") === "view")
+    val viewers = views.select(Stats.mix31r(col("user_id"), rounds = 3).as("h"))
+    val est = Stats.kmvOverlapReport(Stats.kmvSketch(viewers, "h", 128),
+      Stats.kmvSketch(viewers, "h", 128), 128).head().getLong(0)
+    val exact = views.select("user_id").distinct().count()
+    info(s"KMV estimate $est vs exact $exact")
+    assert(exact > 128 && math.abs(est - exact) * 100 <= exact * 15,
+      s"KMV estimate $est vs exact $exact")
   }
 
   test("percolate: conjunction must match ALL terms; repeats don't " +

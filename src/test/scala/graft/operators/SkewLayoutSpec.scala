@@ -34,6 +34,33 @@ class SkewLayoutSpec extends SparkSuite {
     }
   }
 
+  test("AQE splits the hot partition of a skewed sort-merge join, the " +
+      "engine-native counterpart of saltedJoin") {
+    // the keyed aggregate above the join needs the join's hash
+    // distribution, so AQE skips the split unless forced
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true") {
+      val fact = s.range(200000)
+        .select(when(col("id") % 10L < 8L, 7L).otherwise(col("id")).as("fk"),
+          col("id").as("v"))
+      val dim = s.range(20000)
+        .select(col("id").as("dk"), (col("id") * 3L).as("attr"))
+      // the sum keeps v and attr in the shuffle: a lone repeated key
+      // compresses below the 64 KB threshold
+      val j = fact.join(dim, col("fk") === col("dk"))
+        .groupBy("fk").agg(count(lit(1)).as("n"), sum(col("v") + col("attr")))
+      // run j's OWN QueryExecution: count() would plan a separate query and
+      // leave j's adaptive plan unfinalized
+      assert(j.collect().length == 4001) // key 7 + the 4000 matched ids ≡ 8, 9
+      val plan = physicalPlan(j)
+      assert(plan.contains("skew=true"), plan)
+    }
+  }
+
   test("salted left join keeps unmatched fact rows exactly once") {
     import s.implicits._
     val fact = Seq((1L, 10L), (2L, 20L), (99L, 30L))

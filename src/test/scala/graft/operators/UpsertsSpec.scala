@@ -340,7 +340,8 @@ class UpsertsSpec extends SparkSuite {
   private val emptyEntryState = StructType(Seq(StructField("pk", LongType)))
   private def entryMerge(state: org.apache.spark.sql.DataFrame,
       batch: org.apache.spark.sql.DataFrame, nullToUnset: Boolean = true) =
-    Upserts.mergeIntoEntryWise(state, batch, entryTable, nullToUnset)
+    Upserts.mergeIntoCellWise(state, batch, entryTable, nullToUnset,
+      entryCols = entryTable.mapCols)
   private def mapOf(out: org.apache.spark.sql.DataFrame, pk: Long) = {
     val r = out.filter(col("pk") === pk).head()
     (Option(r.getAs[Map[String, Long]]("m")),
