@@ -69,106 +69,181 @@ object Upserts {
     batch.groupBy(table.primaryKey.map(col): _*).agg(sums.head, sums.tail: _*)
   }
 
-  /** Within-batch deterministic tiebreaker for equal-writetime rows: the
+  /** Within-run deterministic tiebreaker for equal-writetime rows: the
     * row's full value struct, column order fixed by name sort — minus any
     * column whose type Spark cannot order (MapType, e.g. an entry-mode map
-    * column: including one fails `max_by` analysis). */
-  private def orderableTiebreak(batch: DataFrame): Column = {
+    * column). Columns that are constant or null across a run's rows (the
+    * fold's own `__run` / `__set`, cells the run does not carry) leave the
+    * order among that run's rows unchanged. */
+  private def orderableTiebreak(df: DataFrame): Column = {
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
-    struct(batch.columns.sorted
-      .filter(c => RowOrdering.isOrderable(batch.schema(c).dataType))
+    struct(df.columns.sorted
+      .filter(c => RowOrdering.isOrderable(df.schema(c).dataType))
       .map(col).toIndexedSeq: _*)
   }
 
+  // ------------------------------------------------------------- the fold
+
+  /** Fold-row column: the run a row belongs to. State rows sort before
+    * every run they are folded with. */
+  val RunCol = "__run"
+  /** Fold-row column: the columns a write row's batch carried, one
+    * '0'/'1' per regular column in `table.regularCols` order, then one for
+    * `__ttl_seconds`. A column absent from a batch is never touched, while
+    * a present null cell unsets (or, with `nullToUnset = false`, nulls)
+    * it. Null on state rows: that is how the fold tells state from
+    * writes. */
+  val SetCol = "__set"
+
+  /** One merge algebra, parameterized:
+    *  - a table with counter columns sums its increments;
+    *  - `entryCols = None`: row-level LWW ([[mergeInto]]), with a
+    *    `__expires_s` state column iff `withExpiry`;
+    *  - `entryCols = Some(cols)`: cell-level LWW ([[mergeIntoCellWise]]),
+    *    with `cols` (MapType) reconciled per map entry. */
+  final case class Fold(table: SinkTable, nullToUnset: Boolean,
+      entryCols: Option[Seq[String]], withExpiry: Boolean) {
+    def counters: Boolean = table.counterCols.nonEmpty
+
+    /** The folded state's columns: pk, then the mode's cells. */
+    def stateSchema: StructType = {
+      def f(n: String, t: DataType) = StructField(n, t, nullable = true)
+      def typed(c: String) = f(c, table.schema(c).dataType)
+      val body: Seq[StructField] =
+        if (counters) table.counterCols.map(f(_, LongType))
+        else entryCols match {
+          case None =>
+            table.regularCols.map(typed) ++ (f(RecordMapper.WritetimeCol, LongType) +:
+              (if (withExpiry) Seq(f(RecordMapper.ExpiresCol, LongType)) else Nil))
+          case Some(es) =>
+            table.regularCols.filterNot(es.contains)
+              .flatMap(c => Seq(typed(c), f(s"__wt_$c", LongType))) ++
+              es.flatMap { m =>
+                val mt = table.schema(m).dataType.asInstanceOf[MapType]
+                Seq(typed(m), f(s"__wtmap_$m", MapType(mt.keyType, LongType)))
+              } :+ f(RecordMapper.WritetimeCol, LongType)
+        }
+      StructType(table.primaryKey.map(typed) ++ body)
+    }
+
+    /** State columns a write row never carries: cell writetimes, expiry. */
+    def stateOnly: Seq[String] = stateSchema.fieldNames.toSeq.filterNot(
+      (table.primaryKey ++ table.regularCols :+ RecordMapper.WritetimeCol).contains)
+
+    /** Fold rows: the state's columns, then a write row's mode, TTL and
+      * cell set, then the run. State rows leave the write columns null;
+      * write rows leave the state-only columns null. */
+    def rowsSchema: StructType = StructType(stateSchema.fields ++ Seq(
+      StructField(RecordMapper.ModeCol, StringType),
+      StructField(RecordMapper.TtlCol, LongType),
+      StructField(SetCol, StringType),
+      StructField(RunCol, IntegerType)))
+  }
+
+  /** `state` as fold rows (run 0): columns it lacks read as null. */
+  private[graft] def stateRows(state: DataFrame, spec: Fold): DataFrame = {
+    val has = state.columns.toSet
+    val stateCols = spec.stateSchema.fieldNames.toSet
+    state.select(spec.rowsSchema.fields.toIndexedSeq.map { f =>
+      (if (f.name == RunCol) lit(0)
+        else if (stateCols(f.name) && has(f.name)) col(f.name)
+        else lit(null)).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** A routed, mapped batch (pk + the cells it maps + `__mode` +
+    * `__writetime` [+ `__ttl_seconds`]) as the fold rows of `run`: raw,
+    * uncompacted — the fold settles a run's rows itself. */
+  private[graft] def writeRows(batch: DataFrame, spec: Fold, run: Column): DataFrame = {
+    val has = batch.columns.toSet
+    val t = spec.table
+    val carried = (t.primaryKey ++ t.regularCols ++ Seq(RecordMapper.WritetimeCol,
+      RecordMapper.ModeCol, RecordMapper.TtlCol)).toSet
+    val set = (t.regularCols.map(has) :+ has(RecordMapper.TtlCol))
+      .map(if (_) '1' else '0').mkString
+    batch.select(spec.rowsSchema.fields.toIndexedSeq.map { f =>
+      (f.name match {
+        case RunCol => run
+        case SetCol => lit(set)
+        case n if carried(n) && has(n) => col(n)
+        case _ => lit(null)
+      }).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
   /**
-   * Merge a routed, compacted batch into existing table state.
+   * Fold state rows and write rows per primary key, in run order — the
+   * merge-on-read of an append-only store, and the one implementation
+   * behind [[mergeInto]], [[mergeIntoCellWise]] and [[mergeCounters]]
+   * (their one-batch case is a fold with a single run).
+   *
+   * The result equals merging the runs into the state ONE BATCH AT A TIME,
+   * oldest run first: within a run, a key's rows settle to the one with the
+   * highest (writetime, tiebreak) (entry-mode map entries union across the
+   * run's upserts, per-entry newest wins); that winner then merges into the
+   * key's folded state by the mode's rules below. A later run therefore
+   * wins an equal-writetime tie, and a run's partial update lands only the
+   * cells it carries — folding a UNION of runs as one batch would instead
+   * keep just one row-level winner and lose the other runs' cells.
+   *
+   * Counters sum, which is order-free, so they fold as one aggregation with
+   * map-side partial sums. Every other mode shuffles ONCE on the primary
+   * key, however many runs there are, sorts within partitions by (pk, run,
+   * writetime, tiebreak), and steps through each key's rows in that order.
+   */
+  private[graft] def fold(rows: DataFrame, spec: Fold): DataFrame = {
+    val pk = spec.table.primaryKey.map(col)
+    val ordered = rows.select(spec.rowsSchema.fieldNames.toIndexedSeq.map(col): _*)
+    if (spec.counters) {
+      val sums = spec.table.counterCols.map(c =>
+        sum(coalesce(col(c), lit(0L))).cast(LongType).as(c))
+      ordered.groupBy(pk: _*).agg(sums.head, sums.tail: _*)
+    } else {
+      val folder = new Folder(spec)
+      ordered.repartition(pk: _*)
+        .sortWithinPartitions((pk ++ Seq(col(RunCol), col(RecordMapper.WritetimeCol),
+          orderableTiebreak(ordered))): _*)
+        .mapPartitions((it: Iterator[org.apache.spark.sql.Row]) => folder(it))(
+          org.apache.spark.sql.Encoders.row(spec.stateSchema))
+    }
+  }
+
+  /**
+   * Merge a routed, mapped batch into existing table state (row-level LWW).
    *
    * Semantics per mode column (`RecordMapper.ModeCol`):
-   *  - DELETE: row disappears (reference: sink/src/it/.../DeleteCCMIT.java:39-275)
+   *  - DELETE: row disappears (reference: sink/src/it/.../DeleteCCMIT.java:39-275);
+   *    a delete of an absent row is a no-op and leaves no tombstone
    *  - UPSERT: per-column: a non-null batch value overwrites; a null batch
    *    value leaves the existing cell when `nullToUnset` (default), or
    *    overwrites with null when not (reference:
    *    sink/src/it/.../RawDataEndToEndCCMIT.java:180-218, JsonEndToEndCCMIT.java:256-273)
    *  - a column absent from the batch frame entirely is never touched (unset)
    *
-   * Cell-level LWW: state rows carry `__writetime`; a batch row only
-   * overwrites cells when its writetime is >= the state's (last writer wins,
-   * matching Cassandra reconciliation).
+   * Within the batch, a key's rows settle to the highest (writetime,
+   * tiebreak) — the tiebreak is the row's value struct, the analogue of
+   * Cassandra's cell-value reconciliation for equal timestamps. State rows
+   * carry `__writetime`; the batch winner overwrites cells only when its
+   * writetime is >= the state's (last writer wins, Cassandra
+   * reconciliation); the row's writetime becomes the greater of the two.
    *
-   * Plan shape: one full outer join on pk (both sides hash-partitioned on the
-   * same key) — at 100 TB this is the canonical merge-on-read compaction
-   * join; with bucketed state it degrades to a co-located join with no state
-   * shuffle.
+   * TTL → row expiry (reference G2): when the batch carries
+   * `__ttl_seconds`, a winning row sets `__expires_s` = writetime(s) + ttl
+   * (TTL 0 or null = no expiry, Cassandra semantics; negative TTLs were
+   * already clamped to 0 by the codec, WriteTimestampAndTtlCCMIT.java:159);
+   * without the column the state's expiry is kept.
+   *
+   * Plan: [[fold]] with one run — one pk shuffle of state and batch rows.
    */
   def mergeInto(
       state: DataFrame,
       batch: DataFrame,
       table: SinkTable,
       nullToUnset: Boolean = true): DataFrame = {
-
-    val pk = table.primaryKey
-    val wt = RecordMapper.WritetimeCol
-    val mode = RecordMapper.ModeCol
-
-    val batchCols = batch.columns.toSet
-    val mappedRegular = table.regularCols.filter(batchCols.contains)
-
-    // one surviving action per pk in the batch. Ties on __writetime break on
-    // the row's full value struct (column order fixed by name sort) — the
-    // analogue of Cassandra's cell-value reconciliation for equal timestamps;
-    // without it two same-pk-same-writetime rows would resolve by arbitrary
-    // max_by tie, i.e. partitioning-dependent output.
-    val tiebreak = orderableTiebreak(batch)
-    val compacted = lwwCompact(batch, pk, Seq(col(wt), tiebreak))
-
-    val s = state.alias("s")
-    val b = compacted.alias("b")
-    val joinCond = pk.map(k => col(s"s.$k") <=> col(s"b.$k")).reduce(_ && _)
-    val joined = s.join(b, joinCond, "full_outer")
-
-    val inBatch = col(s"b.$mode").isNotNull
-    val inState = col(s"s.$wt").isNotNull
-    val isDelete = inBatch && col(s"b.$mode") === RecordMapper.ModeDelete
-    val batchWins = !inState || (col(s"b.$wt") >= col(s"s.$wt"))
-
-    val pkCols = pk.map(k => coalesce(col(s"b.$k"), col(s"s.$k")).as(k))
-    val valueCols = table.regularCols.map { c =>
-      if (!mappedRegular.contains(c)) {
-        // column never mapped: always the state cell
-        (if (state.columns.contains(c)) col(s"s.$c") else lit(null)).as(c)
-      } else {
-        val sCell = if (state.columns.contains(c)) col(s"s.$c") else lit(null)
-        val bCell = col(s"b.$c")
-        val overwrite =
-          if (nullToUnset) inBatch && batchWins && bCell.isNotNull
-          else inBatch && batchWins
-        when(overwrite, bCell).otherwise(sCell).as(c)
-      }
-    }
-    val wtCol = greatest(
-      coalesce(col(s"b.$wt"), lit(Long.MinValue)),
-      coalesce(col(s"s.$wt"), lit(Long.MinValue))).as(wt)
-
-    // TTL → row expiry (reference G2): a winning batch row with a TTL sets
-    // expires = writetime(s) + ttl; without TTL it clears any expiry.
-    val ttlC = RecordMapper.TtlCol
-    val expC = RecordMapper.ExpiresCol
-    val expCols: Seq[Column] =
-      if (batchCols.contains(ttlC)) {
-        val sExp = if (state.columns.contains(expC)) col(s"s.$expC")
-          else lit(null).cast(LongType)
-        // TTL 0 = no expiry (Cassandra semantics; negative TTLs were already
-        // clamped to 0 by the codec, reference: WriteTimestampAndTtlCCMIT.java:159)
-        val bExp = when(col(s"b.$ttlC").isNotNull && col(s"b.$ttlC") > 0,
-          (col(s"b.$wt") / lit(1000000L)).cast(LongType) + col(s"b.$ttlC"))
-        Seq(when(inBatch && batchWins, bExp).otherwise(sExp).as(expC))
-      } else if (state.columns.contains(expC)) Seq(col(s"s.$expC").as(expC))
-      else Seq.empty
-
-    joined
-      .filter(!(isDelete && batchWins)) // tombstone removes the row
-      .filter(inState || !isDelete)     // delete of an absent row is a no-op
-      .select((pkCols ++ valueCols ++ (wtCol +: expCols)): _*)
+    val spec = Fold(table, nullToUnset, None,
+      withExpiry = state.columns.contains(RecordMapper.ExpiresCol) ||
+        batch.columns.contains(RecordMapper.TtlCol))
+    fold(stateRows(state, spec).union(writeRows(batch, spec, lit(1))), spec)
   }
 
   /**
@@ -203,21 +278,16 @@ object Upserts {
    * are never touched; a null/empty map contributes no actions. A null entry
    * VALUE is the removal marker when `nullToUnset = false` and a dropped
    * no-op when `nullToUnset = true` — mirroring [[mergeMapEntries]].
-   * Within-batch compaction keeps one surviving ACTION per pk (row grain)
-   * but map entries union across every upsert record of the batch (entry
-   * grain); a DELETE at wt T also covers map entries with wt <= T; empty
-   * maps normalize to null.
+   * Within-batch, one surviving ACTION per pk (row grain) but map entries
+   * union across every upsert record of the batch (entry grain); a DELETE
+   * at wt T also covers map entries with wt <= T; empty maps normalize to
+   * null.
    *
    * Output: pk + regular cols + per-cell `__wt_<col>` (per-entry
    * `__wtmap_<col>` for entry columns) + `__writetime` (= greatest live
    * cell or entry wt, for compatibility with row-level readers).
    * TTL/expiry is not modeled here (use [[mergeInto]] for row expiry).
-   * Same plan shape as [[mergeInto]]: one full-outer pk join, partial-agg
-   * compaction before it — cell wts add one long column per regular column.
-   * Each entry column adds one explode + per-entry partial-agg compaction +
-   * refold on the BATCH only, joined back on pk (state maps are never
-   * exploded — the entry reconciliation runs inside `map_zip_with`), so the
-   * extra work is O(batch entries), not O(state).
+   * Plan: [[fold]] with one run.
    */
   def mergeIntoCellWise(
       state: DataFrame,
@@ -225,131 +295,202 @@ object Upserts {
       table: SinkTable,
       nullToUnset: Boolean = true,
       entryCols: Seq[String] = Nil): DataFrame = {
+    val spec = Fold(table, nullToUnset, Some(entryCols), withExpiry = false)
+    fold(stateRows(state, spec).union(writeRows(batch, spec, lit(1))), spec)
+  }
 
-    val pk = table.primaryKey
-    val wt = RecordMapper.WritetimeCol
-    val mode = RecordMapper.ModeCol
-    def cellWt(c: String) = s"__wt_$c"
-    def wtMapCol(c: String) = s"__wtmap_$c"
+  /** Merge counter increments into state: state + increment, per key (a
+    * null counter counts as 0). [[fold]] with one run. */
+  def mergeCounters(state: DataFrame, increments: DataFrame, table: SinkTable): DataFrame = {
+    val spec = Fold(table, nullToUnset = true, None, withExpiry = false)
+    fold(stateRows(state, spec).union(writeRows(increments, spec, lit(1))), spec)
+  }
 
-    val batchCols = batch.columns.toSet
-    val scalarCols = table.regularCols.filterNot(entryCols.contains)
-    val mappedScalar = scalarCols.filter(batchCols.contains)
-    val mappedMap = entryCols.filter(batchCols.contains)
+  /** The per-key step of [[fold]], over one partition's rows sorted by
+    * (pk, run, writetime, tiebreak). Comparisons follow SQL: a null
+    * writetime makes a comparison unknown, and an unknown condition takes
+    * the not-overwrite branch. */
+  private final class Folder(spec: Fold) extends Serializable {
+    import org.apache.spark.sql.Row
+    import scala.collection.mutable
 
-    val tiebreak = orderableTiebreak(batch)
-    val rowWinner = lwwCompact(batch, pk, Seq(col(wt), tiebreak))
+    private val schema = spec.rowsSchema
+    private val width = spec.stateSchema.length
+    private val pkIdx = spec.table.primaryKey.map(schema.fieldIndex).toArray
+    private val wtIdx = schema.fieldIndex(RecordMapper.WritetimeCol)
+    private val modeIdx = schema.fieldIndex(RecordMapper.ModeCol)
+    private val ttlIdx = schema.fieldIndex(RecordMapper.TtlCol)
+    private val setIdx = schema.fieldIndex(SetCol)
+    private val runIdx = schema.fieldIndex(RunCol)
+    private val cellWise = spec.entryCols.isDefined
+    private val expIdx =
+      if (spec.withExpiry && !cellWise) schema.fieldIndex(RecordMapper.ExpiresCol) else -1
+    private val ttlBit = spec.table.regularCols.size
+    /** (position, `__set` bit, is a map-entry column) per regular column;
+      * in cell mode the cell's writetime (map) sits at position + 1. */
+    private val cells: Array[(Int, Int, Boolean)] =
+      spec.table.regularCols.zipWithIndex.map { case (c, bit) =>
+        (schema.fieldIndex(c), bit, spec.entryCols.exists(_.contains(c)))
+      }.toArray
 
-    // per entry column: explode upsert records' maps into entry actions,
-    // per-entry LWW compaction (partial-agg, map-side), refold to ONE
-    // struct-map per pk. Only the batch explodes — never state.
-    val combined = mappedMap.foldLeft(rowWinner) { (acc, m) =>
-      val ex = batch
-        .filter(col(mode) === RecordMapper.ModeUpsert && col(m).isNotNull)
-        .select((pk.map(col) ++ Seq(col(wt), tiebreak.as("__tb"),
-          explode(col(m)).as(Seq("__k", "__v")))): _*)
-      // nullToUnset: a null entry value is a no-op and must not shadow an
-      // older live write under the within-batch compaction
-      val pre = if (nullToUnset) ex.filter(col("__v").isNotNull) else ex
-      val bm = pre
-        .groupBy((pk :+ "__k").map(col): _*)
-        .agg(max_by(struct(col("__v").as("v"), col(wt).as("t")),
-          struct(col(wt), col("__tb"))).as("__e"))
-        .groupBy(pk.map(col): _*)
-        .agg(map_from_entries(collect_list(
-          struct(col("__k"), col("__e")))).as(s"__bm_$m"))
-      acc.join(bm, pk, "left")
+    private type Entries = mutable.LinkedHashMap[Any, (Any, java.lang.Long)]
+
+    def apply(it: Iterator[Row]): Iterator[Row] = {
+      val in = it.buffered
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap(foldKey)
     }
 
-    val s = state.alias("s")
-    val b = combined.alias("b")
-    val joinCond = pk.map(k => col(s"s.$k") <=> col(s"b.$k")).reduce(_ && _)
-    val joined = s.join(b, joinCond, "full_outer")
+    /** Null-safe primary-key equality (SQL's `<=>`). */
+    private def samePk(a: Row, b: Row): Boolean = pkIdx.forall { i =>
+      (a.get(i), b.get(i)) match {
+        case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+        case (x, y) => java.util.Objects.equals(x, y)
+      }
+    }
+    private def wtOf(r: Row): java.lang.Long = r.get(wtIdx).asInstanceOf[java.lang.Long]
+    private def orMin(x: java.lang.Long): Long = if (x == null) Long.MinValue else x
 
-    val inBatch = col(s"b.$mode").isNotNull
-    val isDelete = inBatch && col(s"b.$mode") === RecordMapper.ModeDelete
-
-    val pkCols = pk.map(k => coalesce(col(s"b.$k"), col(s"s.$k")).as(k))
-    val scalarOut: Seq[Column] = scalarCols.flatMap { c =>
-      val sCell = if (state.columns.contains(c)) col(s"s.$c")
-        else lit(null).cast(table.schema(c).dataType)
-      val sWt = if (state.columns.contains(cellWt(c))) col(s"s.${cellWt(c)}")
-        else lit(null).cast(LongType)
-      val survivesDelete = sWt.isNotNull && sWt > col(s"b.$wt")
-      val deleted = when(survivesDelete, sCell).otherwise(lit(null))
-      val deletedWt = when(survivesDelete, sWt).otherwise(lit(null).cast(LongType))
-      if (!mappedScalar.contains(c))
-        Seq(when(isDelete, deleted).otherwise(sCell).as(c),
-          when(isDelete, deletedWt).otherwise(sWt).as(cellWt(c)))
-      else {
-        val bCell = col(s"b.$c")
-        val cellWins = inBatch && !isDelete &&
-          (sWt.isNull || col(s"b.$wt") >= sWt)
-        val overwrite =
-          if (nullToUnset) cellWins && bCell.isNotNull else cellWins
-        Seq(
-          when(isDelete, deleted)
-            .otherwise(when(overwrite, bCell).otherwise(sCell)).as(c),
-          when(isDelete, deletedWt)
-            .otherwise(when(overwrite, col(s"b.$wt")).otherwise(sWt))
-            .as(cellWt(c)))
+    /** Consume one key's rows; its folded state row, if any survives. */
+    private def foldKey(in: BufferedIterator[Row]): Option[Row] = {
+      val key = in.head
+      var st: Array[Any] = null
+      while (in.hasNext && samePk(in.head, key)) {
+        val r = in.next()
+        if (r.isNullAt(setIdx)) st = Array.tabulate(width)(r.get)
+        else {
+          val run = mutable.ArrayBuffer(r)
+          while (in.hasNext && !in.head.isNullAt(setIdx) &&
+              in.head.getInt(runIdx) == r.getInt(runIdx) && samePk(in.head, key))
+            run += in.next()
+          st = if (cellWise) cellStep(st, run) else rowStep(st, run)
+        }
+      }
+      if (st == null) None
+      else if (!cellWise) {
+        st(wtIdx) = orMin(st(wtIdx).asInstanceOf[java.lang.Long])
+        Some(Row.fromSeq(st.toSeq))
+      } else Option(settle(st)).map { s =>
+        // the greatest live cell or entry writetime
+        val wts = cells.iterator.flatMap { case (i, _, entry) =>
+          if (entry) Option(s(i + 1).asInstanceOf[scala.collection.Map[Any, Any]])
+            .iterator.flatMap(_.values)
+          else Iterator(s(i + 1))
+        }.collect { case t: java.lang.Long => t.longValue }
+        s(wtIdx) = (wts ++ Iterator(Long.MinValue)).max
+        Row.fromSeq(s.toSeq)
       }
     }
 
-    // entry columns: entry reconciliation inside map_zip_with over the
-    // (value, writetime) struct-map view of state
-    val entryOut: Seq[Column] = entryCols.flatMap { m =>
-      val mt = table.schema(m).dataType.asInstanceOf[MapType]
-      val entryT = StructType(Seq(
-        StructField("v", mt.valueType), StructField("t", LongType)))
-      def emptyEntryMap: Column = map_from_arrays(
-        array().cast(ArrayType(mt.keyType)), array().cast(ArrayType(entryT)))
-      val sMap = if (state.columns.contains(m)) col(s"s.$m")
-        else lit(null).cast(MapType(mt.keyType, mt.valueType))
-      val sWtm = if (state.columns.contains(wtMapCol(m)))
-        col(s"s.${wtMapCol(m)}")
-      else lit(null).cast(MapType(mt.keyType, LongType))
-      val sStruct = coalesce(
-        map_zip_with(sMap, sWtm, (_, v, t) => struct(v.as("v"), t.as("t"))),
-        emptyEntryMap)
-      // a row tombstone at wt T covers entries with wt <= T
-      val covered = map_filter(sStruct, (_, e) => e.getField("t") > col(s"b.$wt"))
-      val out =
-        if (!mappedMap.contains(m)) when(isDelete, covered).otherwise(sStruct)
-        else {
-          val bmStruct = coalesce(col(s"b.__bm_$m"), emptyEntryMap)
-          val merged = map_zip_with(sStruct, bmStruct, (_, sv, bv) => {
-            val bWins = bv.isNotNull &&
-              (sv.isNull || bv.getField("t") >= sv.getField("t"))
-            when(bWins, bv).otherwise(sv)
-          })
-          // a winning null value (reachable only when !nullToUnset) is the
-          // removal marker; filtering it out IS the entry deletion
-          val upserted = map_filter(merged, (_, e) => e.getField("v").isNotNull)
-          when(isDelete, covered)
-            .otherwise(when(inBatch, upserted).otherwise(sStruct))
-        }
-      // an empty map is no live cells: normalize to null so row liveness
-      // (and readers) see one representation
-      val outOrNull = when(size(map_keys(out)) > 0, out)
-      Seq(
-        transform_values(outOrNull, (_, e) => e.getField("v")).as(m),
-        transform_values(outOrNull, (_, e) => e.getField("t")).as(wtMapCol(m)))
+    /** Row-level step: the run's winner against the folded row. */
+    private def rowStep(st: Array[Any], run: mutable.ArrayBuffer[Row]): Array[Any] = {
+      val w = run.last
+      val wWt = wtOf(w)
+      val sWt = if (st == null) null else st(wtIdx).asInstanceOf[java.lang.Long]
+      val inBatch = !w.isNullAt(modeIdx)
+      // a row without a writetime is not "in state": any write wins
+      val wins: Option[Boolean] =
+        if (sWt == null) Some(true) else Option(wWt).map(_.longValue >= sWt.longValue)
+      if (inBatch && w.getString(modeIdx) == RecordMapper.ModeDelete &&
+          !wins.contains(false)) return null
+      val out = if (st == null) new Array[Any](width) else st.clone()
+      pkIdx.foreach(i => out(i) = w.get(i))
+      val overwrite = inBatch && wins.contains(true)
+      val set = w.getString(setIdx)
+      if (overwrite) cells.foreach { case (i, bit, _) =>
+        if (set.charAt(bit) == '1' && !(spec.nullToUnset && w.isNullAt(i)))
+          out(i) = w.get(i)
+      }
+      out(wtIdx) = math.max(orMin(wWt), orMin(sWt))
+      if (expIdx >= 0 && overwrite && set.charAt(ttlBit) == '1') {
+        val ttl = w.get(ttlIdx).asInstanceOf[java.lang.Long]
+        out(expIdx) =
+          if (ttl == null || ttl <= 0 || wWt == null) null
+          else java.lang.Long.valueOf((wWt.toDouble / 1000000L).toLong + ttl)
+      }
+      out
     }
 
-    val liveWts: Seq[Column] =
-      scalarCols.map(c => col(cellWt(c))) ++
-        entryCols.map(m => array_max(map_values(col(wtMapCol(m)))))
-    val anyCellLive = table.regularCols.map(c => col(c).isNotNull)
-      .reduceOption(_ || _).getOrElse(lit(true))
+    /** Cell-level step: each cell (and map entry) against its own
+      * writetime; null when no cell survives. */
+    private def cellStep(st: Array[Any], run: mutable.ArrayBuffer[Row]): Array[Any] = {
+      val w = run.last
+      val wWt = wtOf(w)
+      val inBatch = !w.isNullAt(modeIdx)
+      val isDelete = inBatch && w.getString(modeIdx) == RecordMapper.ModeDelete
+      val set = w.getString(setIdx)
+      def newer(a: java.lang.Long, b: java.lang.Long) =
+        a != null && b != null && a.longValue > b.longValue
+      val out = if (st == null) new Array[Any](width) else st.clone()
+      pkIdx.foreach(i => out(i) = w.get(i))
+      cells.foreach { case (i, bit, entry) =>
+        val mapped = inBatch && set.charAt(bit) == '1'
+        if (!entry) {
+          val sWt = out(i + 1).asInstanceOf[java.lang.Long]
+          if (isDelete) {
+            if (!newer(sWt, wWt)) { out(i) = null; out(i + 1) = null }
+          } else if (mapped && (sWt == null || (wWt != null && wWt >= sWt)) &&
+              !(spec.nullToUnset && w.isNullAt(i))) {
+            out(i) = w.get(i); out(i + 1) = wWt
+          }
+        } else {
+          val sv = entriesOf(out(i), out(i + 1))
+          val res =
+            if (isDelete) sv.filter { case (_, (_, t)) => newer(t, wWt) }
+            else if (!mapped) sv
+            else {
+              // the run's entry actions: per entry, its newest upsert wins
+              val bm: Entries = mutable.LinkedHashMap()
+              run.foreach { r =>
+                if (r.getString(modeIdx) == RecordMapper.ModeUpsert && !r.isNullAt(i))
+                  r.getMap[Any, Any](i).foreach { case (k, v) =>
+                    if (!(spec.nullToUnset && v == null)) bm(k) = (v, wtOf(r))
+                  }
+              }
+              val merged: Entries = sv.clone()
+              bm.foreach { case (k, b) =>
+                val bWins = sv.get(k).forall { s =>
+                  b._2 != null && s._2 != null && b._2 >= s._2 }
+                if (bWins) merged(k) = b
+              }
+              // a winning null value (reachable only when !nullToUnset) is
+              // the removal marker
+              merged.filter(_._2._1 != null)
+            }
+          putEntries(out, i, res)
+        }
+      }
+      settle(out)
+    }
 
-    joined
-      .select((pkCols ++ scalarOut ++ entryOut): _*)
-      // a row whose cells are all gone (full tombstone coverage, or a delete
-      // of an absent row) disappears
-      .filter(anyCellLive)
-      .withColumn(wt, greatest(
-        (liveWts :+ lit(Long.MinValue).cast(LongType)): _*))
+    /** A map column and its writetime map as entries, zipped by key (either
+      * one null: no entries). */
+    private def entriesOf(values: Any, wts: Any): Entries = {
+      val out: Entries = mutable.LinkedHashMap()
+      (values, wts) match {
+        case (v: scala.collection.Map[Any, Any] @unchecked,
+            t: scala.collection.Map[Any, java.lang.Long] @unchecked) =>
+          v.foreach { case (k, x) => out(k) = (x, t.getOrElse(k, null)) }
+          t.foreach { case (k, x) => if (!v.contains(k)) out(k) = (null, x) }
+        case _ =>
+      }
+      out
+    }
+
+    /** Store entries back; no entries is no cell (null, null). */
+    private def putEntries(out: Array[Any], i: Int, es: Entries): Unit =
+      if (es.isEmpty) { out(i) = null; out(i + 1) = null }
+      else {
+        out(i) = es.map { case (k, (v, _)) => k -> v }.toMap
+        out(i + 1) = es.map { case (k, (_, t)) => k -> t }.toMap
+      }
+
+    /** Normalize entry columns; null when no cell is live. */
+    private def settle(out: Array[Any]): Array[Any] = {
+      cells.foreach { case (i, _, entry) =>
+        if (entry) putEntries(out, i, entriesOf(out(i), out(i + 1))) }
+      if (cells.isEmpty || cells.exists { case (i, _, _) => out(i) != null }) out
+      else null
+    }
   }
 
   /**
@@ -450,19 +591,6 @@ object Upserts {
         transform_values(col("__kept"), (_, e) => e.getField("t")).as(wtMapCol),
         array_max(map_values(transform_values(col("__kept"),
           (_, e) => e.getField("t")))).as(wt))): _*)
-  }
-
-  /** Merge counter increments into state: state + increment, per key. */
-  def mergeCounters(state: DataFrame, increments: DataFrame, table: SinkTable): DataFrame = {
-    val pk = table.primaryKey
-    val s = state.alias("s")
-    val b = increments.alias("b")
-    val joinCond = pk.map(k => col(s"s.$k") <=> col(s"b.$k")).reduce(_ && _)
-    val pkCols = pk.map(k => coalesce(col(s"b.$k"), col(s"s.$k")).as(k))
-    val counters = table.counterCols.map { c =>
-      (coalesce(col(s"s.$c"), lit(0L)) + coalesce(col(s"b.$c"), lit(0L))).as(c)
-    }
-    s.join(b, joinCond, "full_outer").select((pkCols ++ counters): _*)
   }
 
   /**

@@ -1,11 +1,13 @@
 package graft.sink
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.operators.{RecordMapper, Upserts}
 
@@ -16,22 +18,48 @@ import graft.operators.{RecordMapper, Upserts}
  * harness (the real deployment swaps this for the Cassandra connector's
  * writer — the merge algebra in [[Upserts]] is identical).
  *
- * State is HASH-BUCKETED by primary key into `numBuckets` buckets, with a
- * manifest (`CURRENT`) mapping each bucket to the state version that owns
- * it. A micro-batch merges ONLY the buckets its keys touch:
+ * The store is APPEND-ONLY with merge-on-read, the log-structured shape
+ * Cassandra itself has: a write never reads state. Rows are hash-bucketed
+ * by primary key into `numBuckets` buckets, and every version directory
+ * `v<N>/` holds one `__bucket=<k>/` directory per bucket it wrote. The
+ * manifest (`CURRENT`) maps each bucket to its BASE version; the bucket's
+ * RUNS are the versions in (base, maxV] that hold the bucket and a
+ * `_SUCCESS` marker.
  *
- *   - the batch's bucket set is computed from the pk hash;
- *   - touched buckets' state is read with a partition filter on the bucket
- *     column (partition-pruned — untouched buckets are never scanned);
- *   - one co-partitioned merge job writes the new bucket partitions to
- *     `v<N+1>/__bucket=<k>/`; the manifest flips touched pointers to N+1 and
- *     leaves untouched buckets on their old versions.
+ *  - '''Write.''' [[applyBatch]] writes the mapped batch as one new run
+ *    `v<N>/`: its raw rows with `__mode`, `__writetime`, `__ttl_seconds`
+ *    and the cells it carries, in one map-only job. Then it flips the
+ *    manifest. A batch's cost tracks the batch, not the state.
+ *  - '''Read.''' [[state]] and [[stateForBuckets]] fold each bucket's base
+ *    and runs with the mode's merge ([[Upserts.fold]]): one pk shuffle
+ *    however many runs there are, equal to merging the runs one batch at a
+ *    time, oldest first.
+ *  - '''Compaction''' is derived from the data. Once a bucket's run bytes
+ *    exceed its base bytes, the batch that tipped it folds base and runs
+ *    into a new base, written into that batch's own version directory in
+ *    place of its run. That batch pays for a compaction job anyway, so
+ *    every other bucket it lands in whose runs exceed half its base folds
+ *    in the same job: hash buckets fill at the same pace, and without this
+ *    the few a little behind would each cost a second compaction batch
+ *    right after the first. A base grows by at least half at each
+ *    compaction, so a row is rewritten O(log n) times, and the bytes on
+ *    disk stay within about twice the folded state plus one batch. A
+ *    bucket also compacts once it holds `numBuckets` runs, so a read scans
+ *    at most `numBuckets` runs however long the stream has run.
+ *  - '''Direct fold.''' When a batch is known to compact before it is
+ *    written, it skips the run: base, runs and the batch fold in one job
+ *    into new bases for every bucket. That is the case for a batch into an
+ *    empty table, a batch with `retain` (its folded rows failing the
+ *    predicate are dropped), a bucket at the run bound, and a batch
+ *    predicted to outweigh a bucket's base and runs together (hot keys).
+ *    The prediction is the heavier of the last two batches (rows, times
+ *    the last run's bytes per row). Folding such a batch directly costs
+ *    about what its run write would, since the state is the lighter side;
+ *    a heavier state writes the run, and a wrong guess then costs at most
+ *    one run write and read. [[sweep]] compacts every bucket.
  *
- * Per-batch cost is O(touched state), not O(total state) — the round-1
- * full-table read-merge-write rewrite is gone. This is the same
- * manifest-of-bucket-snapshots shape a table format uses at 100 TB; the
- * number of live versions is bounded by `numBuckets` and [[vacuum]] drops
- * unreferenced ones.
+ * A crash before the flip leaves only versions above maxV, which every
+ * reader ignores, the replayed batch overwrites and [[vacuum]] deletes.
  */
 class KeyedParquetTable(
     spark: SparkSession,
@@ -42,12 +70,11 @@ class KeyedParquetTable(
     /** Parquet codec for state files (X2 `compression` mapped via
       * `SinkConfig.Config.parquetCodec`). */
     compression: String = "snappy",
-    /** Cap on concurrent write tasks per merge job — the Spark analogue of
+    /** Cap on concurrent write tasks per write job — the Spark analogue of
       * the reference's `maxConcurrentRequests` in-flight-writes throttle
       * (KAF-60), wired from `SinkConfig` by `SinkPipeline.store`. Applied
-      * as a `coalesce` on the merged frame right before the state write,
-      * so a bucket-version write never runs more than this many parallel
-      * tasks. The default is effectively "no cap" for any sane local or
+      * as a `coalesce` right before every run or compaction write, so a
+      * version write never runs more than this many parallel tasks. The default is effectively "no cap" for any sane local or
       * cluster parallelism. */
     maxWriteTasks: Int = Int.MaxValue,
     /** `row`: one writetime per row ([[Upserts.mergeInto]]); `cell`:
@@ -150,195 +177,230 @@ class KeyedParquetTable(
   def lastAppliedBatchId: Long = currentMeta.lastFor(DefaultBinding)
   def lastAppliedBatchId(binding: String): Long = currentMeta.lastFor(binding)
 
-  private def emptyState: DataFrame = {
-    val base = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), table.schema)
-    if (table.counterCols.nonEmpty) base
-    else base.withColumn(RecordMapper.WritetimeCol, lit(null).cast(LongType))
+
+  /** The merge this table folds with. Row-level state always carries
+    * `__expires_s`: a pipeline batch always carries `__ttl_seconds`. */
+  private val spec = Upserts.Fold(table, nullToUnset,
+    entryCols = mergeMode match {
+      case "row"   => None
+      case "cell"  => Some(Nil)
+      case _       => Some(table.mapCols)
+    },
+    withExpiry = true)
+
+  /** Every version file holds fold rows — a run's write rows (whose
+    * state-only columns read as null), or a base's state rows (whose write
+    * columns read as null) — without their run, which is the version the
+    * file sits in. */
+  private val fileSchema =
+    org.apache.spark.sql.types.StructType(spec.rowsSchema.filterNot(_.name == Upserts.RunCol))
+
+  private val VersionDir = "v(\\d+)".r
+  private def versionDir(v: Int): Path = rootPath.resolve(s"v$v")
+  private def leaf(v: Int, k: Int): Path = versionDir(v).resolve(s"$BucketCol=$k")
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.sorted(java.util.Comparator.reverseOrder()).forEach(x => Files.deleteIfExists(x))
+      finally st.close()
+    }
+
+  private def list(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.toVector finally ls.close()
   }
 
-  /** Read the state of `wanted` buckets (None = all) as ONE parquet read
-    * over the exact `v<N>/__bucket=<k>` leaf directories the manifest maps
-    * them to. The previous shape issued one `spark.read.parquet(v<N>)` per
-    * DISTINCT OWNING VERSION (filter on the bucket partition, then union):
-    * after numBuckets batches the owners spread over up to numBuckets
-    * versions, so every state read paid O(versions) driver-side listings +
-    * footer schema inferences + an O(versions)-way union in the plan —
-    * measured ~300-500 ms of the sink_stream per-batch `merge_write`/`dedup`
-    * phases at steady state (guide §6 file listing, §7.3 driver-side work).
-    * Reading the leaf dirs directly needs no partition discovery, no bucket
-    * filter (each dir IS one wanted bucket), one listing, one scan node.
-    * A pointed-to leaf dir can be missing only for a version written by the
-    * rare all-rows-deleted branch (schema-only, zero bucket dirs) — that
-    * bucket's state is empty, so skipping the missing dir is the same
-    * answer the old filter-based read produced. */
-  private def readBuckets(m: Meta, wanted: Option[Set[Int]]): DataFrame = {
-    val picked = wanted match {
-      case Some(w) => m.buckets.view.filterKeys(w.contains).toMap
-      case None    => m.buckets
-    }
-    val (present, missing) = picked.toSeq.sorted.map { case (b, v) =>
-      rootPath.resolve(s"v$v").resolve(s"$BucketCol=$b")
-    }.partition(Files.exists(_))
-    // A manifest-referenced leaf dir is legitimately absent when its
-    // version's write COMPLETED but emitted zero rows for that bucket (a
-    // merge/sweep whose retain/tombstones deleted the bucket's every row
-    // still flips the bucket's pointer; the schema-only all-rows-deleted
-    // version is the all-buckets case of the same shape) — that bucket's
-    // state is empty, the same answer the old filter-based read produced.
-    // Any OTHER absence (a reader racing vacuum() — which removes whole
-    // v<N> trees, never single bucket dirs — partial deletion, corruption)
-    // previously read as silently EMPTY state, and a subsequent merge
-    // would have persisted that loss as the new version (ADVICE r11 #1):
-    // verify the completed-version shape or fail loudly.
-    missing.foreach { leaf =>
-      val vDir = leaf.getParent
-      val benign = Files.exists(vDir) &&
-        Files.exists(vDir.resolve("_SUCCESS"))
-      require(benign,
-        s"state bucket dir $leaf is referenced by the manifest but its " +
-          "version dir is missing or incomplete — refusing to read the " +
-          "bucket as empty (concurrent vacuum / partial delete / " +
-          "corruption); re-open the table or restore the version dir")
-    }
-    val leafDirs = present.map(_.toString)
-    if (leafDirs.isEmpty) emptyState
-    else stateSchema match {
-      // explicit schema: no per-read footer schema inference, and any
-      // cross-version column drift reconciles EXACTLY as the merge
-      // expects (absent columns null — e.g. pre-TTL versions read with a
-      // later __expires_s schema) instead of depending on which file's
-      // footer the inference happened to pick (ADVICE r11 #2)
-      case Some(sch) => spark.read.schema(sch).parquet(leafDirs: _*)
-      case None =>
-        // no write this session yet: union-schema inference across the
-        // read versions (late-appearing columns — __expires_s — reconcile
-        // correctly even when the newest footer predates them; truly
-        // incompatible drift fails loudly instead of silently picking one
-        // footer). NOT pinned — a touched-buckets read may not see every
-        // version; the first write pins the authoritative schema.
-        spark.read.option("mergeSchema", "true").parquet(leafDirs: _*)
-    }
+  /** Bucket → data bytes (checksums and markers excluded) of one version
+    * directory; empty when it has no `_SUCCESS`, i.e. never completed. */
+  private def bucketBytes(v: Int): Map[Int, Long] =
+    if (!Files.exists(versionDir(v).resolve("_SUCCESS"))) Map.empty
+    else list(versionDir(v)).map(_.getFileName.toString)
+      .filter(_.startsWith(s"$BucketCol=")).map { n =>
+        n.stripPrefix(s"$BucketCol=").toInt -> list(versionDir(v).resolve(n))
+          .filter { f =>
+            val name = f.getFileName.toString
+            !name.startsWith(".") && !name.startsWith("_")
+          }.map(Files.size).sum
+      }.toMap
+
+  /** [[bucketBytes]] of committed versions (≤ maxV), which never change. */
+  private val committed = TrieMap[Int, Map[Int, Long]]()
+
+  /** The root as of manifest `m`: the version directories present, and the
+    * buckets held by each completed version up to `upTo`. */
+  private case class Disk(m: Meta, present: Seq[Int],
+      held: Map[Int, Map[Int, Long]]) {
+    def base(k: Int): Int = m.buckets.getOrElse(k, 0)
+    /** Versions in (base(k), upTo] holding bucket k, oldest first. */
+    def runs(k: Int): Seq[Int] =
+      held.toSeq.collect { case (v, bs) if v > base(k) && bs.contains(k) => v }.sorted
+    def runBytes(k: Int): Long = runs(k).map(held(_)(k)).sum
+    def baseBytes(k: Int): Long = held.get(base(k)).flatMap(_.get(k)).getOrElse(0L)
+    /** Buckets with a base or a run. */
+    def buckets: Set[Int] = m.buckets.keySet ++
+      held.flatMap { case (v, bs) => bs.keys.filter(v > base(_)) }
+    /** Versions that are a base or a run of some bucket. */
+    def live: Set[Int] = m.buckets.values.toSet ++
+      held.collect { case (v, bs) if bs.keys.exists(v > base(_)) => v }
   }
 
-  /** The state files' schema, pinned after the first inference and kept in
-    * step with every write — saves one driver-side footer inference per
-    * state read, and makes multi-version reads reconcile schema drift
-    * deterministically (all fields nullable: older versions may predate a
-    * column, e.g. `__expires_s` appearing with the first TTL'd batch). */
-  @volatile private var stateSchema
-      : Option[org.apache.spark.sql.types.StructType] = None
-
-  private def asNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case st: StructType => StructType(st.fields.map(f =>
-        f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case at: ArrayType =>
-        ArrayType(asNullable(at.elementType), containsNull = true)
-      case mt: MapType => MapType(asNullable(mt.keyType),
-        asNullable(mt.valueType), valueContainsNull = true)
-      case other => other
-    }
+  /** One listing of the root, plus one of each version not yet cached. */
+  private def disk(m: Meta, upTo: Int): Disk = {
+    val present = list(rootPath).map(_.getFileName.toString)
+      .collect { case VersionDir(n) => n.toInt }
+    Disk(m, present, present.filter(_ <= upTo).map { v =>
+      v -> (if (v <= m.maxV) committed.getOrElseUpdate(v, bucketBytes(v))
+        else bucketBytes(v))
+    }.toMap)
   }
 
-  /** Current full state; empty frame with the right schema before any write. */
-  def state(): DataFrame = readBuckets(currentMeta, None)
+  /** The fold rows of `wanted` buckets (None = every bucket): one scan per
+    * version holding a wanted bucket's base or run, over exactly those
+    * `__bucket=<k>` directories (at most numBuckets paths, so a per-batch
+    * lookup stays under Spark's parallel-listing threshold), its rows
+    * tagged with the version as their run. The explicit schema costs no
+    * footer inference. A live version can still hold a bucket compacted
+    * since; reading leaf directories never touches it.
+    *
+    * A base whose bucket directory is missing reads as an empty bucket only
+    * when its version completed (`_SUCCESS`: a compaction that kept no row
+    * of the bucket). Any other absence — a reader racing [[vacuum]], a
+    * partial delete, corruption — fails loudly: read as empty, the next
+    * compaction would persist the loss. */
+  private def readRows(d: Disk, wanted: Option[Set[Int]]): DataFrame = {
+    val ks = wanted.getOrElse(d.buckets).toSeq.sorted
+    val bases = ks.flatMap { k =>
+      d.m.buckets.get(k).filter { v =>
+        val present = Files.exists(leaf(v, k))
+        require(present || Files.exists(versionDir(v).resolve("_SUCCESS")),
+          s"state bucket dir ${leaf(v, k)} is referenced by the manifest but " +
+            "its version dir is missing or incomplete — refusing to read the " +
+            "bucket as empty (concurrent vacuum / partial delete / " +
+            "corruption); re-open the table or restore the version dir")
+        present
+      }.map(_ -> k)
+    }
+    val scans = (bases ++ ks.flatMap(k => d.runs(k).map(_ -> k)))
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (v, vks) =>
+        spark.read.schema(fileSchema)
+          .parquet(vks.map(vk => leaf(v, vk._2).toString): _*)
+          .withColumn(Upserts.RunCol, lit(v))
+      }
+    if (scans.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        spec.rowsSchema)
+    else scans.reduce(_ union _)
+  }
 
-  /** State restricted to the buckets touched by `keys`' primary-key values —
-    * the partition-pruned read for point-lookup joins (a batch-vs-state
-    * anti-join reads O(touched buckets), not O(total state)). `keys` must
-    * carry the table's pk columns; the bucket collect is ≤ numBuckets rows. */
-  def stateForKeys(keys: DataFrame): DataFrame =
-    readBuckets(currentMeta, Some(touchedBuckets(keys)))
+  /** Current full state, folded; empty with the fold's columns before any
+    * write. */
+  def state(): DataFrame = {
+    val m = currentMeta
+    Upserts.fold(readRows(disk(m, m.maxV), None), spec)
+  }
 
   /** The bucket set `keys`' primary-key values hash into — ≤ numBuckets
-    * rows collected. Callers that later merge the SAME key set back (the
-    * dedup sightings commit) pass the set to [[applyBatch]]'s
-    * `knownTouched` so the merge skips its own identical collect job. */
+    * rows collected; what [[stateForBuckets]] and [[unfoldedForBuckets]]
+    * prune to. */
   def touchedBuckets(keys: DataFrame): Set[Int] =
     keys.select(bucketOf.as(BucketCol)).distinct()
       .collect().map(_.getInt(0)).toSet
 
-  /** Partition-pruned state read for an already-computed bucket set. */
-  def stateForBuckets(touched: Set[Int]): DataFrame =
-    readBuckets(currentMeta, Some(touched))
+  /** Folded state of an already-computed bucket set (partition-pruned). */
+  def stateForBuckets(touched: Set[Int]): DataFrame = {
+    val m = currentMeta
+    Upserts.fold(readRows(disk(m, m.maxV), Some(touched)), spec)
+  }
 
-  /** Rewrite EVERY bucket keeping only rows satisfying `keep` — the physical
-    * expiry hook for TTL'd state (the merge-time `retain` prune in
-    * [[applyBatch]] only rewrites the buckets a batch touches; sweep bounds
-    * the rest). One read + one write of live state; intended for a periodic
-    * maintenance call, not the per-batch path. Serialized against
-    * [[applyBatch]] (both are manifest read-modify-writes: an interleaving
-    * would have two writers race the same `v<N+1>` directory and the loser's
-    * bucket pointers silently vanish from the manifest — e.g. a maintenance
-    * vacuum timer firing mid-merge). Single-JVM lock: the driver is the only
-    * manifest writer, as in any single-writer table format. */
+  /** Every row the `touched` buckets' bases and runs hold, NOT folded, in
+    * the table's columns: a key appears once per run that wrote it, and a
+    * delete reads like any other row. Existence here equals existence in
+    * [[state]] only for a store whose rows are never deleted — the dedup
+    * seen-stores, whose per-batch lookup therefore needs no fold. */
+  def unfoldedForBuckets(touched: Set[Int]): DataFrame = {
+    val m = currentMeta
+    readRows(disk(m, m.maxV), Some(touched))
+      .select(table.schema.fieldNames.toIndexedSeq.map(col): _*)
+  }
+
   /** maxConcurrentRequests analogue: cap the write job's task parallelism.
     * `coalesce(n)` is a no-op when the frame already has ≤ n partitions,
     * so the default cap never touches the plan. */
   private def capWrite(df: DataFrame): DataFrame =
     if (maxWriteTasks == Int.MaxValue) df else df.coalesce(maxWriteTasks)
 
+  /** Compact EVERY bucket, keeping only folded rows satisfying `keep` — the
+    * physical expiry hook for TTL'd state that no `retain` batch writes to
+    * any more (a `retain` batch folds every bucket). One read + one write
+    * of live state; intended for a periodic maintenance call, not the
+    * per-batch path. Serialized against [[applyBatch]] (both are manifest
+    * read-modify-writes: an interleaving would have two writers race the
+    * same `v<N+1>` directory and the loser's bucket pointers silently
+    * vanish from the manifest — e.g. a maintenance vacuum timer firing
+    * mid-merge). Single-JVM lock: the driver is the only manifest writer,
+    * as in any single-writer table format. */
   def sweep(keep: Column): Unit = synchronized {
     val m = currentMeta
-    if (m.buckets.isEmpty) return
-    val kept = readBuckets(m, None).filter(keep)
+    val d = disk(m, m.maxV)
+    if (d.buckets.isEmpty) return
     val v = m.maxV + 1
-    val out = capWrite(kept.withColumn(BucketCol, bucketOf))
-    writeVersion(out, v)
-    writeMeta(Meta(m.lastBatch, v, m.buckets.keys.map(_ -> v).toMap))
+    deleteTree(versionDir(v)) // a crashed write's leftover
+    compact(d, d.buckets, v, Some(keep))
+    writeMeta(m.copy(maxV = v, buckets = m.buckets ++ d.buckets.map(_ -> v)))
     vacuum()
   }
 
-  /** Write one state version. The happy path is a single partitioned write
-    * job; only the rare all-rows-deleted outcome (the partitioned write
-    * produced ZERO bucket directories, whose version dir a later read could
-    * not even schema-infer) pays a second, trivial job to stamp a
-    * schema-only file. The previous shape ran `out.isEmpty` FIRST, which
-    * executed the whole upstream merge plan once for the check and again
-    * for the write — the bench's sink_stream spent ~45% of its per-batch
-    * `write` phase in that duplicate execution (guide §1.2: don't compute
-    * things you throw away). */
-  private def writeVersion(out: DataFrame, v: Int): Unit = {
-    val dir = rootPath.resolve(s"v$v")
-    out.write.mode("overwrite").option("compression", compression)
+  /** Write `df` partitioned by bucket under `dir`, replacing whatever a
+    * crashed attempt left there. */
+  private def writeBuckets(df: DataFrame, dir: Path): Unit =
+    capWrite(df.withColumn(BucketCol, bucketOf))
+      .write.mode("overwrite").option("compression", compression)
       .partitionBy(BucketCol).parquet(dir.toString)
-    // the newest version's layout IS the state schema from here on (leaf-dir
-    // reads never see the partition column); older versions' files may lack
-    // late-appearing columns — read as null, which is what the merge expects
-    stateSchema = Some(asNullable(org.apache.spark.sql.types.StructType(
-      out.schema.filterNot(_.name == BucketCol)))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val hasBucketDirs = {
-      val ls = Files.list(dir)
-      try ls.anyMatch(p => p.getFileName.toString.startsWith(s"$BucketCol="))
-      finally ls.close()
-    }
-    if (!hasBucketDirs)
-      // schema-only version (BucketCol as a plain column, zero rows) —
-      // exactly the shape the old isEmpty branch wrote
-      out.limit(0).write.mode("overwrite").option("compression", compression)
-        .parquet(dir.toString)
+
+  /** Mark `v<v>/` complete, also when no bucket directory was written. */
+  private def markDone(v: Int): Unit = {
+    Files.createDirectories(versionDir(v))
+    val done = versionDir(v).resolve("_SUCCESS")
+    if (!Files.exists(done)) Files.createFile(done)
   }
 
-  /** Drop version directories no longer referenced by any bucket pointer
-    * (bounded disk; the manifest always stays valid). `_SUCCESS` goes
-    * first: a reader holding a stale manifest that races the deletion then
-    * fails [[readBuckets]]' completed-version check instead of reading an
-    * already-deleted bucket leaf as empty state. */
-  def vacuum(): Unit = {
-    val m = currentMeta
-    val live = m.buckets.values.toSet
-    (1 to m.maxV).filterNot(live.contains).foreach { old =>
-      val dir = rootPath.resolve(s"v$old")
-      if (Files.exists(dir)) {
-        Files.deleteIfExists(dir.resolve("_SUCCESS"))
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+  /** Fold buckets `ks` (base + runs up to `v`) into new bases that take the
+    * place of their directories in `v<v>/`: written to `_compact/` first,
+    * then swapped in one bucket directory at a time. `v` is above the
+    * manifest's maxV until the caller flips it, so no reader sees a
+    * half-swapped version. */
+  private def compact(d: Disk, ks: Set[Int], v: Int, keep: Option[Column]): Unit = {
+    val folded = Upserts.fold(readRows(d, Some(ks)), spec)
+    val tmp = rootPath.resolve("_compact")
+    writeBuckets(keep.map(folded.filter).getOrElse(folded), tmp)
+    Files.createDirectories(versionDir(v))
+    ks.foreach { k =>
+      deleteTree(leaf(v, k))
+      val out = tmp.resolve(s"$BucketCol=$k")
+      if (Files.exists(out)) Files.move(out, leaf(v, k), StandardCopyOption.ATOMIC_MOVE)
     }
+    markDone(v)
+    deleteTree(tmp)
+  }
+
+  /** Delete every version directory that is neither a base nor a run of any
+    * bucket — superseded bases and runs, runs that landed no row, anything
+    * above maxV (a write that crashed before its flip) — and a leftover
+    * `_compact/`. One listing of the root. `_SUCCESS` goes first: a reader
+    * holding a stale manifest that races the deletion then fails
+    * [[readRows]]' completed-version check instead of reading an
+    * already-deleted bucket as empty state. */
+  def vacuum(): Unit = synchronized {
+    val m = currentMeta
+    val d = disk(m, m.maxV)
+    val live = d.live
+    d.present.filterNot(live).foreach { v =>
+      Files.deleteIfExists(versionDir(v).resolve("_SUCCESS"))
+      deleteTree(versionDir(v))
+      committed.remove(v)
+    }
+    deleteTree(rootPath.resolve("_compact"))
   }
 
   /** Rows visible at `nowSec` — TTL'd rows past their expiry are gone
@@ -352,23 +414,21 @@ class KeyedParquetTable(
   }
 
   /** Apply one routed, mapped micro-batch (columns: mapped table cols +
-    * __mode + __writetime [+ __ttl_seconds]). A batchId ≤ the last applied
-    * one FOR THIS BINDING is a replay — skipped, exactly-once. Bindings that
-    * fan into the same table pass distinct `binding` keys so each one's
-    * merge of a batch is tracked independently.
+    * __mode + __writetime [+ __ttl_seconds]) by appending it as one run —
+    * no state is read, and the batch is consumed by exactly one job, the
+    * run write — or, when the batch compacts for certain, by folding it
+    * with the state in that one job instead (see the class doc). A batchId
+    * ≤ the last applied one FOR THIS BINDING is a replay — skipped,
+    * exactly-once. Bindings that fan into the same table pass distinct
+    * `binding` keys so each one's batch is tracked independently.
     *
-    * `retain`: rows of the MERGED touched buckets failing this predicate are
-    * dropped before the write — TTL'd state (e.g. the dedup seen-hash store)
-    * expires physically during the merge it was already paying for, zero
-    * extra passes. Untouched buckets keep their expired rows until the next
-    * batch lands in them or [[sweep]] runs. */
-  /** `knownTouched`: the batch's bucket set when the CALLER already
-    * collected it (the dedup sightings merge re-uses the set its state
-    * lookup computed over the same keys) — the merge then runs ONE Spark
-    * job (the write) instead of two, and skips the batch persist whose only
-    * point was sharing work between those jobs (guide §1.2). The set must
-    * cover every bucket the batch's keys hash into; a superset only
-    * rewrites the extra buckets' state unchanged. */
+    * Every bucket the run lands in whose run bytes now exceed its base
+    * bytes is compacted in the same call. `retain`: the batch folds every
+    * bucket, and folded rows failing the predicate are dropped — TTL'd
+    * state (e.g. the dedup seen-hash store) expires physically at every
+    * batch that writes to it.
+    *
+    * `knownTouched` is ignored: neither write needs a bucket set. */
   def applyBatch(batch: DataFrame, batchId: Long = Long.MinValue,
       binding: String = DefaultBinding,
       retain: Option[Column] = None,
@@ -382,82 +442,82 @@ class KeyedParquetTable(
       }
     }
     try KeyedParquetTable.withMicroBatchSplits(spark) {
-      applyBatchTimed(batch, batchId, binding, retain, knownTouched, timed)
+      applyBatchTimed(batch, batchId, binding, retain, timed)
     } finally lastApplyPhaseMs = phases.toMap
   }
 
-  /** Wall ms of the last [[applyBatch]]'s internal stages (`collect` =
-    * touched-bucket materialization job; `merge_write` = merge plan + state
-    * write job; `meta` = manifest flip + vacuum; `unpersist` = blocking
-    * batch-cache drop) — the per-batch `write` phase of a long stream was a
-    * single opaque number (OPTIMIZATION_r11 "Not yet optimized" #1) and the
-    * next cut needed to know which job inside it pays. Plain bookkeeping. */
+  /** Wall ms of the last [[applyBatch]]'s internal stages (`merge_write` =
+    * the run write, any compaction, or the direct fold; `meta` = manifest
+    * flip + vacuum).
+    * Plain bookkeeping. */
   @volatile var lastApplyPhaseMs: Map[String, Long] = Map.empty
+
+  /** What the next batch is predicted to weigh: the heavier of the last two
+    * batches (their rows), at the last run's bytes per row in each bucket.
+    * A load into an empty table is not counted: it says nothing about the
+    * stream's batches. */
+  private var lastRun: (Map[Int, Long], Long) = (Map.empty, 0L)
+  private var recentRows: (Long, Long) = (0L, 0L)
+  private def observed(rows: Long): Unit = recentRows = (recentRows._2, rows)
+  private def predictedBytes(k: Int): Double =
+    if (lastRun._2 <= 0) 0.0
+    else lastRun._1.getOrElse(k, 0L).toDouble *
+      math.max(recentRows._1, recentRows._2) / lastRun._2
 
   private def applyBatchTimed(batch: DataFrame, batchId: Long,
       binding: String, retain: Option[Column],
-      knownTouched: Option[Set[Int]],
       timed: KeyedParquetTable.Timer): Unit = {
     val m = currentMeta
     if (batchId != Long.MinValue && batchId <= m.lastFor(binding)) return
-    def bumped = m.lastBatch +
-      (binding -> math.max(batchId, m.lastFor(binding)))
-
-    // The mapped batch has up to THREE consumers below (touched-bucket
-    // collect, merge, write) and its plan is typically the binding's whole
-    // mapping pipeline (quality semi-join + dedup anti-join + JSON decode)
-    // — without a persist each consumer re-executed that pipeline from the
-    // source (guide §5 caching: reused AND expensive to recompute; the
-    // bench's sink_stream write phase carried 2 of the 3 duplicate runs).
-    // MEMORY_AND_DISK: a micro-batch is bounded; spill beats recompute.
-    // With `knownTouched` the write job is the ONLY consumer — no persist.
-    val batchP =
-      if (knownTouched.isDefined) batch
-      else batch.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the batch determines which buckets the merge touches at all
-      val touched = knownTouched.getOrElse(timed("collect") {
-        batchP.select(bucketOf.as(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSet
-      })
-      if (touched.isEmpty) {
-        writeMeta(m.copy(lastBatch = bumped))
-        return
+    val v = m.maxV + 1
+    val d = disk(m, m.maxV)
+    val obs = new org.apache.spark.sql.Observation()
+    val rows = Upserts.writeRows(batch, spec, lit(v))
+      .observe(obs, count(lit(1)).as("rows"))
+    val direct = retain.isDefined || d.buckets.isEmpty || d.buckets.exists { k =>
+      d.runs(k).size >= numBuckets ||
+        predictedBytes(k) > d.baseBytes(k) + d.runBytes(k)
+    }
+    val compacted = timed("merge_write") {
+      // the observed rows arrive on the listener bus
+      def observedRows(): Long = {
+        org.apache.spark.sql.GraftBridge.drainListeners(spark)
+        org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
+          .get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
       }
-
-      val out = timed("merge_plan") {
-        val stTouched = readBuckets(m, Some(touched))
-        val merged =
-          if (table.counterCols.nonEmpty)
-            Upserts.mergeCounters(stTouched, Upserts.counterCombine(batchP, table), table)
-          else if (mergeMode == "row")
-            Upserts.mergeInto(stTouched, batchP, table, nullToUnset)
-          else
-            Upserts.mergeIntoCellWise(stTouched, batchP, table, nullToUnset,
-              entryCols = if (mergeMode == "entry") table.mapCols else Nil)
-        val next = retain.map(merged.filter).getOrElse(merged)
-        val plan = capWrite(next.withColumn(BucketCol, bucketOf))
-        plan.queryExecution.executedPlan // force analysis/optimization here
-        plan
+      if (direct) {
+        // the batch's frame leads the union, so the job runs in the
+        // batch's session: observations registered there (the caller's
+        // counters, `obs`) fire only for that session's queries
+        val folded = Upserts.fold(rows.union(readRows(d, None)), spec)
+        writeBuckets(retain.map(folded.filter).getOrElse(folded), versionDir(v))
+        markDone(v)
+        val n = observedRows()
+        if (d.buckets.nonEmpty) observed(n)
+        d.buckets ++ bucketBytes(v).keySet
+      } else {
+        writeBuckets(rows.drop((Upserts.RunCol +: spec.stateOnly): _*), versionDir(v))
+        val n = observedRows()
+        observed(n)
+        val after = disk(m, v)
+        val landed = after.held.getOrElse(v, Map.empty)
+        lastRun = (landed, n)
+        // runs over base, per bucket (no base: always due)
+        def load(k: Int) = after.runBytes(k).toDouble / math.max(after.baseBytes(k), 1L)
+        val due =
+          if (landed.keys.exists(load(_) > 1)) landed.keySet.filter(load(_) > 0.5)
+          else Set.empty[Int]
+        if (due.nonEmpty) compact(after, due, v, None)
+        due
       }
-      timed("merge_write") {
-        val v = m.maxV + 1
-        writeVersion(out, v)
-
-        writeMeta(Meta(
-          lastBatch = bumped,
-          maxV = v,
-          buckets = m.buckets ++ touched.map(_ -> v)))
-      }
-      timed("meta")(vacuum()) // superseded versions are unreachable
-    } finally if (knownTouched.isEmpty)
-      timed("unpersist")(batchP.unpersist(true))
-    // blocking, deliberately: an async unpersist here races the NEXT
-    // micro-batch's jobs with this batch's block drain — a 32-batch stream
-    // showed the same monotone per-batch growth (wall ≫ cpu, tail 2.7→10 s)
-    // that round 8 adjudicated for async clearCache between bench runs.
-    // The drop of a micro-batch-sized cache is bounded and cheap.
+    }
+    timed("meta") {
+      writeMeta(Meta(
+        lastBatch = m.lastBatch + (binding -> math.max(batchId, m.lastFor(binding))),
+        maxV = v,
+        buckets = m.buckets ++ compacted.map(_ -> v)))
+      vacuum()
+    }
   }
 }
 

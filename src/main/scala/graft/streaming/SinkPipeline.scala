@@ -68,10 +68,10 @@ class SinkPipeline(
   // The `dedup = exact | exactTtl:<ms>` stage (SinkConfig). Seen-hash state
   // is a pk-bucketed KeyedParquetTable keyed by the 64-bit content hash, one
   // per binding: the batch-vs-seen anti-join reads only the buckets the
-  // batch's hashes touch (stateForKeys), so per-batch cost is O(batch +
-  // touched state), never O(all content ever) — the foreachBatch analogue of
-  // StreamingDedup.firstSeen/firstSeenTtl, sharing its sliding-horizon
-  // semantics (a sighting re-arms the TTL).
+  // batch's hashes touch (touchedBuckets + unfoldedForBuckets), and a batch's
+  // sightings are appended as one run (with a TTL, folded into the state) —
+  // the foreachBatch analogue of StreamingDedup.firstSeen/firstSeenTtl,
+  // sharing its sliding-horizon semantics (a sighting re-arms the TTL).
 
   private val dedupStores = TrieMap[String, KeyedParquetTable]()
 
@@ -165,8 +165,8 @@ class SinkPipeline(
     * shuffle, no staged frame, and a generated class that is identical in
     * every batch. Counters: qualityKeptCount / qualityDroppedCount
     * (dedup-counter naming; tombstones count as neither) — they ride an
-    * [[Observation]] that fires with the first downstream job (the write
-    * path's touched-bucket collect, or the dedup stage's), so the gate
+    * [[Observation]] that fires with the first downstream job (the table's
+    * run write, or the dedup stage's bucket collect), so the gate
     * costs ZERO driver actions of its own per batch. The counts thunk is
     * read only AFTER the table merge is durable — marking before
     * applyBatch would double-count on a failed batch's replay — with a
@@ -259,13 +259,11 @@ class SinkPipeline(
       val first = dedupable.groupBy(col(hcol))
         .agg(min_by(struct(recordCols.toIndexedSeq.map(col): _*),
           struct(col("partition"), col("offset"))).as("__first"))
-      // collected ONCE: the state lookup and the deferred sightings merge
-      // key on the same hash set (exactTtl records every sighting — the
-      // identical set; exact records the fresh subset — the merge then
-      // rewrites any extra already-seen bucket unchanged), so the sightings
-      // applyBatch reuses this set instead of running its own collect job
+      // the lookup reads the touched buckets' sightings unfolded: a sighting
+      // is never deleted and last_seen only grows, so a hash is in the
+      // folded state (under the TTL horizon) iff some sighting row says so
       val touched = ds.touchedBuckets(first.select(col(hcol).as("h")))
-      val seenAll = ds.stateForBuckets(touched)
+      val seenAll = ds.unfoldedForBuckets(touched)
       val seen = b.dedupTtlMs match {
         case Some(t) => seenAll.filter(col("last_seen") >= nowMs - t)
         case None    => seenAll
@@ -283,14 +281,12 @@ class SinkPipeline(
         lit(nowMs).as("last_seen"),
         lit(nowMs * 1000).as(WritetimeCol),
         lit(ModeUpsert).as(ModeCol))
-      // exactTtl: hashes past the horizon are dropped PHYSICALLY during the
-      // sightings merge (the touched-bucket rewrite was already happening —
-      // zero extra passes), so disk and touched-bucket read volume track
-      // recently-active content, not all content ever seen. Buckets no batch
-      // lands in keep their expired rows until vacuumDedupState sweeps them.
+      // exactTtl: the sightings batch folds into the state and drops
+      // hashes past the horizon PHYSICALLY, so disk and lookup volume track
+      // recently-active content, not all content ever seen.
       val horizon = b.dedupTtlMs.map(t => col("last_seen") >= nowMs - t)
       (out, Some(() => ds.applyBatch(sightings, batchId, binding = b.topic,
-        retain = horizon, knownTouched = Some(touched))))
+        retain = horizon)))
     }
 
   /** `dedup=near`: drop a record sharing any MinHash LSH band with EARLIER
@@ -321,11 +317,10 @@ class SinkPipeline(
       // feeds the state lookup, the in-batch min, and the sightings merge —
       // compute the banding once
     // near:<k>x<r>:<ttl>: same sliding horizon as exactTtl — bands quiet for
-    // a full horizon stop blocking (and expire physically below).
-    // Bucket set collected ONCE: the sightings merge below keys on the
-    // identical (band_id, band_hash) set, so it reuses this collect.
+    // a full horizon stop blocking (and expire physically below). Like the
+    // exact path, the lookup reads the touched buckets' sightings unfolded.
     val touched = ds.touchedBuckets(bandRows.select("band_id", "band_hash"))
-    val seenAll = ds.stateForBuckets(touched)
+    val seenAll = ds.unfoldedForBuckets(touched)
     val seen = b.dedupTtlMs match {
       case Some(t) => seenAll.filter(col("last_seen") >= nowMs - t)
       case None    => seenAll
@@ -350,13 +345,12 @@ class SinkPipeline(
       .withColumn(WritetimeCol, lit(nowMs * 1000))
       .withColumn(ModeCol, lit(ModeUpsert))
     // TTL'd near: every sighting re-arms the horizon (LWW keeps the newest
-    // last_seen); expired bands leave touched buckets PHYSICALLY during the
-    // sightings merge, and vacuumDedupState sweeps the rest — identical
-    // state-bounding contract to exactTtl
+    // last_seen); expired bands leave the state PHYSICALLY when the
+    // sightings batch folds into it — identical state-bounding contract to
+    // exactTtl
     val horizon = b.dedupTtlMs.map(t => col("last_seen") >= nowMs - t)
     (out, Some(() => {
-      ds.applyBatch(sightings, batchId, binding = b.topic, retain = horizon,
-        knownTouched = Some(touched))
+      ds.applyBatch(sightings, batchId, binding = b.topic, retain = horizon)
       // the staged banding's last consumer was the sightings merge: release
       // it so persist-mode staging doesn't pin one cached plan per batch
       // for the life of the stream (a failed batch leaks one entry until
@@ -368,9 +362,9 @@ class SinkPipeline(
   /** Physically expire dedup state past its TTL horizon in EVERY bucket of
     * every TTL'd binding's seen store (`exactTtl` content hashes and TTL'd
     * `near` band hashes alike — both carry `last_seen`) — the maintenance
-    * sweep for buckets the per-batch merge prune hasn't touched lately. Call
-    * periodically (e.g. from a maintenance trigger); per-batch cost stays on
-    * the touched-bucket path. */
+    * sweep for a store no batch has written to lately (every sightings
+    * batch with a horizon already expires the whole store). Call
+    * periodically (e.g. from a maintenance trigger). */
   def vacuumDedupState(spark: org.apache.spark.sql.SparkSession,
       nowMs: Long = System.currentTimeMillis()): Unit =
     config.bindings.foreach { b =>
@@ -595,8 +589,8 @@ class SinkPipeline(
             observed.filter(col(ErrorCol).isNull).drop(ErrorCol), batchId,
             binding = b.topic)
           // fold the store's sub-phase attribution into the batch phases
-          // (write_collect / write_merge_write / write_meta /
-          // write_unpersist) so the sidecar can see inside `write`
+          // (write_merge_write / write_meta) so the sidecar can see inside
+          // `write`
           st.lastApplyPhaseMs.foreach { case (k, ms) =>
             phase.add(s"write_$k", ms) }
         } catch {
@@ -658,8 +652,8 @@ class SinkPipeline(
         phase("sightings") { commitSightings.foreach(_.apply()) }
       }
       // automatic vacuum cadence: every N-th processed batch sweeps expired
-      // rows out of UNTOUCHED buckets of every TTL'd dedup store (the
-      // per-batch merge already prunes touched buckets); N=0 disables
+      // rows out of UNTOUCHED buckets of every TTL'd dedup store (a
+      // sightings run already prunes the buckets it lands in); N=0 disables
       val n = batchesProcessed.incrementAndGet()
       if (config.dedupVacuumEvery > 0 && n % config.dedupVacuumEvery == 0 &&
           config.bindings.exists(b => b.dedupEnabled && b.dedupTtlMs.isDefined))
