@@ -1941,10 +1941,10 @@ object SparkEntry {
           col("quality_docs"), col("top_lang"), col("quality_pct"))
         .orderBy("source")),
 
-    // the STREAMING-compatible columnar banding: the same LSH bands as q25
-    // computed with pure array expressions (no window, no groupBy — the
-    // map-only stage `StreamingDedup.nearDupStream` runs per micro-batch);
-    // q25's oracle pins it bit-for-bit to the batch band shape
+    // the STREAMING-compatible map-only banding: the same LSH bands as q25
+    // from one native per-row expression (no window, no groupBy — the sink's
+    // `dedup=near` stage runs the same `StreamingDedup.bandRows` per
+    // micro-batch); q25's oracle pins it bit-for-bit to the batch band shape
     Q("q78_stream_banding", Some(
       s"""$dMinhashSig, bands AS (SELECT doc_id, CAST(seed_id // 4 AS INT) AS band_id, list_reduce(list_prepend(CAST(0 AS BIGINT), list(minhash ORDER BY seed_id)), (acc, x) -> (acc*131 + x) % 2147483647) AS band_hash FROM sig GROUP BY doc_id, CAST(seed_id // 4 AS INT)) SELECT doc_id, band_id, band_hash FROM bands ORDER BY doc_id, band_id"""),
       (s, dir) => graft.streaming.StreamingDedup.bandedStream(

@@ -61,12 +61,6 @@ object TimeUuidGen {
       node
     new UUID(msb, lsb)
   }
-
-  /** Extract the 60-bit timestamp back out of a v1 UUID (for tests/sorting). */
-  def timestampOf(u: UUID): Long = {
-    require(u.version() == 1, s"not a time-based UUID: $u")
-    u.timestamp()
-  }
 }
 
 /**

@@ -114,8 +114,8 @@ object SinkConfig {
         * map value upserts or removes individual entries (null value removes
         * under `nullToUnset=false`) instead of replacing the whole cell. */
       mergeMode: String = "row",
-      /** Content-level dedup stage between decode and merge (the online form
-        * of [[graft.streaming.StreamingDedup]], reachable from config):
+      /** Content-level dedup stage between decode and merge, keeping its
+        * seen set in a keyed store beside the table:
         * `none` (default) | `exact` (first copy of each record value ever
         * reaches the table) | `exactTtl:<ms>` (seen-hash forgotten after a
         * quiet horizon — sightings re-arm it, bounding state to content
@@ -129,7 +129,7 @@ object SinkConfig {
         * no horizon): NEAR-dup dedup — a record sharing any MinHash LSH
         * band with earlier content is dropped (the online, config-reachable
         * form of [[graft.operators.Dedup.applyNearDedup]] over
-        * [[graft.streaming.StreamingDedup]]'s banding; state = seen band
+        * [[graft.streaming.StreamingDedup.bandRows]]; state = seen band
         * hashes, keyed by (band_id, band_hash)). The optional third segment
         * is the same sliding horizon as `exactTtl`: band sightings re-arm
         * it, bands quiet for a full horizon expire physically (merge-time
@@ -288,9 +288,11 @@ object SinkConfig {
         * them the same way. */
       warnings: Seq[String] = Nil,
       /** Run [[graft.streaming.SinkPipeline.vacuumDedupState]] automatically
-        * every N processed batches (default 100), so untouched buckets of
-        * TTL'd dedup stores shrink without an operator call. 0 disables the
-        * cadence (sweep only on explicit invocation). */
+        * every N processed batches (default 100). A TTL'd binding's sightings
+        * batch already drops expired rows from its whole store, so the sweep
+        * only shrinks the store of a TTL'd binding that no recent batch has
+        * written, without an operator call. 0 disables the cadence (sweep
+        * only on explicit invocation). */
       dedupVacuumEvery: Int = 100,
       /** Global execution settings (reference:
         * dist/conf/...properties.sample:34-48; KAF-49/60/95). In the

@@ -147,9 +147,8 @@ object Dedup {
    * [[nearDupClusters]] still gets a connected component via the star.
    * A consumer that FILTERS candidates before acting (the
    * [[ngramJaccardPairs]] verify) does NOT commute with the star — see the
-   * recall note there. Same contract as the streaming path's `bucketCap`
-   * ([[graft.streaming.StreamingDedup.streamingCandidates]]) and the
-   * embedding path's cap ([[Similarity.lshCandidates]]).
+   * recall note there. Same contract as the embedding path's cap
+   * ([[Similarity.lshCandidates]]).
    *
    * Default 0 = uncapped: all-pairs output, byte-identical to the historical
    * operator (the q26/q32/q47 oracles pin that form).
@@ -229,13 +228,6 @@ object Dedup {
         .as("n_match"))
       .withColumn("est_jaccard_pct", col("n_match") * 100L / lit(numHashes.toLong))
       .withColumn("est_jaccard_pct", floor(col("est_jaccard_pct")).cast(LongType))
-  }
-
-  /** Apply exact dedup: keep one row (the lowest id) per distinct content.
-    * left_semi against the survivor set — no wide shuffle of text. */
-  def applyExact(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val keep = exact(docs, textCol, idCol).select(col("keep_id").as(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
   }
 
   /** Apply near-dedup: drop the higher-id side of every candidate pair

@@ -435,23 +435,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** IVF probe: exact top-k within each query's own cell (single-probe). */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nCells: Int = 8): DataFrame = {
-    val cells = ivfCells(corpus, idCol, vecCol, nCells)
-    val qv = corpus.select(col(idCol).as("item_id"), quantize(col(vecCol)).as("qv"))
-    val c = cells.join(qv, "item_id")
-    val q = c.join(queries.select(col(idCol).as("item_id")), "item_id")
-      .select(col("item_id").as("query_id"), col("cell_id").as("qcell"),
-        col("qv").as("qq"))
-    val scored = c.join(broadcast(q),
-        col("cell_id") === col("qcell") && col("item_id") =!= col("query_id"))
-      .select(col("query_id"), col("item_id"), dotQ(col("qv"), col("qq")).as("dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("item_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /**
    * k-NN majority-vote classification: label each query vector by the
    * modal label of its `k` nearest labeled neighbors — the

@@ -77,9 +77,6 @@ object TextAnalysis {
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** Distinct shingle set. */
-  def shingleSet(text: Column, n: Int): Column = array_distinct(shingles(text, n))
-
   /** Per-token hashes (computed once per doc; the unit every shingle/simhash
     * operator builds on — avoids re-hashing characters per shingle). */
   def tokenHashes(text: Column): Column = transform(tokens(text), t => stringHash(t))

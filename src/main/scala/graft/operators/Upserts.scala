@@ -41,22 +41,6 @@ object Upserts {
   }
 
   /**
-   * Skew-resistant LWW compaction: hot keys (one device spamming a
-   * partition key) make the single-shuffle compaction skew-bound; salting
-   * splits each key into `saltBuckets` sub-groups compacted in parallel,
-   * then a second (tiny) compaction merges the per-salt winners. Identical
-   * result to [[lwwCompact]]; strictly better wall-clock under heavy skew.
-   * The salt is derived from the order columns so it costs no extra state.
-   */
-  def saltedLwwCompact(batch: DataFrame, pk: Seq[String], orderCols: Seq[Column],
-      saltBuckets: Int = 16): DataFrame = {
-    val salted = batch.withColumn("__salt",
-      pmod(hash(orderCols: _*), lit(saltBuckets)))
-    val stage1 = lwwCompact(salted, pk :+ "__salt", orderCols)
-    lwwCompact(stage1.drop("__salt"), pk, orderCols)
-  }
-
-  /**
    * Counter accumulation (reference A1/S5): within the batch, increments for
    * the same key sum together; the merge with existing state adds them to the
    * current counter values (reference: sink/src/it/.../JsonEndToEndCCMIT.java:276-300

@@ -1,19 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /**
- * Event-time operators over the record stream: tumbling-window aggregation
- * and gap-based sessionization, each in two forms:
- *
- *  - batch form (exact, DuckDB-oracle-checkable): integer epoch-bucket
- *    arithmetic / gaps-and-islands window functions;
- *  - streaming form (Structured Streaming): watermarked `window()` groupBy /
- *    `flatMapGroupsWithState` custom state.
+ * Event-time operators over the record stream: tumbling and sliding
+ * counts, gap-based sessionization, funnels, status histories and the
+ * audits that size a streaming pipeline's watermark and quotas. All are
+ * batch operators (exact, DuckDB-oracle-checkable): integer epoch-bucket
+ * arithmetic and gaps-and-islands window functions over keyed windows.
  *
  * The reference has no event-time operators (SURVEY §2.10) — these are
  * north-star extensions for the training-data pipeline, built Spark-first.
@@ -52,27 +49,6 @@ object EventTimeOps {
       .groupBy(col("window_start_ms"), col("topic"))
       .agg(count(lit(1)).as("n_events"))
   }
-
-  /** Streaming form of [[slidingCounts]]: Spark's native sliding `window()`
-    * with a watermark — state is bounded by the watermark horizon. */
-  def slidingCountsStreaming(stream: DataFrame, width: String, slide: String,
-      watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("timestamp", watermark)
-      .groupBy(window(col("timestamp"), width, slide), col("topic"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("topic"),
-        col("n_events"))
-
-  /** Streaming form: watermarked tumbling window (late data beyond the
-    * watermark is dropped; state is bounded). */
-  def tumblingCountsStreaming(stream: DataFrame, width: String,
-      watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("timestamp", watermark)
-      .groupBy(window(col("timestamp"), width), col("topic"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("bucket_start"), col("topic"), col("n_events"))
 
   /**
    * Batch sessionization (gaps-and-islands): a new session starts when the
@@ -522,38 +498,6 @@ object EventTimeOps {
   }
 
   /**
-   * Streaming stream-stream interval join: each left event joined to the
-   * right events of the same key whose time falls in the left's trailing
-   * `lookbackMs` — the watermarked two-stream form of
-   * [[graft.operators.RangeJoin.bucketed]]'s q75 semantics. Both sides
-   * carry watermarks, and the time-bound condition lets Spark expire
-   * right-side state once the watermark passes `leftTs − lookbackMs` —
-   * bounded state on two unbounded streams. Append mode.
-   *
-   * Columns: left keeps its names; the right side's key/ts arrive renamed
-   * `__rkey`/`rightTs` so the join condition is unambiguous.
-   *
-   * `joinType = "leftOuter"` keeps unmatched left rows (null right side);
-   * Spark emits them only once the watermark passes the row's join window
-   * — the null result is provably final, never retracted (spec-pinned).
-   */
-  def streamIntervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      leftTsCol: String, rightTsCol: String, lookbackMs: Long,
-      watermark: String, joinType: String = "inner"): DataFrame = {
-    require(lookbackMs > 0L, "lookbackMs must be positive")
-    require(joinType == "inner" || joinType == "leftOuter",
-      s"stream-stream interval join supports inner/leftOuter, got $joinType")
-    val l = left.withWatermark(leftTsCol, watermark)
-    val r = right.withColumnRenamed(keyCol, "__rkey")
-      .withWatermark(rightTsCol, watermark)
-    l.join(r, expr(
-      s"$keyCol = __rkey AND $rightTsCol >= $leftTsCol - INTERVAL " +
-        s"$lookbackMs MILLISECONDS AND $rightTsCol <= $leftTsCol"),
-      joinType)
-      .drop("__rkey")
-  }
-
-  /**
    * Conversion attribution: for every conversion, the LAST touch at or
    * before it (unwindowed — the classic last-touch model) and the FIRST
    * touch inside the trailing `windowMs` (first-touch-in-window). Built
@@ -588,27 +532,6 @@ object EventTimeOps {
       .select(col("conv_id"), col("key"), col("ts"),
         col("asof_touch_id").as("last_touch_id"), col("first_touch_id"))
   }
-
-  /**
-   * Streaming windowed HLL sketch: per event-time tumbling window, the
-   * mergeable (bucket, m_j) registers of `Stats.hllSketch` — watermarked
-   * `groupBy(window, bucket).max(rho)`, append mode, so each window's ≤256
-   * sketch rows emit exactly once when the watermark passes. Finalize
-   * downstream (batch-read the sink, `Stats.hllFinalize`) — the estimate
-   * matches a batch build over the same rows REGISTER-EXACTLY (max is
-   * associative; the spec pins it). The streaming distinct-per-window
-   * story with bounded state: 256 registers per open window, any volume.
-   *
-   * Output stream: (window_start, bucket, m_j).
-   */
-  def windowedHllSketchStreaming(stream: DataFrame, tsCol: String,
-      hashCol: String, width: String, watermark: String): DataFrame =
-    graft.operators.Stats.hllRegisters(stream, hashCol)
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width), col("__hll_bucket"))
-      .agg(max(col("__hll_rho")).as("m_j"))
-      .select(col("window.start").as("window_start"),
-        col("__hll_bucket").as("bucket"), col("m_j"))
 
   /**
    * Per-key behavioral entropy: Shannon entropy of each key's observed
@@ -770,210 +693,6 @@ object EventTimeOps {
     events.groupBy(col(keyCol).as("key")).agg(aggs.head, aggs.tail: _*)
   }
 
-  // ---------------------------------------------------------- streaming state
-
-  case class SessionEvent(key: String, ms: Long)
-  case class OpenSession(startMs: Long, lastMs: Long, n: Long)
-  case class ClosedSession(key: String, startMs: Long, endMs: Long, n: Long)
-
-  /**
-   * Streaming sessionization via `flatMapGroupsWithState`: per key, merge the
-   * open session with this batch's events (sorted), close every session whose
-   * gap elapsed, keep the last one open in state. Emits closed sessions
-   * (append mode); state is one OpenSession per key — bounded.
-   */
-  case class StatusEvent(key: String, ms: Long, status: String)
-  case class OpenRun(status: String, startMs: Long, lastMs: Long, n: Long)
-  case class ClosedRun(key: String, status: String, validFromMs: Long,
-    validToMs: Long, n: Long)
-
-  /**
-   * Streaming SCD2 build — the incremental form of [[statusIntervals]]:
-   * per key, one open run in state; a batch's events (sorted by time,
-   * status tie-break) extend the open run while the status repeats and
-   * close it (validTo = the successor's start, exactly the batch
-   * semantics) when it changes. Emits closed runs in append mode; state
-   * is ONE OpenRun per key — bounded on unbounded streams. Events
-   * arriving out of order ACROSS micro-batches split runs at the batch
-   * boundary (same contract as [[sessionizeStreaming]]); feed from a
-   * watermarked, event-time-sorted upstream when that matters.
-   */
-  def statusIntervalsStreaming(events: Dataset[StatusEvent])
-      : Dataset[ClosedRun] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[StatusEvent], state: GroupState[OpenRun]) =>
-          val sorted = it.toArray.sortBy(e => (e.ms, e.status))
-          var open = state.getOption
-          val closed = Seq.newBuilder[ClosedRun]
-          sorted.foreach { e =>
-            open match {
-              case Some(o) if o.status == e.status =>
-                open = Some(o.copy(lastMs = e.ms, n = o.n + 1))
-              case Some(o) =>
-                closed += ClosedRun(key, o.status, o.startMs, e.ms, o.n)
-                open = Some(OpenRun(e.status, e.ms, e.ms, 1))
-              case None =>
-                open = Some(OpenRun(e.status, e.ms, e.ms, 1))
-            }
-          }
-          open.foreach(state.update)
-          closed.result().iterator
-      }
-  }
-
-  def sessionizeStreaming(events: Dataset[SessionEvent], gapMs: Long)
-      : Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
-          val sorted = it.map(_.ms).toArray.sorted
-          var open = state.getOption
-          val closed = Seq.newBuilder[ClosedSession]
-          sorted.foreach { ms =>
-            open match {
-              case Some(o) if ms - o.lastMs <= gapMs =>
-                open = Some(o.copy(lastMs = ms, n = o.n + 1))
-              case Some(o) =>
-                closed += ClosedSession(key, o.startMs, o.lastMs, o.n)
-                open = Some(OpenSession(ms, ms, 1))
-              case None =>
-                open = Some(OpenSession(ms, ms, 1))
-            }
-          }
-          open.foreach(state.update)
-          closed.result().iterator
-      }
-  }
-
-  case class RateEvent(key: String, ms: Long)
-  case class RateDecision(key: String, ms: Long, window: Long,
-    admitted: Boolean)
-  case class RateWindowState(window: Long, count: Long)
-
-  /**
-   * Streaming per-key rate limiter — the live form of [[rateLimitAudit]]:
-   * at most `limit` events per key per `windowMs` tumbling window, decided
-   * as events arrive. State per key is ONE (window, count) pair; a new
-   * window resets the budget. Within a micro-batch events decide in
-   * timestamp order (deterministic replay); an event from a window OLDER
-   * than the key's current one is rejected — that window's budget already
-   * closed, and admitting late arrivals would overshoot the quota the
-   * batch audit certifies.
-   *
-   * Bounded state on unbounded streams: one fixed-size record per key,
-   * overwritten in place — no timeout needed for correctness (stale keys
-   * cost one record until their next event; add an ops-level TTL cleanup
-   * if key churn is unbounded).
-   */
-  def rateLimitStreaming(events: Dataset[RateEvent], limit: Int,
-      windowMs: Long): Dataset[RateDecision] = {
-    require(limit >= 1 && windowMs >= 1, "limit and windowMs must be >= 1")
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[RateEvent],
-            state: GroupState[RateWindowState]) =>
-          val sorted = it.map(_.ms).toArray.sorted
-          var cur = state.getOption
-          val out = Seq.newBuilder[RateDecision]
-          sorted.foreach { ms =>
-            val w = math.floorDiv(ms, windowMs)
-            cur match {
-              case Some(st) if st.window == w =>
-                val c = st.count + 1
-                cur = Some(st.copy(count = c))
-                out += RateDecision(key, ms, w, c <= limit)
-              case Some(st) if st.window > w => // late: closed window
-                out += RateDecision(key, ms, w, admitted = false)
-              case _ => // first event of a new window
-                cur = Some(RateWindowState(w, 1L))
-                out += RateDecision(key, ms, w, admitted = true)
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  case class HHEvent(key: String, item: String)
-  case class HHState(counts: Map[String, (Long, Long)], nSeen: Long)
-  case class HHSnapshot(key: String, n_seen: Long, rank: Int, item: String,
-    count: Long, err: Long)
-
-  /**
-   * Streaming heavy hitters per key — SpaceSaving (Metwally, Agrawal &
-   * El Abbadi 2005, public) over `flatMapGroupsWithState`: a fixed
-   * `capacity`-entry count table per key; a full table evicts the
-   * minimum-count entry (ties → lexicographically smallest item, so the
-   * stream is replay-deterministic) and the newcomer inherits its count
-   * as the over-estimate bound `err`. After every trigger the key emits
-   * its current top-`k` snapshot stamped with `n_seen` (monotone per
-   * key — the snapshot id an append sink can filter to latest on).
-   *
-   * Guarantees (standard SpaceSaving): any item with true frequency
-   * > n_seen/capacity is IN the table; reported `count` overestimates by
-   * ≤ `err`. State is O(capacity) per key — bounded on unbounded streams.
-   */
-  def heavyHittersStreaming(events: Dataset[HHEvent], capacity: Int,
-      k: Int): Dataset[HHSnapshot] = {
-    require(capacity >= 1 && k >= 1 && k <= capacity,
-      "need 1 <= k <= capacity")
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[HHEvent], state: GroupState[HHState]) =>
-          var st = state.getOption.getOrElse(HHState(Map.empty, 0L))
-          // items process in a deterministic order within the batch
-          it.map(_.item).toArray.sorted.foreach { item =>
-            val counts = st.counts
-            val next = counts.get(item) match {
-              case Some((c, e)) => counts.updated(item, (c + 1, e))
-              case None if counts.size < capacity =>
-                counts.updated(item, (1L, 0L))
-              case None =>
-                val (evItem, (evC, _)) = counts.minBy { case (i, (c, _)) =>
-                  (c, i) }
-                (counts - evItem).updated(item, (evC + 1, evC))
-            }
-            st = HHState(next, st.nSeen + 1)
-          }
-          state.update(st)
-          st.counts.toSeq
-            .sortBy { case (i, (c, _)) => (-c, i) }
-            .take(k).zipWithIndex
-            .map { case ((i, (c, e)), r) =>
-              HHSnapshot(key, st.nSeen, r + 1, i, c, e) }
-            .iterator
-      }
-  }
-
-  /**
-   * Watermark-lateness audit — the batch measurement that PICKS a
-   * streaming watermark delay instead of guessing one. Per key, events
-   * replay in ARRIVAL order (the log offset); an event's lateness is how
-   * far event time runs behind the key's running event-time maximum
-   * (`running_max(ts) − ts`, 0 for in-order arrivals). For each candidate
-   * delay the report counts the rows a `withWatermark(delay)` pipeline
-   * would drop — choosing the delay becomes reading the row where
-   * `dropped_ppm` crosses the loss budget.
-   *
-   * Shape at 100 TB: ONE key-partitioned window (the same (key, arrival)
-   * sort every per-key replay shares) feeds a partial-agg groupBy against
-   * the ≤ |delays| exploded candidate list; no global ordering anywhere.
-   * Lateness against the GLOBAL max would need a single-partition scan —
-   * per-key is also the semantics Spark's watermark approximates per
-   * partition, and the honest per-key upper bound on drops.
-   *
-   * Output per delay (ordered): (delay_ms, n_events, n_late, dropped,
-   * dropped_ppm, max_lateness_ms).
-   */
   /**
    * Partition-completeness / backfill audit: per-day row counts
    * zero-filled over the calendar span, each day compared against the
@@ -1067,6 +786,26 @@ object EventTimeOps {
         col("keys_throttled"), col("max_window_count"))
   }
 
+  /**
+   * Watermark-lateness audit — the batch measurement that PICKS a
+   * streaming watermark delay instead of guessing one. Per key, events
+   * replay in ARRIVAL order (the log offset); an event's lateness is how
+   * far event time runs behind the key's running event-time maximum
+   * (`running_max(ts) − ts`, 0 for in-order arrivals). For each candidate
+   * delay the report counts the rows a `withWatermark(delay)` pipeline
+   * would drop — choosing the delay becomes reading the row where
+   * `dropped_ppm` crosses the loss budget.
+   *
+   * Shape at 100 TB: ONE key-partitioned window (the same (key, arrival)
+   * sort every per-key replay shares) feeds a partial-agg groupBy against
+   * the ≤ |delays| exploded candidate list; no global ordering anywhere.
+   * Lateness against the GLOBAL max would need a single-partition scan —
+   * per-key is also the semantics Spark's watermark approximates per
+   * partition, and the honest per-key upper bound on drops.
+   *
+   * Output per delay (ordered): (delay_ms, n_events, n_late, dropped,
+   * dropped_ppm, max_lateness_ms).
+   */
   def latenessAudit(events: DataFrame, keyCol: String, arrivalCol: String,
       tsMsCol: String, delaysMs: Seq[Long]): DataFrame = {
     require(delaysMs.nonEmpty, "need at least one candidate delay")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
@@ -69,9 +69,10 @@ class SinkPipeline(
   // is a pk-bucketed KeyedParquetTable keyed by the 64-bit content hash, one
   // per binding: the batch-vs-seen anti-join reads only the buckets the
   // batch's hashes touch (touchedBuckets + unfoldedForBuckets), and a batch's
-  // sightings are appended as one run (with a TTL, folded into the state) —
-  // the foreachBatch analogue of StreamingDedup.firstSeen/firstSeenTtl,
-  // sharing its sliding-horizon semantics (a sighting re-arms the TTL).
+  // sightings are appended as one run (with a TTL, folded into the state).
+  // `exact` passes the first copy of each content hash ever; `exactTtl`
+  // forgets a hash after a quiet horizon, and every sighting, dropped
+  // copies included, re-arms it.
 
   private val dedupStores = TrieMap[String, KeyedParquetTable]()
 
@@ -169,8 +170,8 @@ class SinkPipeline(
     * run write, or the dedup stage's bucket collect), so the gate
     * costs ZERO driver actions of its own per batch. The counts thunk is
     * read only AFTER the table merge is durable — marking before
-    * applyBatch would double-count on a failed batch's replay — with a
-    * fallback one-row agg for plans whose observation never fires. */
+    * applyBatch would double-count on a failed batch's replay — and never
+    * blocks ([[SinkPipeline.observeCounts]]). */
   private[streaming] def qualityFilter(spark: org.apache.spark.sql.SparkSession,
       b: SinkConfig.TableBinding, slice: DataFrame)
       : (DataFrame, Option[() => (Long, Long)]) =
@@ -186,26 +187,16 @@ class SinkPipeline(
         val gated = slice.withColumn("__keep", col("value").isNull ||
           graft.operators.Sampling.dsirAvg(score) >= minAvgQ)
         val keptExpr = coalesce(sum(when(col("value").isNotNull &&
-          col("__keep"), 1L).otherwise(0L)), lit(0L)).as("kept")
+          col("__keep"), 1L).otherwise(0L)), lit(0L))
         val droppedExpr = coalesce(sum(when(col("__keep"), 0L).otherwise(1L)),
-          lit(0L)).as("dropped")
-        val obs = new Observation()
-        val out = gated.observe(obs, keptExpr, droppedExpr)
-          .filter(col("__keep")).drop("__keep")
+          lit(0L))
+        val (observed, read) = SinkPipeline.observeCounts(gated,
+          Seq("kept" -> keptExpr, "dropped" -> droppedExpr))
         val counts = () => {
-          // the metrics arrive asynchronously on the listener bus; drain it
-          // first so the free (no-extra-job) path is deterministic once the
-          // write job has completed
-          org.apache.spark.sql.GraftBridge.drainListeners(spark)
-          val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-          if (m.contains("kept"))
-            (m("kept").asInstanceOf[Long], m("dropped").asInstanceOf[Long])
-          else {
-            val cnt = gated.agg(keptExpr, droppedExpr).head()
-            (cnt.getLong(0), cnt.getLong(1))
-          }
+          val m = read()
+          (m("kept"), m("dropped"))
         }
-        (out, Some(counts))
+        (observed.filter(col("__keep")).drop("__keep"), Some(counts))
     }
 
   /** Filter a topic slice down to first-seen content. Returns the filtered
@@ -515,8 +506,8 @@ class SinkPipeline(
       // ONE tiny agg action gives the unknown-topic count AND per-binding
       // emptiness: a binding whose topic slice is empty must be skipped
       // outright — an empty plan's CollectMetrics node gets optimized away
-      // (empty-relation propagation), so its Observation would never fire
-      // and obs.get would block forever
+      // (empty-relation propagation), and its counters would cost a
+      // fallback job of their own
       val topicCounts = phase("count") {
         recs.groupBy("topic").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -580,9 +571,8 @@ class SinkPipeline(
         // record/failure counters fold into the write job via observed
         // metrics — zero extra count() actions per binding per batch (the
         // round-2 shape ran two driver actions per binding)
-        val obs = new Observation()
-        val observed = guarded.observe(obs,
-          count(lit(1)).as("total"), count(col(ErrorCol)).as("failed"))
+        val (observed, readMetrics) = SinkPipeline.observeCounts(guarded,
+          Seq("total" -> count(lit(1)), "failed" -> count(col(ErrorCol))))
         try phase("write") {
           val st = store(spark, b)
           st.applyBatch(
@@ -600,11 +590,8 @@ class SinkPipeline(
               s"record(s) failed mapping for ${b.qualifiedTable} and " +
                 "ignoreErrors=None; failing the batch for retry", e)
         }
-        // a dedup stage can empty a NON-empty topic slice — empty-relation
-        // propagation then drops the CollectMetrics node and the observation
-        // fires with no keys, so the reads must default to 0
-        val metrics = phase("metrics") { obs.get }
-        val nFailed = metrics.getOrElse("failed", 0L).asInstanceOf[Long]
+        val metrics = phase("metrics") { readMetrics() }
+        val nFailed = metrics("failed")
         if (nFailed > 0) {
           // error side-output (reference F3): failed records go to the dead
           // letter, never silently into the table
@@ -612,7 +599,7 @@ class SinkPipeline(
             .parquet(s"$storeRoot/_dead_letter/${b.topic}.${b.qualifiedTable}")
         }
         countAndMark(spark, s"${b.topic}.${b.qualifiedTable}.failedRecordCount", nFailed)
-        val nTotal = metrics.getOrElse("total", 0L).asInstanceOf[Long]
+        val nTotal = metrics("total")
         countAndMark(spark, s"${b.topic}.${b.qualifiedTable}.recordCount", nTotal)
         // dedup-stage observability (A3 analogue — the reference counts per
         // topic.ks.table, reference: SimpleEndToEndSimulacronIT.java:469-473):
@@ -652,8 +639,9 @@ class SinkPipeline(
         phase("sightings") { commitSightings.foreach(_.apply()) }
       }
       // automatic vacuum cadence: every N-th processed batch sweeps expired
-      // rows out of UNTOUCHED buckets of every TTL'd dedup store (a
-      // sightings run already prunes the buckets it lands in); N=0 disables
+      // rows out of every TTL'd dedup store. A TTL'd sightings batch already
+      // folds and prunes its whole store, so the sweep only shrinks the
+      // store of a binding that no recent batch has written; N=0 disables
       val n = batchesProcessed.incrementAndGet()
       if (config.dedupVacuumEvery > 0 && n % config.dedupVacuumEvery == 0 &&
           config.bindings.exists(b => b.dedupEnabled && b.dedupTtlMs.isDefined))
@@ -701,6 +689,32 @@ object SinkPipeline {
     /** Fold an externally measured duration into the phase map (the store's
       * applyBatch sub-phases). */
     def add(name: String, ms: Long): Unit
+  }
+
+  /** Named long counters that ride `frame`'s first downstream job as an
+    * [[Observation]]: returns the observed frame and a read that never
+    * blocks. The read drains the listener bus (observed metrics arrive
+    * there) and returns the observed values once the job has run; when
+    * the observation has not fired — its job ran outside this session, or
+    * never ran — or fired without its keys (the node was pruned as an
+    * empty relation, which below a join does not make the counts 0), it
+    * computes the same expressions with a one-row agg of `frame` instead.
+    * `Observation.get` would wait forever in the first case. */
+  private[streaming] def observeCounts(frame: DataFrame,
+      counts: Seq[(String, Column)]): (DataFrame, () => Map[String, Long]) = {
+    val obs = new Observation()
+    val named = counts.map { case (n, c) => c.as(n) }
+    val read = () => {
+      org.apache.spark.sql.GraftBridge.drainListeners(frame.sparkSession)
+      val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
+      if (counts.forall(c => m.contains(c._1)))
+        counts.map { case (n, _) => n -> m(n).asInstanceOf[Long] }.toMap
+      else {
+        val row = frame.agg(named.head, named.tail: _*).head()
+        counts.indices.map(i => counts(i)._1 -> row.getLong(i)).toMap
+      }
+    }
+    (frame.observe(obs, named.head, named.tail: _*), read)
   }
 
   /** Shared daemon scheduler for the queryExecutionTimeout watchdog — one

@@ -19,15 +19,16 @@ object GraftBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Non-blocking read of an [[Observation]]: the observed metrics if its
-    * action already completed, else empty (`getOrEmpty` is
-    * `private[spark]`). The sink's quality gate rides its counters on the
-    * write path's jobs and must fall back to its own job only when the
-    * observation never fired.
+    * action already completed, else empty, without waiting (Spark's
+    * `getOrEmpty` is `private[spark]` and waits up to 100 ms). The sink's
+    * counters ride the write path's jobs and fall back to a job of their
+    * own only when the observation has not fired.
     * Spark's own `getOrEmpty` NPEs when the completed metrics row carries
     * no schema (a CollectMetrics node dropped by empty-relation
     * propagation fires a schema-less row) — treated here as "nothing
     * observed" so the caller's fallback job runs. */
   def observedOrEmpty(o: Observation): Map[String, Any] =
-    try o.getOrEmpty
+    if (!o.future.isCompleted) Map.empty
+    else try o.getOrEmpty
     catch { case _: NullPointerException => Map.empty }
 }

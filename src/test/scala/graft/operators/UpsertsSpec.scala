@@ -115,21 +115,6 @@ class UpsertsSpec extends SparkSuite {
     assert(s2.collect().toSeq == Seq(Row(1L, 9L)))
   }
 
-  test("salted compaction equals plain compaction (skew path)") {
-    val rows = (1 to 200).map(i =>
-      Row(1L, i.toLong, s"v$i", i.toLong, ModeUpsert)) ++ // one hot key
-      (1 to 5).map(i => Row(2L, i.toLong, s"w$i", i.toLong, ModeUpsert))
-    val batch = df(batchSchema, rows: _*)
-    val order = Seq(col(WritetimeCol), col("a"))
-    val plain = Upserts.lwwCompact(batch, Seq("pk"), order)
-      .collect().sortBy(_.getLong(0))
-    val salted = Upserts.saltedLwwCompact(batch, Seq("pk"), order, saltBuckets = 8)
-      .collect().sortBy(_.getLong(0))
-    assert(plain.toSeq == salted.toSeq)
-    assert(plain.map(r => (r.getLong(0), r.getString(2))).toSeq ==
-      Seq((1L, "v200"), (2L, "w5")))
-  }
-
   test("TTL'd winning rows carry an expiry; TTL-less writes clear it (G2)") {
     val batchTtlSchema = StructType(batchSchema.fields :+
       StructField(TtlCol, LongType))

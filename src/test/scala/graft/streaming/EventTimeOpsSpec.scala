@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -65,22 +62,6 @@ class EventTimeOpsSpec extends SparkSuite {
     val out = sessionize(df, 1800000L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(x => (x._1, x._2))
     assert(out.toSeq == Seq(("u1", 1L, 2L), ("u1", 2L, 1L), ("u2", 1L, 1L)))
-  }
-
-  test("streaming watermarked tumbling window over a file stream") {
-    val src = Files.createTempDirectory("graft-et-src").toString
-    val ckpt = Files.createTempDirectory("graft-et-ckpt").toString
-    events(("a", 0L, "u", 0L), ("a", 1L, "u", 1000L), ("b", 2L, "u", 3600000L))
-      .write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(schema).parquet(src)
-    val q = tumblingCountsStreaming(stream, "1 hour")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("et_out")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val out = s.table("et_out").collect()
-      .map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).sortBy(_._1)
-    assert(out.toSeq == Seq((0L, "a", 2L), (3600000L, "b", 1L)))
   }
 
   test("funnel: strictly-after steps, ties excluded, monotone counts") {
@@ -160,56 +141,6 @@ class EventTimeOpsSpec extends SparkSuite {
     assert(capped.getLong(2) == 131072L)  // min(10, 3) shifts
   }
 
-  test("streaming sessionization closes sessions across batches, keeps last open") {
-    import s.implicits._
-    val src = Files.createTempDirectory("graft-ss-src").toString
-    val ckpt = Files.createTempDirectory("graft-ss-ckpt").toString
-    // one file = one batch under AvailableNow with maxFilesPerTrigger
-    events(("a", 0L, "u1", 1000L), ("a", 1L, "u1", 2000L), ("a", 2L, "u1", 4000000L))
-      .coalesce(1).write.parquet(src + "/f1")
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    val sess = sessionizeStreaming(
-      stream.select(col("key"), unix_millis(col("timestamp")).as("ms"))
-        .as[SessionEvent], 1800000L)
-    val q = sess.writeStream.outputMode("append")
-      .format("memory").queryName("ss_out")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val closed = s.table("ss_out").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    // first session (1000..2000, n=2) closed by the 4000000 event; the
-    // 4000000 session stays open in state
-    assert(closed.toSeq == Seq(("u1", 1000L, 2000L, 2L)))
-  }
-
-  test("streaming SCD2: runs close across batches, open run survives") {
-    import s.implicits._
-    val src = Files.createTempDirectory("graft-si-src").toString
-    val ckpt = Files.createTempDirectory("graft-si-ckpt").toString
-    // batch 1: a,a then b → run a closes at b's start; batch 2: a →
-    // run b (carried in STATE across the batch boundary) closes at 4000
-    events(("a", 0L, "u1", 1000L), ("a", 1L, "u1", 2000L),
-      ("b", 2L, "u1", 3000L)).coalesce(1).write.parquet(src + "/f1")
-    events(("a", 3L, "u1", 4000L)).coalesce(1).write.parquet(src + "/f2")
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    val runs = statusIntervalsStreaming(
-      stream.select(col("key"), unix_millis(col("timestamp")).as("ms"),
-        col("topic").as("status")).as[StatusEvent])
-    val q = runs.writeStream.outputMode("append")
-      .format("memory").queryName("si_out")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val closed = s.table("si_out").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(_._3)
-    assert(closed.toSeq == Seq(
-      ("u1", "a", 1000L, 3000L, 2L), ("u1", "b", 3000L, 4000L, 1L)))
-  }
-
   test("funnelWindowed: the gap bound drops late conversions") {
     import s.implicits._
     val ev = Seq(
@@ -254,90 +185,6 @@ class EventTimeOpsSpec extends SparkSuite {
     // cutoff = 100 − 30 = 70: a's last activity 60 < 70 → churned
     assert(out("a") == (2L, 60L, true))
     assert(out("b") == (2L, 100L, false))
-  }
-
-  test("streamIntervalJoin: watermarked lookback join matches the batch") {
-    val srcL = Files.createTempDirectory("graft-ssj-l").toString
-    val srcR = Files.createTempDirectory("graft-ssj-r").toString
-    val ckpt = Files.createTempDirectory("graft-ssj-ckpt").toString
-    val ls = StructType(Seq(StructField("k", StringType),
-      StructField("lid", LongType), StructField("lts", TimestampType)))
-    val rs = StructType(Seq(StructField("k", StringType),
-      StructField("rid", LongType), StructField("rts", TimestampType)))
-    def ts(ms: Long) =
-      java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(ms))
-    val ll = new java.util.ArrayList[Row]()
-    ll.add(Row("u", 1L, ts(5000L))); ll.add(Row("u", 2L, ts(20000L)))
-    val rl = new java.util.ArrayList[Row]()
-    Seq(Row("u", 10L, ts(1000L)), Row("u", 11L, ts(5000L)),
-      Row("u", 12L, ts(19000L)), Row("v", 13L, ts(5000L)))
-      .foreach(rl.add)
-    s.createDataFrame(ll, ls).write.mode("overwrite").parquet(srcL)
-    s.createDataFrame(rl, rs).write.mode("overwrite").parquet(srcR)
-    val q = EventTimeOps.streamIntervalJoin(
-      s.readStream.schema(ls).parquet(srcL),
-      s.readStream.schema(rs).parquet(srcR),
-      "k", "lts", "rts", lookbackMs = 4000L, watermark = "0 seconds")
-      .select("lid", "rid")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ssj_out").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = s.table("ssj_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // left 1 @5s looks back to 1s: rts 1000 (exactly at bound) + 5000
-    // (tie) match, key v does not; left 2 @20s catches only 19000
-    assert(got == Set((1L, 10L), (1L, 11L), (2L, 12L)))
-  }
-
-  test("streamIntervalJoin leftOuter: unmatched left rows emit final nulls") {
-    val srcL = Files.createTempDirectory("graft-ssjo-l").toString
-    val srcR = Files.createTempDirectory("graft-ssjo-r").toString
-    val ckpt = Files.createTempDirectory("graft-ssjo-ckpt").toString
-    val ls = StructType(Seq(StructField("k", StringType),
-      StructField("lid", LongType), StructField("lts", TimestampType)))
-    val rs = StructType(Seq(StructField("k", StringType),
-      StructField("rid", LongType), StructField("rts", TimestampType)))
-    def ts(ms: Long) =
-      java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(ms))
-    def writeL(dir: String, rows: Row*): Unit = {
-      val l = new java.util.ArrayList[Row](); rows.foreach(l.add)
-      s.createDataFrame(l, ls).coalesce(1).write.parquet(dir)
-    }
-    def writeR(dir: String, rows: Row*): Unit = {
-      val l = new java.util.ArrayList[Row](); rows.foreach(l.add)
-      s.createDataFrame(l, rs).coalesce(1).write.parquet(dir)
-    }
-    // batch 1: lid 1 matches rid 11; lid 2's window [16s, 20s] has no
-    // right rows. Watermark after b1 = min(20s, 5s) = 5s.
-    writeL(srcL + "/f1", Row("u", 1L, ts(5000L)), Row("u", 2L, ts(20000L)))
-    writeR(srcR + "/f1", Row("u", 11L, ts(5000L)))
-    // batch 2: far-future rows on BOTH sides (global watermark is the MIN
-    // across inputs) push the watermark past lid 2's window
-    writeL(srcL + "/f2", Row("u", 3L, ts(500000L)))
-    writeR(srcR + "/f2", Row("x", 99L, ts(500000L)))
-    // batch 3: one more left row so a batch runs UNDER the advanced
-    // watermark — that is when closed-window unmatched state flushes
-    writeL(srcL + "/f3", Row("u", 4L, ts(501000L)))
-    val q = EventTimeOps.streamIntervalJoin(
-      s.readStream.schema(ls).option("maxFilesPerTrigger", "1")
-        .parquet(srcL + "/*"),
-      s.readStream.schema(rs).option("maxFilesPerTrigger", "1")
-        .parquet(srcR + "/*"),
-      "k", "lts", "rts", lookbackMs = 4000L, watermark = "0 seconds",
-      joinType = "leftOuter")
-      .select("lid", "rid")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ssjo_out").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = s.table("ssjo_out").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    // lid 2 emits exactly once, with a FINAL null right side (its window
-    // closed under the watermark, so the null cannot be retracted)
-    assert(got.contains((1L, Some(11L))))
-    assert(got.contains((2L, None)))
-    assert(got.count(_._1 == 2L) == 1)
   }
 
   test("attribution: last-touch asof + first-touch-in-window, nulls kept") {
@@ -393,43 +240,6 @@ class EventTimeOpsSpec extends SparkSuite {
     // (2·512 + 1·1536) DIV 3 = 853
     assert(out("u1") == (3L, 2L, 853L))
     assert(out("u2") == (2L, 1L, 0L))
-  }
-
-  test("windowedHllSketchStreaming: registers equal the batch sketch") {
-    val src = Files.createTempDirectory("graft-hll-src").toString
-    val ckpt = Files.createTempDirectory("graft-hll-ckpt").toString
-    val schema2 = StructType(Seq(
-      StructField("ts", TimestampType), StructField("h", LongType)))
-    val l = new java.util.ArrayList[Row]()
-    (1L to 300L).foreach { i =>
-      val ms = if (i % 2 == 0) 1000L else 3600000L + 1000L // two windows
-      l.add(Row(java.sql.Timestamp.from(
-        java.time.Instant.ofEpochMilli(ms)), i * 104729L))
-    }
-    val batch = s.createDataFrame(l, schema2)
-    batch.write.mode("overwrite").parquet(src)
-    val q = EventTimeOps.windowedHllSketchStreaming(
-      s.readStream.schema(schema2).parquet(src), "ts", "h",
-      width = "1 hour", watermark = "0 seconds")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hll_out")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val streamed = s.table("hll_out").collect()
-      .map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2)))
-      .toSet
-    val expected = graft.operators.Stats.hllSketch(
-      batch.withColumn("w", graft.operators.IntMath.idiv(
-        unix_millis(col("ts")), lit(3600000L)) * 3600000L),
-      "w", "h")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // append mode emits a window only once the watermark passes its end:
-    // the final watermark (max event time) closes window 0 but leaves the
-    // second window open in state — exactly-once, never partial
-    assert(streamed == expected.filter(_._1 == 0L)) // register-exact
-    assert(streamed.nonEmpty)
-    assert(!streamed.exists(_._1 == 3600000L))
   }
 
   test("temporalProfile: integer epoch dow/hour and class shares") {
@@ -492,71 +302,5 @@ class EventTimeOpsSpec extends SparkSuite {
     assert(out(9) == ((100L, false, true))) // recovered day passes
     // day 8's trailing window is [0, 10, 100] → median 10; 100 ≥ 50% of 10
     assert(out(8)._3)
-  }
-
-  test("streaming heavy hitters: SpaceSaving eviction with deterministic " +
-      "ties, error bounds carried, state survives batches") {
-    import s.implicits._
-    val src = Files.createTempDirectory("graft-hh-src").toString
-    val ckpt = Files.createTempDirectory("graft-hh-ckpt").toString
-    // capacity 2: batch 1 = a,a,b,c → c evicts b (min count, lex-smallest)
-    // and inherits err 1; batch 2 = c,c → c overtakes a
-    events(("a", 0L, "u1", 0L), ("a", 1L, "u1", 1L), ("b", 2L, "u1", 2L),
-      ("c", 3L, "u1", 3L)).coalesce(1).write.parquet(src + "/f1")
-    events(("c", 4L, "u1", 4L), ("c", 5L, "u1", 5L))
-      .coalesce(1).write.parquet(src + "/f2")
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    val out = heavyHittersStreaming(
-      stream.select(col("key"), col("topic").as("item")).as[HHEvent],
-      capacity = 2, k = 2)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("hh_out")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val finalSnap = s.table("hh_out").collect()
-      .filter(_.getLong(1) == 6L)
-      .map(r => (r.getInt(2), r.getString(3), r.getLong(4), r.getLong(5)))
-      .sortBy(_._1)
-    assert(finalSnap.toSeq == Seq((1, "c", 4L, 1L), (2, "a", 2L, 0L)))
-    // intermediate snapshot after batch 1: a leads, c carries err 1
-    val mid = s.table("hh_out").collect().filter(_.getLong(1) == 4L)
-      .map(r => (r.getInt(2), r.getString(3), r.getLong(4), r.getLong(5)))
-      .sortBy(_._1)
-    assert(mid.toSeq == Seq((1, "a", 2L, 0L), (2, "c", 2L, 1L)))
-  }
-
-  test("streaming rate limiter: quota per window, budget survives the " +
-      "batch boundary, late closed-window events reject") {
-    import s.implicits._
-    val src = Files.createTempDirectory("graft-rl-src").toString
-    val ckpt = Files.createTempDirectory("graft-rl-ckpt").toString
-    // window = 100ms, limit 2. batch 1: ms 0,10,20 in window 0 →
-    // admit, admit, reject. batch 2: ms 30 (window 0 again, STATE carries
-    // the exhausted budget → reject), ms 110 (window 1 → admit), then
-    // ms 50 arrives after the key moved to window 1 → late, reject.
-    events(("a", 0L, "u1", 0L), ("a", 1L, "u1", 10L), ("a", 2L, "u1", 20L))
-      .coalesce(1).write.parquet(src + "/f1")
-    events(("a", 3L, "u1", 30L), ("a", 4L, "u1", 110L))
-      .coalesce(1).write.parquet(src + "/f2")
-    events(("a", 5L, "u1", 50L))
-      .coalesce(1).write.parquet(src + "/f3")
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    val out = rateLimitStreaming(
-      stream.select(col("key"), unix_millis(col("timestamp")).as("ms"))
-        .as[RateEvent], limit = 2, windowMs = 100L)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("rl_out")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = s.table("rl_out").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      .sortBy(_._1)
-    assert(got.toSeq == Seq((0L, 0L, true), (10L, 0L, true),
-      (20L, 0L, false), (30L, 0L, false), (50L, 0L, false),
-      (110L, 1L, true)))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -917,6 +917,31 @@ class SinkPipelineSpec extends SparkSuite {
       .map(_.getLong(0)).toSeq == Seq(5L), "tombstone deleted key 1")
     assert(gated.recordCount("orders.ks.t2.qualityKeptCount").value == 2L)
     assert(gated.recordCount("orders.ks.t2.qualityDroppedCount").value == 2L)
+  }
+
+  test("observed counters never block: an unfired observation falls back " +
+      "to a one-row agg, a fired one costs no job") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val frame = batch(
+      ("orders", 0L, "1", "a", 1000L),
+      ("orders", 1L, "2", null, 2000L),
+      ("orders", 2L, "3", "c", 3000L))
+    val counts = Seq("total" -> count(lit(1)),
+      "nulls" -> count(when(col("value").isNull, 1)))
+    val expected = Map("total" -> 3L, "nulls" -> 1L)
+    // no job ever runs the observed frame, so `Observation.get` would
+    // wait forever; the read answers from its own agg instead
+    val (_, unfired) = SinkPipeline.observeCounts(frame, counts)
+    assert(Await.result(Future(unfired()), 60.seconds) == expected)
+    // once a job has run over the observed frame the read is free
+    val (observed, fired) = SinkPipeline.observeCounts(frame, counts)
+    observed.filter(col("value").isNotNull)
+      .write.format("noop").mode("overwrite").save()
+    val (m, jobs) = jobsDuring("observed-read")(fired())
+    assert(m == expected)
+    assert(jobs == 0, s"the fired observation's read ran $jobs job(s)")
   }
 
   test("quality model: a non-dense model fails the batch loudly, and the " +
