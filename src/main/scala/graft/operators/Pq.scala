@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,15 +18,16 @@ import org.apache.spark.sql.types._
  * decompressing the corpus.
  *
  * Everything is integer-exact on the quantized (milli-unit long) vectors:
- * sub-codebooks come from the same deterministic all-integer k-means as
- * the IVF path ([[Similarity.kmeansOnQuantized]] — truncating-DIV means,
- * exact squared-L2 assignment), so training, encoding, and ADC scoring are
- * bit-reproducible and the DuckDB oracle checks them from templated
- * codebook literals.
+ * [[lloyd]], the engine's one k-means trainer, uses truncating-DIV means
+ * and exact squared-L2 assignment, so training, encoding, and ADC scoring
+ * are bit-reproducible and the DuckDB oracle checks them from templated
+ * codebook literals. The IVF coarse quantizer
+ * ([[Similarity.kmeansCentroids]]) is the same trainer with one subspace.
  *
  * Scale shape:
- *  - training: `numSubspaces` independent k-means runs, each over
- *    (item, d/m longs) — map-only assignment against broadcast centroids
+ *  - training: one Lloyd loop over all m subspaces together — on the
+ *    driver for small corpora, else over the exploded (item, sub,
+ *    sub-vector) frame: map-only assignment against broadcast centroids
  *    per iteration, partial-agg means; centroids collected per iteration
  *    (m·k·d/m longs — tiny).
  *  - encoding: one slice + broadcast-join + per-(item, sub) min_by —
@@ -36,86 +39,83 @@ import org.apache.spark.sql.types._
 object Pq {
 
   /** Train per-subspace codebooks: (sub_id, cell_id, cv array<long>, cn2).
-    * `dims` must divide evenly into `numSubspaces` sub-vectors.
-    *
-    * All m subspaces train in ONE combined Lloyd loop over the exploded
-    * (item, sub, sub-vector) frame — each iteration is a single broadcast
-    * assignment + partial-agg mean + one tiny collect (m·k·d longs),
-    * instead of m independent k-means runs (m× the passes over the data
-    * and ~m× the fixed job overhead; measured 9 s → ~1 s at sf0.1).
-    * Seeds, truncating-DIV means, and (dist, cell) tie-breaks are
-    * identical to [[Similarity.kmeansOnQuantized]] run per subspace, so
-    * the codebooks are bit-identical to the per-subspace formulation. */
+    * `dims` must divide evenly into `numSubspaces` sub-vectors. */
   def trainCodebooks(train: DataFrame, idCol: String, vecCol: String,
-      numSubspaces: Int = 8, cellsPerSub: Int = 16, iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = train.sparkSession
-    val v0 = train.select(col(idCol).as("item_id"),
-      Similarity.quantize(col(vecCol)).as("qv"))
-    // small training corpora run the whole per-subspace Lloyd loop on the
-    // driver — ONE gating limit-collect job replaces checkpoint + dims
-    // head + seed collect + per-iteration collects (VERDICT r11 #6); the
-    // arithmetic is Similarity.lloydDriver's, bit-identical to the
-    // distributed loop below (KmeansParitySpec pins both trainers)
-    val maxDriver =
-      try spark.conf.get(Similarity.DriverMaxRowsKey, "131072").toInt
-      catch { case _: NumberFormatException => 131072 }
+      numSubspaces: Int = 8, cellsPerSub: Int = 16, iters: Int = 3): DataFrame =
+    lloyd(train.select(col(idCol).as("item_id"),
+      Similarity.quantize(col(vecCol)).as("qv")), numSubspaces, cellsPerSub, iters)
+
+  /** Rows a training corpus may have and still train on the driver. */
+  private val DriverMaxRows = 131072
+
+  /** Serial multiplies (rows·k·dims·iters) the driver loop may spend: past
+    * it, the ~1 s of per-job scheduling the distributed loop pays is
+    * cheaper than running single-threaded. */
+  private val DriverMaxMultiplies = 4000000000L
+
+  /** The driver gate: does a `rows` × `dims` corpus train on the driver? */
+  private def onDriver(rows: Int, dims: Int, k: Int, iters: Int,
+      maxRows: Int): Boolean =
+    maxRows > 0 && rows <= maxRows &&
+      rows.toLong * k * dims * iters <= DriverMaxMultiplies
+
+  /**
+   * Deterministic k-means (Lloyd) per subspace over an already-quantized
+   * (item_id, qv) frame: (sub_id, cell_id, cv array<long>, cn2), ≤ k cells
+   * per subspace.
+   *
+   * Seeds are a deterministic HASH-BUCKET MIN ([[seedRows]]), shared by
+   * every subspace. Each iteration assigns each sub-vector to its nearest
+   * cell by exact integer squared-L2 (ties to the smaller cell_id) and
+   * recomputes centroids as the element-wise integer mean (DIV — truncating
+   * division; all-integer, so the result is identical under any
+   * partitioning, unlike FP-sum k-means). Cells that lose every member
+   * disappear. Null vectors are dropped before seeding: a null has no
+   * distance to any centroid, and as a seed it would pull every vector
+   * into its cell. An empty corpus trains no cells.
+   *
+   * All m subspaces train in ONE loop. Corpora that pass [[onDriver]]
+   * (the IVF/PQ training sets are samples by design) train entirely on the
+   * driver: the gating `limit(max+1)` probe is ONE job and, when the
+   * corpus fits, the only pass over the data. Larger corpora run the
+   * distributed loop: localCheckpoint + one broadcast assignment,
+   * partial-agg mean and tiny collect (m·k·d longs) per iteration. Both
+   * are bit-identical (KmeansParitySpec pins them, negatives included);
+   * `driverMaxRows = 0` forces the distributed loop.
+   */
+  private[operators] def lloyd(v0: DataFrame, numSubspaces: Int, k: Int,
+      iters: Int, driverMaxRows: Int = DriverMaxRows): DataFrame = {
+    val spark = v0.sparkSession
+    val schema = StructType(Seq(StructField("sub_id", IntegerType),
+      StructField("cell_id", IntegerType), StructField("cv", ArrayType(LongType))))
+    def toDf(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+        .withColumn("cn2", Similarity.norm2Q(col("cv")))
+    val v = v0.filter(col("qv").isNotNull)
     val probe =
-      if (maxDriver <= 0) Array.empty[Row]
-      else v0.limit(maxDriver + 1).collect()
-    // same serial work budget as kmeansOnQuantized: all subspaces together
-    // touch rows·cellsPerSub·dims·iters multiplies; a null vector goes to
-    // the distributed loop, as there
-    if (maxDriver > 0 && probe.length <= maxDriver && probe.nonEmpty &&
-        probe.forall(!_.isNullAt(1)) &&
-        probe.length.toLong * cellsPerSub *
-          probe(0).getSeq[Long](1).length * iters <= 4000000000L) {
+      if (driverMaxRows > 0) v.limit(driverMaxRows + 1).collect()
+      else Array.empty[Row]
+    val probeDims = probe.headOption.fold(0)(_.getSeq[Long](1).length)
+    if (onDriver(probe.length, probeDims, k, iters, driverMaxRows)) {
       val ids = probe.map(_.getLong(0))
       val full = probe.map(_.getSeq[Long](1).toArray)
-      val dimsD = full(0).length
-      require(dimsD % numSubspaces == 0,
-        s"dims=$dimsD not divisible into $numSubspaces subspaces")
-      val dD = dimsD / numSubspaces
-      val rows = new java.util.ArrayList[Row]()
-      (0 until numSubspaces).foreach { s =>
-        val sub = full.map(v => v.slice(s * dD, s * dD + dD))
-        Similarity.lloydDriver(ids, sub, cellsPerSub, iters).foreach {
-          case (cid, cv) => rows.add(Row(s, cid, cv.toSeq))
-        }
-      }
-      return spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sub_id", IntegerType),
-          org.apache.spark.sql.types.StructField("cell_id", IntegerType),
-          org.apache.spark.sql.types.StructField("cv", ArrayType(LongType)))))
-        .withColumn("cn2", Similarity.norm2Q(col("cv")))
+      val d = subspaceDims(probeDims, numSubspaces)
+      return toDf(for {
+        s <- 0 until numSubspaces
+        (cid, cv) <- lloydDriver(ids, full.map(_.slice(s * d, s * d + d)), k, iters)
+      } yield Row(s, cid, cv.toSeq))
     }
-    val v = v0.localCheckpoint()
-    val dims = v.select(size(col("qv"))).head().getInt(0)
-    require(dims % numSubspaces == 0,
-      s"dims=$dims not divisible into $numSubspaces subspaces")
-    val d = dims / numSubspaces
-    val sv = v.select(col("item_id"),
+    val vc = v.localCheckpoint() // iterated iters + 1 times below
+    val seeds = seedRows(vc, k)
+    if (seeds.isEmpty) return toDf(Nil)
+    val d = subspaceDims(seeds(0).getSeq[Long](1).length, numSubspaces)
+    val sv = vc.select(col("item_id"),
       posexplode(array((0 until numSubspaces).map(s =>
         slice(col("qv"), s * d + 1, d)): _*)).as(Seq("sub_id", "sqv")))
       .localCheckpoint(eager = false)
-    // the same deterministic hash-bucket-min seed pick as
-    // kmeansOnQuantized, shared across subspaces (each subspace seeds from
-    // the same items)
-    val seedRows = Similarity.seedRows(v, cellsPerSub)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sub_id", IntegerType),
-      org.apache.spark.sql.types.StructField("cell_id", IntegerType),
-      org.apache.spark.sql.types.StructField("cv", ArrayType(LongType))))
-    def toDf(rows: Seq[Row]): DataFrame = {
-      val l = new java.util.ArrayList[Row]()
-      rows.foreach(l.add)
-      spark.createDataFrame(l, schema)
-        .withColumn("cn2", Similarity.norm2Q(col("cv")))
-    }
     var cents = toDf(for {
       s <- 0 until numSubspaces
-      (r, i) <- seedRows.zipWithIndex
+      (r, i) <- seeds.toSeq.zipWithIndex
     } yield Row(s, i, r.getSeq[Long](1).slice(s * d, s * d + d)))
     (1 to iters).foreach { _ =>
       val assigned = sv.join(broadcast(cents), "sub_id")
@@ -132,6 +132,91 @@ object Pq {
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("cx")))),
           s => s.getField("cx")).as("cv"))
       cents = toDf(updated.collect().toSeq)
+    }
+    cents
+  }
+
+  /** Deterministic ≤ k seed rows (item_id, qv): min-id row per hash
+    * bucket, bucket = high bits of the Knuth multiplicative hash of the id
+    * (one partial-agg groupBy; identical on any partitioning). This gives
+    * well-spread seeds for ANY id distribution, sparse or segmented id
+    * spaces included. Sorted by item_id for stable cell numbering; buckets
+    * with no rows contribute no seed (≤ k cells). */
+  private def seedRows(v: DataFrame, k: Int): Array[Row] = {
+    val p = 2147483647L
+    val h = (pmod(col("item_id"), lit(p)) * 2654435761L) % p
+    v.withColumn("__bucket", IntMath.idiv(h * k, lit(p)))
+      .groupBy(col("__bucket"))
+      .agg(min_by(struct(col("item_id"), col("qv")), col("item_id")).as("s"))
+      .select(col("s.item_id").as("item_id"), col("s.qv").as("qv"))
+      .orderBy(col("item_id"))
+      .collect()
+  }
+
+  /** Driver-side seed pick — the exact arithmetic of [[seedRows]]: bucket =
+    * (pmod(id, p) · 2654435761 mod p) · k DIV p (all operands non-negative,
+    * so Catalyst's truncating DIV = Java `/`), min-id row per bucket,
+    * ascending id order. */
+  private def driverSeeds(ids: Array[Long],
+      vecs: Array[Array[Long]], k: Int): Array[(Long, Array[Long])] = {
+    val p = 2147483647L
+    val best = scala.collection.mutable.LongMap.empty[Int] // bucket -> row idx
+    var i = 0
+    while (i < ids.length) {
+      val id = ids(i)
+      val h = (((id % p) + p) % p) * 2654435761L % p
+      val b = h * k / p
+      best.get(b) match {
+        case Some(j) if ids(j) <= id => ()
+        case _ => best.update(b, i)
+      }
+      i += 1
+    }
+    best.values.toArray.map(j => (ids(j), vecs(j))).sortBy(_._1)
+  }
+
+  /** Driver-side Lloyd loop, bit-identical to the distributed iteration:
+    * nearest cell by exact integer ‖a−c‖² with ties to the smaller
+    * cell_id; per-dim mean = Σx DIV count (Catalyst IntegralDivide
+    * truncates toward zero — Java `/`); cells that lose every member
+    * disappear, exactly as the distributed groupBy emits no row for them. */
+  private def lloydDriver(ids: Array[Long],
+      vecs: Array[Array[Long]], k: Int, iters: Int)
+      : Seq[(Int, Array[Long])] = {
+    val n = vecs.length
+    val norms = vecs.map(v => v.map(x => x * x).sum)
+    var cents: Seq[(Int, Array[Long])] =
+      driverSeeds(ids, vecs, k).zipWithIndex.map { case ((_, v), i) => (i, v) }
+    (1 to iters).foreach { _ =>
+      val cn2 = cents.map { case (cid, cv) =>
+        (cid, cv, cv.map(x => x * x).sum) }
+      // assignment: min (dist2, cell_id)
+      val sums = scala.collection.mutable.LinkedHashMap
+        .empty[Int, (Array[Long], Long)] // cell -> (per-dim sums, count)
+      var i = 0
+      while (i < n) {
+        val v = vecs(i)
+        var bestCell = -1
+        var bestDist = Long.MaxValue
+        cn2.foreach { case (cid, cv, c2) =>
+          var dot = 0L
+          var d = 0
+          while (d < v.length) { dot += v(d) * cv(d); d += 1 }
+          val dist2 = norms(i) + c2 - 2L * dot
+          if (dist2 < bestDist || (dist2 == bestDist && cid < bestCell)) {
+            bestDist = dist2; bestCell = cid
+          }
+        }
+        val (acc, c) = sums.getOrElseUpdate(bestCell,
+          (new Array[Long](v.length), 0L))
+        var d = 0
+        while (d < v.length) { acc(d) += v(d); d += 1 }
+        sums.update(bestCell, (acc, c + 1L))
+        i += 1
+      }
+      cents = sums.toSeq.map { case (cid, (acc, c)) =>
+        (cid, acc.map(_ / c)) // truncating, = Catalyst DIV
+      }.sortBy(_._1)
     }
     cents
   }
@@ -212,8 +297,13 @@ object Pq {
       .agg(sum(col("__best")).as("err2"))
   }
 
-  private def dimsPerSub(v: DataFrame, numSubspaces: Int): Int = {
-    val dims = v.select(size(col("qv"))).head().getInt(0)
+  /** Sub-vector length of `v`'s first vector; any value on an empty frame,
+    * whose joins then produce no rows. */
+  private def dimsPerSub(v: DataFrame, numSubspaces: Int): Int =
+    v.select(size(col("qv"))).head(1).headOption
+      .fold(0)(r => subspaceDims(r.getInt(0), numSubspaces))
+
+  private def subspaceDims(dims: Int, numSubspaces: Int): Int = {
     require(dims % numSubspaces == 0,
       s"dims=$dims not divisible into $numSubspaces subspaces")
     dims / numSubspaces

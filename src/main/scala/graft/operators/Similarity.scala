@@ -182,198 +182,17 @@ object Similarity {
   }
 
   /**
-   * Deterministic k-means (Lloyd) on quantized vectors, for trained IVF
-   * coarse centroids. Seeds are evenly strided over the id order (not the
-   * first k — spread beats adjacency for synthetic and real corpora alike);
-   * each iteration assigns by exact integer squared-L2 (broadcast
-   * centroids, map-only) and recomputes centroids as the element-wise
-   * integer mean (DIV — truncating division; all-integer, so the result is
-   * identical under any partitioning, unlike FP-sum k-means). Centroids are
-   * collected per iteration (k·dims longs — tiny), which also truncates the
-   * plan lineage; the heavy side stays distributed.
+   * Trained IVF coarse centroids: deterministic integer k-means, the
+   * one-subspace codebook of PQ's trainer ([[Pq.lloyd]] — hash-bucket-min
+   * seeds, exact integer squared-L2 assignment, truncating-DIV means; small
+   * corpora train on the driver in one job).
    *
    * Returns (cell_id, cv array<long>, cn2) ready for [[assignCells]].
-   *
-   * Seed selection is a deterministic HASH-BUCKET MIN (one partial-agg
-   * groupBy at any corpus size, identical under any partitioning): each row
-   * hashes to one of k buckets by the high bits of the Knuth multiplicative
-   * hash of its id, and the minimum-id row per bucket seeds that cell. This
-   * gives ≤ k well-spread seeds for ANY id distribution — the id-STRIDE
-   * filter it replaces assumed dense ids and collapsed to a handful of
-   * seeds on sparse/segmented id spaces (the sf1 probe's replica-shifted
-   * ids got 4 cells out of 32, leaving cells 8× over-full). Cell ids are
-   * densified from the tiny collected seed set in ascending id order.
    */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 3): DataFrame =
-    kmeansOnQuantized(
-      df.select(col(idCol).as("item_id"), quantize(col(vecCol)).as("qv")),
-      k, iters)
-
-  /** Rows a training corpus may have and still run its Lloyd loop on the
-    * driver (one Spark job — the gating limit-collect — instead of one
-    * seed job + one job per iteration). Every arithmetic step of the
-    * driver loop is bit-identical to the distributed one (pinned by
-    * KmeansParitySpec across both paths, negatives included); `0` disables
-    * the driver path. 128k rows × 16 dims × 8 B ≈ 16 MB collected. */
-  val DriverMaxRowsKey = "spark.graft.kmeans.driverMaxRows"
-
-  /** [[kmeansCentroids]] over an ALREADY-quantized (item_id, qv) frame —
-    * also the per-subspace formulation PQ codebook training matches. Small
-    * corpora (≤ driverMaxRows — the k-means training sets of the IVF/PQ
-    * paths are samples by design) train entirely on the driver: the gating
-    * `limit(max+1)` probe is ONE cheap job and, when the corpus fits, IS
-    * the only pass over the data (VERDICT r11 #6: one job per training run
-    * instead of one per iteration). Larger corpora keep the distributed
-    * loop (localCheckpoint + per-iteration k-row collects). */
-  private[operators] def kmeansOnQuantized(v0: DataFrame,
-      k: Int, iters: Int): DataFrame = {
-    val spark = v0.sparkSession
-    val maxDriver =
-      try spark.conf.get(DriverMaxRowsKey, "131072").toInt
-      catch { case _: NumberFormatException => 131072 }
-    val probe =
-      if (maxDriver <= 0) Array.empty[org.apache.spark.sql.Row]
-      else v0.limit(maxDriver + 1).collect()
-    // work budget: the driver loop is single-threaded, so besides the row
-    // cap the total multiply count (rows·k·dims·iters) must stay small
-    // enough that serial beats the ~1 s of per-job scheduling it replaces;
-    // past it, fall back to the distributed loop (the probe cost one job)
-    def driverWorkOk(dims: Int): Boolean =
-      probe.length.toLong * k * dims * iters <= 4000000000L
-    // a null vector has no driver-side arithmetic: the distributed loop
-    // takes it (the driver path would NPE on it)
-    if (maxDriver > 0 && probe.length <= maxDriver && probe.nonEmpty &&
-        probe.forall(!_.isNullAt(1)) &&
-        driverWorkOk(probe(0).getSeq[Long](1).length)) {
-      val ids = probe.map(_.getLong(0))
-      val vecs = probe.map(_.getSeq[Long](1).toArray)
-      val cents = lloydDriver(ids, vecs, k, iters)
-      val l = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      cents.foreach { case (cid, cv) =>
-        l.add(org.apache.spark.sql.Row(cid, cv.toSeq)) }
-      return withNorm(spark.createDataFrame(l,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cell_id", IntegerType),
-          org.apache.spark.sql.types.StructField("cv", ArrayType(LongType))))))
-    }
-    val v = v0.localCheckpoint() // iterated iters + 1 times below
-    val seedList = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    seedRows(v, k).zipWithIndex.foreach { case (r, i) =>
-      seedList.add(org.apache.spark.sql.Row(i, r.getSeq[Long](1)))
-    }
-    var cents = spark.createDataFrame(seedList,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell_id", IntegerType),
-        org.apache.spark.sql.types.StructField("cv", ArrayType(LongType)))))
-    (1 to iters).foreach { _ =>
-      val assigned = assignCells(v, withNorm(cents))
-      val updated = v.join(assigned.select("item_id", "cell_id"), "item_id")
-        .select(col("cell_id"), posexplode(col("qv")).as(Seq("dim", "x")))
-        .groupBy(col("cell_id"), col("dim"))
-        .agg(expr("CAST(sum(x) DIV count(1) AS BIGINT)").as("cx"))
-        .groupBy(col("cell_id"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("cx")))),
-          s => s.getField("cx")).as("cv"))
-      // collect: k centroids of dims longs — truncates lineage, stays exact
-      val l = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      updated.collect().foreach(l.add)
-      cents = spark.createDataFrame(l,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cell_id", IntegerType),
-          org.apache.spark.sql.types.StructField("cv", ArrayType(LongType)))))
-    }
-    withNorm(cents)
-  }
-
-  /** Driver-side seed pick — the exact arithmetic of [[seedRows]]: bucket =
-    * (pmod(id, p) · 2654435761 mod p) · k DIV p (all operands non-negative,
-    * so Catalyst's truncating DIV = Java `/`), min-id row per bucket,
-    * ascending id order. */
-  private[operators] def driverSeeds(ids: Array[Long],
-      vecs: Array[Array[Long]], k: Int): Array[(Long, Array[Long])] = {
-    val p = 2147483647L
-    val best = scala.collection.mutable.LongMap.empty[Int] // bucket -> row idx
-    var i = 0
-    while (i < ids.length) {
-      val id = ids(i)
-      val h = (((id % p) + p) % p) * 2654435761L % p
-      val b = h * k / p
-      best.get(b) match {
-        case Some(j) if ids(j) <= id => ()
-        case _ => best.update(b, i)
-      }
-      i += 1
-    }
-    best.values.toArray.map(j => (ids(j), vecs(j))).sortBy(_._1)
-  }
-
-  /** Driver-side Lloyd loop, bit-identical to the distributed iteration:
-    * nearest cell by exact integer ‖a−c‖² with ties to the smaller
-    * cell_id; per-dim mean = Σx DIV count (Catalyst IntegralDivide
-    * truncates toward zero — Java `/`; KmeansParitySpec pins parity on
-    * negatives); cells that lose every member disappear, exactly as the
-    * distributed groupBy emits no row for them. */
-  private[operators] def lloydDriver(ids: Array[Long],
-      vecs: Array[Array[Long]], k: Int, iters: Int)
-      : Seq[(Int, Array[Long])] = {
-    val n = vecs.length
-    val norms = vecs.map(v => v.map(x => x * x).sum)
-    var cents: Seq[(Int, Array[Long])] =
-      driverSeeds(ids, vecs, k).zipWithIndex.map { case ((_, v), i) => (i, v) }
-    (1 to iters).foreach { _ =>
-      val cn2 = cents.map { case (cid, cv) =>
-        (cid, cv, cv.map(x => x * x).sum) }
-      // assignment: min (dist2, cell_id)
-      val sums = scala.collection.mutable.LinkedHashMap
-        .empty[Int, (Array[Long], Long)] // cell -> (per-dim sums, count)
-      var i = 0
-      while (i < n) {
-        val v = vecs(i)
-        var bestCell = -1
-        var bestDist = Long.MaxValue
-        cn2.foreach { case (cid, cv, c2) =>
-          var dot = 0L
-          var d = 0
-          while (d < v.length) { dot += v(d) * cv(d); d += 1 }
-          val dist2 = norms(i) + c2 - 2L * dot
-          if (dist2 < bestDist || (dist2 == bestDist && cid < bestCell)) {
-            bestDist = dist2; bestCell = cid
-          }
-        }
-        val (acc, c) = sums.getOrElseUpdate(bestCell,
-          (new Array[Long](v.length), 0L))
-        var d = 0
-        while (d < v.length) { acc(d) += v(d); d += 1 }
-        sums.update(bestCell, (acc, c + 1L))
-        i += 1
-      }
-      cents = sums.toSeq.map { case (cid, (acc, c)) =>
-        (cid, acc.map(_ / c)) // truncating, = Catalyst DIV
-      }.sortBy(_._1)
-    }
-    cents
-  }
-
-  private def withNorm(cents: DataFrame): DataFrame =
-    cents.select(col("cell_id"), col("cv"), norm2Q(col("cv")).as("cn2"))
-
-  /** Deterministic ≤ k seed rows (item_id, qv) for k-means: min-id row per
-    * hash bucket, bucket = high bits of the Knuth hash of the id (one
-    * partial-agg groupBy; identical on any partitioning; robust to sparse
-    * or segmented id spaces). Sorted by item_id for stable cell numbering.
-    * Buckets with no rows simply contribute no seed (≤ k cells). */
-  private[operators] def seedRows(v: DataFrame, k: Int)
-      : Array[org.apache.spark.sql.Row] = {
-    val p = 2147483647L
-    val h = (pmod(col("item_id"), lit(p)) * 2654435761L) % p
-    v.withColumn("__bucket", IntMath.idiv(h * k, lit(p)))
-      .groupBy(col("__bucket"))
-      .agg(min_by(struct(col("item_id"), col("qv")), col("item_id")).as("s"))
-      .select(col("s.item_id").as("item_id"), col("s.qv").as("qv"))
-      .orderBy(col("item_id"))
-      .collect()
-  }
+    Pq.lloyd(df.select(col(idCol).as("item_id"), quantize(col(vecCol)).as("qv")),
+      1, k, iters).drop("sub_id")
 
   /** Nearest-cell assignment by exact integer squared-L2
     * (‖a−c‖² = ‖a‖² + ‖c‖² − 2a·c); centroids broadcast → map-only at any

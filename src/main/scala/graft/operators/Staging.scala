@@ -19,24 +19,24 @@ import org.apache.spark.storage.StorageLevel
  * `ngramJaccardPairs`, caching the exploded shingle frame cost 122-259 s
  * CPU against a 64 s steady state recomputing it.
  *
- * LIFETIME (the round-9 ownership contract): every staged frame registers
- * a plan in the session CacheManager, which holds it until explicitly
- * unpersisted. Operators stage frames INTERNAL to their plans,
- * so callers can't pair stage/unstage themselves. Stage() therefore tracks
- * every persisted frame in a SESSION-SCOPED FIFO registry with a budget
- * (`spark.graft.staging.budget`, default 64 live frames): staging past the
- * budget unpersists the oldest entry. A long-lived session invoking staged
- * operators in a loop holds O(budget) cached plans instead of O(calls) —
- * an evicted stage is still CORRECT (its plan recomputes; `persist` keeps
- * lineage by design), it just stops being cached. [[releaseAll]] drops
- * everything at once (blocking, for benchmarks and batch-job teardown);
- * [[unstage]] releases one frame early when the operator knows its last
- * consumer has run (e.g. the sink's per-batch banding).
+ * LIFETIME: every staged frame registers a plan in the session
+ * CacheManager, which holds it until explicitly unpersisted. Operators
+ * stage frames INTERNAL to their plans, so callers can't pair
+ * stage/unstage themselves. Stage() therefore tracks every persisted frame
+ * in a SESSION-SCOPED FIFO registry of at most [[Budget]] live frames:
+ * staging past it unpersists the oldest entry. A long-lived session
+ * invoking staged operators in a loop holds O(budget) cached plans instead
+ * of O(calls) — an evicted stage is still CORRECT (its plan recomputes;
+ * `persist` keeps lineage by design), it just stops being cached.
+ * [[releaseAll]] drops everything at once (blocking, for benchmarks and
+ * batch-job teardown); [[unstage]] releases one frame early when the
+ * operator knows its last consumer has run (e.g. the sink's per-batch
+ * banding).
  */
 object Staging {
 
-  val BudgetKey = "spark.graft.staging.budget"
-  val DefaultBudget = 64
+  /** Live staged frames a session keeps before the oldest is evicted. */
+  val Budget = 64
 
   // WeakHashMap: a session that ends (and is no longer referenced) drops its
   // queue with it. All mutation synchronized on the registry — stage() can
@@ -52,27 +52,25 @@ object Staging {
   private val evictions = new java.util.concurrent.atomic.AtomicLong(0)
   def evictionCount: Long = evictions.get
 
-  def stage(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    register(p)
-    p
-  }
+  def stage(df: DataFrame): DataFrame = stage(df, Budget)
 
-  private def register(df: DataFrame): Unit = registry.synchronized {
-    val q = registry.computeIfAbsent(df.sparkSession,
-      _ => new java.util.ArrayDeque[DataFrame]())
-    q.addLast(df)
-    val budget =
-      try df.sparkSession.conf.get(BudgetKey, DefaultBudget.toString).toInt
-      catch { case _: NumberFormatException => DefaultBudget }
-    while (q.size > budget) {
-      val oldest = q.pollFirst()
-      evictions.incrementAndGet()
-      // non-blocking: eviction is bookkeeping on the hot path; the blocks
-      // drain in the background. Benchmarks wanting quiesced state between
-      // runs use releaseAll(blocking = true).
-      try oldest.unpersist(false) catch { case _: Throwable => () }
+  /** [[stage]] with the session's registry held to `budget` live frames. */
+  private[operators] def stage(df: DataFrame, budget: Int): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    registry.synchronized {
+      val q = registry.computeIfAbsent(p.sparkSession,
+        _ => new java.util.ArrayDeque[DataFrame]())
+      q.addLast(p)
+      while (q.size > budget) {
+        val oldest = q.pollFirst()
+        evictions.incrementAndGet()
+        // non-blocking: eviction is bookkeeping on the hot path; the blocks
+        // drain in the background. Benchmarks wanting quiesced state
+        // between runs use releaseAll(blocking = true).
+        try oldest.unpersist(false) catch { case _: Throwable => () }
+      }
     }
+    p
   }
 
   /** Release a staged frame once its consumers have run. Removes it from

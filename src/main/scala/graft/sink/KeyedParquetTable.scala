@@ -433,17 +433,10 @@ class KeyedParquetTable(
       binding: String = DefaultBinding,
       retain: Option[Column] = None,
       knownTouched: Option[Set[Int]] = None): Unit = synchronized {
-    val phases = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val timed = new KeyedParquetTable.Timer {
-      def apply[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        try f
-        finally phases += name -> (System.nanoTime() - t0) / 1000000L
-      }
-    }
+    val timed = new StageTimer
     try KeyedParquetTable.withMicroBatchSplits(spark) {
       applyBatchTimed(batch, batchId, binding, retain, timed)
-    } finally lastApplyPhaseMs = phases.toMap
+    } finally lastApplyPhaseMs = timed.toMap
   }
 
   /** Wall ms of the last [[applyBatch]]'s internal stages (`merge_write` =
@@ -466,7 +459,7 @@ class KeyedParquetTable(
 
   private def applyBatchTimed(batch: DataFrame, batchId: Long,
       binding: String, retain: Option[Column],
-      timed: KeyedParquetTable.Timer): Unit = {
+      timed: StageTimer): Unit = {
     val m = currentMeta
     if (batchId != Long.MinValue && batchId <= m.lastFor(binding)) return
     val v = m.maxV + 1
@@ -522,12 +515,6 @@ class KeyedParquetTable(
 }
 
 object KeyedParquetTable {
-  /** Polymorphic stage timer for [[KeyedParquetTable.applyBatch]]'s
-    * sub-phase attribution (same shape as SinkPipeline's Phaser). */
-  private[sink] trait Timer {
-    def apply[A](name: String)(f: => A): A
-  }
-
   /** Run `f` with `spark.sql.files.minPartitionNum = 1` — the micro-batch
     * latency scope (a state merge, a whole processBatch). Spark's split
     * packing aims `bytesPerCore = (totalBytes + files·openCost) /

@@ -457,20 +457,7 @@ class SinkPipeline(
   @volatile var lastBatchPhaseMs: Map[String, Long] = Map.empty
 
   private def processBatchInner(records: DataFrame, batchId: Long): Unit = {
-    val phases = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val phase = new SinkPipeline.Phaser {
-      def apply[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        try f
-        finally phases.synchronized {
-          phases += name ->
-            (phases.getOrElse(name, 0L) + (System.nanoTime() - t0) / 1000000L)
-        }
-      }
-      def add(name: String, ms: Long): Unit = phases.synchronized {
-        phases += name -> (phases.getOrElse(name, 0L) + ms)
-      }
-    }
+    val phase = new graft.sink.StageTimer
     // the whole micro-batch is a latency path over small per-batch frames:
     // plan its file scans with the split floor at 1 (see
     // KeyedParquetTable.withMicroBatchSplits — at scale the 128 MB split
@@ -478,11 +465,11 @@ class SinkPipeline(
     try graft.sink.KeyedParquetTable.withMicroBatchSplits(
       records.sparkSession) {
       processBatchPhased(records, batchId, phase)
-    } finally lastBatchPhaseMs = phases.toMap
+    } finally lastBatchPhaseMs = phase.toMap
   }
 
   private def processBatchPhased(records: DataFrame, batchId: Long,
-      phase: SinkPipeline.Phaser): Unit = {
+      phase: graft.sink.StageTimer): Unit = {
     val spark = records.sparkSession
     if (!metricsRegistered) synchronized {
       if (!metricsRegistered) {
@@ -682,15 +669,6 @@ class SinkPipeline(
 }
 
 object SinkPipeline {
-  /** Polymorphic stage-timing hook for [[SinkPipeline.processBatch]]'s
-    * phase attribution (`lastBatchPhaseMs`). */
-  private[streaming] trait Phaser {
-    def apply[A](name: String)(f: => A): A
-    /** Fold an externally measured duration into the phase map (the store's
-      * applyBatch sub-phases). */
-    def add(name: String, ms: Long): Unit
-  }
-
   /** Named long counters that ride `frame`'s first downstream job as an
     * [[Observation]]: returns the observed frame and a read that never
     * blocks. The read drains the listener bus (observed metrics arrive

@@ -1,16 +1,18 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** The driver-side Lloyd path (Similarity.lloydDriver, gated by
-  * spark.graft.kmeans.driverMaxRows) must be BIT-IDENTICAL to the
-  * distributed loop it replaces on small corpora — seeds, truncating-DIV
-  * means (negatives included: Catalyst IntegralDivide truncates toward
-  * zero), (dist², cell_id) tie-breaks, and empty-cell disappearance. The
-  * oracle gate re-checks end to end; this spec pins the arithmetic at the
-  * operator level for both the IVF trainer and the PQ codebook trainer. */
+/** The one k-means trainer ([[Pq.lloyd]]) runs small corpora on the
+  * driver and larger ones as a distributed loop; `driverMaxRows = 0`
+  * forces the distributed loop. The two must be BIT-IDENTICAL — seeds,
+  * truncating-DIV means (negatives included: Catalyst IntegralDivide
+  * truncates toward zero), (dist², cell_id) tie-breaks, and empty-cell
+  * disappearance. The oracle gate re-checks end to end; this spec pins the
+  * arithmetic at the operator level for both the IVF centroids (one
+  * subspace) and the PQ codebooks. */
 class KmeansParitySpec extends SparkSuite {
 
   // deterministic synthetic corpus with NEGATIVE coordinates (negative
@@ -33,75 +35,88 @@ class KmeansParitySpec extends SparkSuite {
       .map(r => (r.getInt(0), r.getSeq[Long](1).toList, r.getLong(2)))
       .sortBy(_._1).toList
 
+  private def sortedCb(cb: DataFrame) =
+    cb.select("sub_id", "cell_id", "cv", "cn2").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toList,
+        r.getLong(3)))
+      .sortBy(t => (t._1, t._2)).toList
+
+  /** The trainer's own path: (item_id, qv) with `driverMaxRows` forced. */
+  private def trained(df: DataFrame, numSubspaces: Int, k: Int, iters: Int,
+      driverMaxRows: Int) =
+    Pq.lloyd(df.select(col("vec_id").as("item_id"),
+        Similarity.quantize(col("embedding")).as("qv")),
+      numSubspaces, k, iters, driverMaxRows)
+
   test("kmeansCentroids: driver path == distributed path, negatives included") {
     val df = corpus(400, 16)
-    val s = sqlc
-    s.conf.set(Similarity.DriverMaxRowsKey, "131072")
     val driver = collectSorted(
       Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 8, iters = 3))
-    s.conf.set(Similarity.DriverMaxRowsKey, "0") // force distributed
-    val dist = collectSorted(
-      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 8, iters = 3))
-    s.conf.unset(Similarity.DriverMaxRowsKey)
+    val dist = collectSorted(trained(df, 1, 8, 3, driverMaxRows = 0))
     assert(driver.nonEmpty)
     assert(driver === dist)
   }
 
   test("trainCodebooks: driver path == distributed path per subspace") {
     val df = corpus(300, 16)
-    val s = sqlc
-    def sorted(cb: org.apache.spark.sql.DataFrame) =
-      cb.select("sub_id", "cell_id", "cv", "cn2").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toList,
-          r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toList
-    s.conf.set(Similarity.DriverMaxRowsKey, "131072")
-    val driver = sorted(Pq.trainCodebooks(df, "vec_id", "embedding",
+    val driver = sortedCb(Pq.trainCodebooks(df, "vec_id", "embedding",
       numSubspaces = 4, cellsPerSub = 8, iters = 3))
-    s.conf.set(Similarity.DriverMaxRowsKey, "0")
-    val dist = sorted(Pq.trainCodebooks(df, "vec_id", "embedding",
-      numSubspaces = 4, cellsPerSub = 8, iters = 3))
-    s.conf.unset(Similarity.DriverMaxRowsKey)
+    val dist = sortedCb(trained(df, 4, 8, 3, driverMaxRows = 0))
     assert(driver.nonEmpty)
     assert(driver === dist)
   }
 
   test("driver gate: corpus past driverMaxRows falls back (same result)") {
     val df = corpus(200, 8)
-    val s = sqlc
-    s.conf.set(Similarity.DriverMaxRowsKey, "50") // 200 rows > 50 → distributed
-    val a = collectSorted(
-      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2))
-    s.conf.set(Similarity.DriverMaxRowsKey, "131072")
+    val a = collectSorted(trained(df, 1, 4, 2, driverMaxRows = 50)) // 200 > 50
     val b = collectSorted(
       Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2))
-    s.conf.unset(Similarity.DriverMaxRowsKey)
     assert(a === b)
   }
 
-  test("driver gate: a null vector takes the distributed loop, not an NPE") {
+  test("a null vector with the first id trains as if absent, both paths") {
     val s = sqlc
     import s.implicits._
-    val df = corpus(200, 8).unionByName(
-      Seq((99999999L, Option.empty[Seq[Double]])).toDF("vec_id", "embedding"))
-    def sortedCb(cb: org.apache.spark.sql.DataFrame) =
-      cb.select("sub_id", "cell_id", "cv", "cn2").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toList,
-          r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toList
-    def both[A](run: => A): (A, A) = {
-      s.conf.set(Similarity.DriverMaxRowsKey, "131072")
-      val gated = run
-      s.conf.set(Similarity.DriverMaxRowsKey, "0") // force distributed
-      val dist = run
-      s.conf.unset(Similarity.DriverMaxRowsKey)
-      (gated, dist)
-    }
-    val (a, b) = both(collectSorted(
-      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2)))
-    assert(a.nonEmpty && a === b)
-    val (c, d) = both(sortedCb(Pq.trainCodebooks(df, "vec_id", "embedding",
-      numSubspaces = 2, cellsPerSub = 4, iters = 2)))
-    assert(c.nonEmpty && c === d)
+    val clean = corpus(200, 8)
+    // id 1 is below every corpus id, so the null row is its seed bucket's
+    // min id — as a seed it would pull every vector into one cell
+    val df = Seq((1L, Option.empty[Seq[Double]])).toDF("vec_id", "embedding")
+      .unionByName(clean)
+    val want = collectSorted(
+      Similarity.kmeansCentroids(clean, "vec_id", "embedding", k = 4, iters = 2))
+    assert(want.size > 1)
+    val driver = collectSorted(
+      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2))
+    val dist = collectSorted(trained(df, 1, 4, 2, driverMaxRows = 0))
+    assert(driver === want)
+    assert(dist === want)
+    val cbWant = sortedCb(Pq.trainCodebooks(clean, "vec_id", "embedding",
+      numSubspaces = 2, cellsPerSub = 4, iters = 2))
+    assert(sortedCb(Pq.trainCodebooks(df, "vec_id", "embedding",
+      numSubspaces = 2, cellsPerSub = 4, iters = 2)) === cbWant)
+    assert(sortedCb(trained(df, 2, 4, 2, driverMaxRows = 0)) === cbWant)
+  }
+
+  test("empty corpus: training, IVF assignment and PQ return empty frames") {
+    val empty = corpus(20, 8).filter(lit(false))
+    val cents = Similarity.kmeansCentroids(empty, "vec_id", "embedding", k = 4)
+    assert(cents.columns.toSeq == Seq("cell_id", "cv", "cn2"))
+    assert(cents.count() == 0)
+    assert(trained(empty, 1, 4, 3, driverMaxRows = 0).count() == 0)
+    assert(Similarity.ivfCellsTrained(empty, "vec_id", "embedding",
+      nCells = 4).count() == 0)
+    val cb = Pq.trainCodebooks(empty, "vec_id", "embedding",
+      numSubspaces = 2, cellsPerSub = 4)
+    assert(cb.columns.toSeq == Seq("sub_id", "cell_id", "cv", "cn2"))
+    assert(cb.count() == 0)
+    val codes = Pq.encode(empty, "vec_id", "embedding", cb, numSubspaces = 2)
+    assert(codes.columns.toSeq == Seq("item_id", "sub_id", "code"))
+    assert(codes.count() == 0)
+    assert(Pq.adcTopK(codes, empty, "vec_id", "embedding", cb,
+      numSubspaces = 2).count() == 0)
+    val err = Pq.reconstructionError(empty, "vec_id", "embedding", cb,
+      numSubspaces = 2)
+    assert(err.columns.toSeq == Seq("item_id", "err2"))
+    assert(err.count() == 0)
   }
 }

@@ -23,7 +23,6 @@ class StagingSpec extends SparkSuite {
   test("repeated staged-operator calls hold O(budget) cached plans, results unchanged") {
     val s = sqlc
     Staging.releaseAll(s)
-    s.conf.set(Staging.BudgetKey, "3")
     try {
       val d = docs()
       def once(): Seq[(Long, Long)] =
@@ -31,18 +30,20 @@ class StagingSpec extends SparkSuite {
           Dedup.minhashBands(Dedup.minhashSignatures(d, "text", "doc_id")))
           .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
           .sorted.toSeq
+      // fill the registry to its budget (staging is lazy: no job runs), so
+      // every stage the operator makes below evicts one
+      val filler = (1 to Staging.Budget).map(i =>
+        Staging.stage(d.filter(col("doc_id") >= i.toLong)))
       val first = once()
       assert(first.nonEmpty, "fixture must produce candidate pairs")
       // 12 invocations of an operator that stages internally: without the
-      // registry budget this pins 12 CacheManager plans for the session's
-      // life (the round-8 leak); with it, the oldest evict as new ones stage
+      // registry budget this pins 12 more CacheManager plans for the
+      // session's life; with it, the oldest evict as new ones stage
       (1 to 11).foreach { _ => assert(once() == first) }
-      assert(Staging.registeredCount(s) <= 3,
+      assert(Staging.registeredCount(s) <= Staging.Budget,
         s"staged-frame registry exceeded its budget: ${Staging.registeredCount(s)}")
-    } finally {
-      s.conf.unset(Staging.BudgetKey)
-      Staging.releaseAll(s)
-    }
+      assert(filler.head.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    } finally Staging.releaseAll(s)
   }
 
   test("releaseAll drops every live stage; unstage removes one") {
@@ -78,19 +79,16 @@ class StagingSpec extends SparkSuite {
   test("budget eviction unpersists the OLDEST stage and keeps results correct") {
     val s = sqlc
     Staging.releaseAll(s)
-    s.conf.set(Staging.BudgetKey, "2")
     try {
-      val first = Staging.stage(docs())
+      val first = Staging.stage(docs(), budget = 2)
       first.count() // materialize
-      val more = (1 to 3).map(i => Staging.stage(docs().filter(col("doc_id") >= i)))
+      val more = (1 to 3).map(i =>
+        Staging.stage(docs().filter(col("doc_id") >= i), budget = 2))
       more.foreach(_.count())
       assert(Staging.registeredCount(s) <= 2)
       // evicted frame: no longer cached, but still CORRECT (lineage kept)
       assert(first.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       assert(first.count() == 200L)
-    } finally {
-      s.conf.unset(Staging.BudgetKey)
-      Staging.releaseAll(s)
-    }
+    } finally Staging.releaseAll(s)
   }
 }
