@@ -452,8 +452,8 @@ object Bench {
       catch { case _: Throwable => results += name -> -1.0 }
     }
 
-    // ---- bucketed sink state: a 1-key micro-batch merge must not scale
-    // with total state size (touched-bucket merge, not full rewrite) ----
+    // ---- append-only sink state: a 1-key micro-batch write must not scale
+    // with total state size (one run appended, no state rewritten) ----
     def mappedBatch(n: Long): DataFrame = spark.range(n).select(
       col("id").as("my_pk"), col("id").as("my_value"),
       lit(100L).as(RecordMapper.WritetimeCol),
@@ -469,8 +469,7 @@ object Bench {
       // fresh state per run (a replayed batchId would no-op); median of 3
       val runs = (1 to 3).map { i =>
         val dir = java.nio.file.Files.createTempDirectory("graft-bench-state")
-        val t = new graft.sink.KeyedParquetTable(spark, tbl, dir.toString,
-          numBuckets = 64)
+        val t = new graft.sink.KeyedParquetTable(spark, tbl, dir.toString)
         t.applyBatch(mappedBatch(stateRows), 1L)
         val sec = time { t.applyBatch(mappedBatch(1L), 2L) }
         deleteTree(dir)
@@ -482,7 +481,7 @@ object Bench {
     val merge200k = if (fullRun) mergeOneKeyAt(200000L) else -1.0
 
     // ---- sink-dedup batch path: the config-reachable `dedup=exact` stage
-    // (hash → touched-bucket anti-join → first-copy pick → merge + sightings
+    // (hash → seen-store anti-join → first-copy pick → merge + sightings
     // commit) over the whole events frame into a FRESH store per run — the
     // per-run temp root keeps runs comparable (a warm store would dedup the
     // second run to nothing) ----
@@ -626,7 +625,7 @@ object Bench {
     // ---- end-to-end sink stream steady state (VERDICT r9 #6, series
     // length + state attribution VERDICT r10 #2): the FULL processBatch
     // path — DSIR quality gate + near-dedup state merge + mapping + LWW
-    // bucket merge + metrics — through a real micro-batch stream, one
+    // run write + metrics — through a real micro-batch stream, one
     // FIXED-SIZE input file per trigger, ONE durable store across batches.
     // Returns (total sec, per-batch secs, per-batch state/diag JSON rows):
     // per-batch store bytes/files (LWW table and dedup band store
@@ -958,7 +957,7 @@ object Bench {
         sf1Results += "state_merge_1key_1m_sec" -> mergeOneKeyAt(1000000L)
 
       // ---- ingest benches at 10× the data (VERDICT r10 #5): state 10×
-      // larger is exactly where the O(touched-buckets) merge claim
+      // larger is exactly where the O(batch) run-write claim
       // matters. ONE pass each — the 16-batch series itself is the
       // evidence (per-batch state/phase diagnostics in
       // `sf1_sink_stream_state`, flat gate in `sf1_sink_stream_flat_ratio`);

@@ -54,12 +54,18 @@ object Staging {
 
   def stage(df: DataFrame): DataFrame = stage(df, Budget)
 
-  /** [[stage]] with the session's registry held to `budget` live frames. */
+  /** [[stage]] with the session's registry held to `budget` live frames.
+    * Staging a plan the registry already holds refreshes its entry: Spark
+    * caches a plan once, and unpersisting any handle of it uncaches every
+    * handle, so two entries would count twice against the budget and the
+    * older one's eviction would uncache the newer stage. */
   private[operators] def stage(df: DataFrame, budget: Int): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     registry.synchronized {
       val q = registry.computeIfAbsent(p.sparkSession,
         _ => new java.util.ArrayDeque[DataFrame]())
+      val plan = p.queryExecution.analyzed
+      q.removeIf(_.queryExecution.analyzed.sameResult(plan))
       q.addLast(p)
       while (q.size > budget) {
         val oldest = q.pollFirst()

@@ -3,10 +3,9 @@ package graft.sink
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{RecordMapper, Upserts}
@@ -19,54 +18,53 @@ import graft.operators.{RecordMapper, Upserts}
  * writer — the merge algebra in [[Upserts]] is identical).
  *
  * The store is APPEND-ONLY with merge-on-read, the log-structured shape
- * Cassandra itself has: a write never reads state. Rows are hash-bucketed
- * by primary key into `numBuckets` buckets, and every version directory
- * `v<N>/` holds one `__bucket=<k>/` directory per bucket it wrote. The
- * manifest (`CURRENT`) maps each bucket to its BASE version; the bucket's
- * RUNS are the versions in (base, maxV] that hold the bucket and a
- * `_SUCCESS` marker.
+ * Cassandra itself has: a write never reads state. Every version directory
+ * `v<N>/` holds plain parquet files, one per write task, the way Cassandra
+ * writes one SSTable per memtable flush. The manifest (`CURRENT`) lists the
+ * live versions with their row counts: the oldest is the BASE, the folded
+ * state as of some batch, and every later one is a RUN, one batch's raw
+ * write rows.
  *
  *  - '''Write.''' [[applyBatch]] writes the mapped batch as one new run
  *    `v<N>/`: its raw rows with `__mode`, `__writetime`, `__ttl_seconds`
  *    and the cells it carries, in one map-only job. Then it flips the
  *    manifest. A batch's cost tracks the batch, not the state.
- *  - '''Read.''' [[state]] and [[stateForBuckets]] fold each bucket's base
- *    and runs with the mode's merge ([[Upserts.fold]]): one pk shuffle
+ *  - '''Read.''' [[state]] folds the base and the runs with the mode's
+ *    merge ([[Upserts.fold]]) from one scan of their directories, each
+ *    row's run read off the version its file sits in: one pk shuffle
  *    however many runs there are, equal to merging the runs one batch at a
  *    time, oldest first.
- *  - '''Compaction''' is derived from the data. Once a bucket's run bytes
- *    exceed its base bytes, the batch that tipped it folds base and runs
- *    into a new base, written into that batch's own version directory in
- *    place of its run. That batch pays for a compaction job anyway, so
- *    every other bucket it lands in whose runs exceed half its base folds
- *    in the same job: hash buckets fill at the same pace, and without this
- *    the few a little behind would each cost a second compaction batch
- *    right after the first. A base grows by at least half at each
- *    compaction, so a row is rewritten O(log n) times, and the bytes on
- *    disk stay within about twice the folded state plus one batch. A
- *    bucket also compacts once it holds `numBuckets` runs, so a read scans
- *    at most `numBuckets` runs however long the stream has run.
+ *  - '''Compaction''' is derived from the data. Once the runs hold more
+ *    rows than the base, the batch that tipped it folds base and runs into
+ *    a new base, written into that batch's own version directory in place
+ *    of its run. The base at least doubles at each compaction, so a row is
+ *    rewritten O(log n) times, and the rows on disk stay within about twice
+ *    the folded state plus one batch. The store also compacts once it holds
+ *    [[KeyedParquetTable.MaxRuns]] runs, so a read scans a bounded number
+ *    of versions however long the stream has run.
  *  - '''Direct fold.''' When a batch is known to compact before it is
  *    written, it skips the run: base, runs and the batch fold in one job
- *    into new bases for every bucket. That is the case for a batch into an
- *    empty table, a batch with `retain` (its folded rows failing the
- *    predicate are dropped), a bucket at the run bound, and a batch
- *    predicted to outweigh a bucket's base and runs together (hot keys).
- *    The prediction is the heavier of the last two batches (rows, times
- *    the last run's bytes per row). Folding such a batch directly costs
- *    about what its run write would, since the state is the lighter side;
- *    a heavier state writes the run, and a wrong guess then costs at most
- *    one run write and read. [[sweep]] compacts every bucket.
+ *    into a new base. That is the case for a batch into an empty table, a
+ *    batch with `retain` (its folded rows failing the predicate are
+ *    dropped), a store at the run bound, and a batch predicted to outweigh
+ *    base and runs together (hot keys). The prediction is the heavier of
+ *    the last two batches' rows, kept in the manifest, so it survives a
+ *    reopen. Folding such a batch directly costs about what its run write
+ *    would, since the state is the lighter side; a heavier state writes the
+ *    run, and a wrong guess then costs at most one run write and read.
+ *    [[sweep]] folds the whole store.
  *
- * A crash before the flip leaves only versions above maxV, which every
- * reader ignores, the replayed batch overwrites and [[vacuum]] deletes.
+ * The row counts come from the writes' [[org.apache.spark.sql.Observation]]s
+ * and steer compaction only: a read scans every live version whatever its
+ * count. A crash before the flip leaves only versions above maxV, which
+ * every reader ignores, the replayed batch overwrites and [[vacuum]]
+ * deletes.
  */
 class KeyedParquetTable(
     spark: SparkSession,
     val table: SinkTable,
     root: String,
     nullToUnset: Boolean = true,
-    numBuckets: Int = 16,
     /** Parquet codec for state files (X2 `compression` mapped via
       * `SinkConfig.Config.parquetCodec`). */
     compression: String = "snappy",
@@ -74,8 +72,9 @@ class KeyedParquetTable(
       * the reference's `maxConcurrentRequests` in-flight-writes throttle
       * (KAF-60), wired from `SinkConfig` by `SinkPipeline.store`. Applied
       * as a `coalesce` right before every run or compaction write, so a
-      * version write never runs more than this many parallel tasks. The default is effectively "no cap" for any sane local or
-      * cluster parallelism. */
+      * version write never runs more than this many parallel tasks, and
+      * never holds more than this many files. The default is effectively
+      * "no cap" for any sane local or cluster parallelism. */
     maxWriteTasks: Int = Int.MaxValue,
     /** `row`: one writetime per row ([[Upserts.mergeInto]]); `cell`:
       * per-column writetimes persisted as `__wt_<col>` state columns
@@ -88,25 +87,23 @@ class KeyedParquetTable(
       * replacing the cell). */
     mergeMode: String = "row") {
 
+  import KeyedParquetTable.MaxRuns
+
   require(Set("row", "cell", "entry").contains(mergeMode),
     s"mergeMode must be row, cell or entry (got '$mergeMode')")
-
-  val BucketCol = "__bucket"
 
   private val rootPath = Paths.get(root)
   Files.createDirectories(rootPath)
 
   private def currentFile = rootPath.resolve("CURRENT")
 
-  private def bucketOf: Column =
-    pmod(hash(table.primaryKey.map(col): _*), lit(numBuckets))
-
   /** The replay-guard key used when no binding is named: single-writer
     * tables (the common case) track one batch watermark. */
   val DefaultBinding = "_"
 
-  /** Manifest: last applied batch id PER BINDING, newest version, bucket →
-    * version. Replay of an already-applied micro-batch is a no-op, which
+  /** Manifest: last applied batch id PER BINDING, newest version, the rows
+    * of the last two batches, and the live versions with their rows, base
+    * first. Replay of an already-applied micro-batch is a no-op, which
     * upgrades the pipeline to exactly-once even for counters (the one write
     * mode LWW can't make replay-idempotent; reference hard part, SURVEY
     * §7.4). The watermark is per binding because several bindings can fan
@@ -115,13 +112,20 @@ class KeyedParquetTable(
     * would make the second binding's merge of the SAME batch look like a
     * replay and silently drop its records.
     *
-    * The header also pins `numBuckets` (bucketOf re-hashes keys, so a
-    * different bucket count would silently read the wrong partitions) and
-    * `mergeMode` (cell mode persists `__wt_<col>` columns a row-mode reopen
-    * would drop) — a mismatch fails fast instead. */
+    * `CURRENT` reads `<maxV> <mergeMode> <rows> <rows>`, then one
+    * `b <binding> <batch>` line per binding and one `<v>:<rows>` line per
+    * live version. The header pins `mergeMode` (cell mode persists
+    * `__wt_<col>` columns a row-mode reopen would drop): a mismatch fails
+    * fast instead, and so does the bucketed layout's header. */
   private case class Meta(lastBatch: Map[String, Long], maxV: Int,
-      buckets: Map[Int, Int]) {
+      recent: (Long, Long), live: Seq[(Int, Long)]) {
     def lastFor(binding: String): Long = lastBatch.getOrElse(binding, -1L)
+    def versions: Seq[Int] = live.map(_._1)
+    def baseRows: Long = live.headOption.fold(0L)(_._2)
+    def runs: Seq[(Int, Long)] = live.drop(1)
+    /** A batch's rows, as the last two batches predict them. */
+    def predicted: Long = math.max(recent._1, recent._2)
+    def observed(rows: Long): Meta = copy(recent = (recent._2, rows))
   }
 
   private def enc(s: String) =
@@ -130,34 +134,34 @@ class KeyedParquetTable(
     java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
 
   private def currentMeta: Meta =
-    if (!Files.exists(currentFile)) Meta(Map.empty, 0, Map.empty)
+    if (!Files.exists(currentFile)) Meta(Map.empty, 0, (0L, 0L), Nil)
     else {
       val lines = Files.readString(currentFile).trim.split('\n')
       val head = lines.head.split(' ')
-      require(head.length == 3,
+      require(!(head.length == 3 && head(1).forall(_.isDigit)),
+        s"state at $root has the bucketed layout (manifest header " +
+          s"'${lines.head}', rows in __bucket=<k> directories), which this " +
+          "store no longer reads — replay the table's source into a fresh root")
+      require(head.length == 4,
         s"unrecognized manifest header at $root: '${lines.head}'")
-      require(head(1).toInt == numBuckets,
-        s"state at $root was written with numBuckets=${head(1)} but opened " +
-          s"with numBuckets=$numBuckets; re-hashing keys would corrupt " +
-          "bucket pruning — open with the original bucket count")
-      require(head(2) == mergeMode,
-        s"state at $root was written with mergeMode=${head(2)} but opened " +
+      require(head(1) == mergeMode,
+        s"state at $root was written with mergeMode=${head(1)} but opened " +
           s"with mergeMode=$mergeMode — open with the original merge mode")
-      val (bindingLines, bucketLines) = lines.tail.filter(_.nonEmpty)
+      val (bindingLines, versionLines) = lines.tail.filter(_.nonEmpty)
         .partition(_.startsWith("b "))
       val lastBatch = bindingLines.map { ln =>
         val Array(_, k, v) = ln.split(' '); dec(k) -> v.toLong
       }.toMap
-      val buckets = bucketLines.map { ln =>
-        val Array(k, ver) = ln.split(':'); k.toInt -> ver.toInt
-      }.toMap
-      Meta(lastBatch, head(0).toInt, buckets)
+      val live = versionLines.map { ln =>
+        val Array(v, n) = ln.split(':'); v.toInt -> n.toLong
+      }.toSeq.sortBy(_._1)
+      Meta(lastBatch, head(0).toInt, (head(2).toLong, head(3).toLong), live)
     }
 
   private def writeMeta(m: Meta): Unit = {
-    val body = (s"${m.maxV} $numBuckets $mergeMode" +:
+    val body = (s"${m.maxV} $mergeMode ${m.recent._1} ${m.recent._2}" +:
       (m.lastBatch.toSeq.sortBy(_._1).map { case (k, v) => s"b ${enc(k)} $v" } ++
-        m.buckets.toSeq.sorted.map { case (k, v) => s"$k:$v" })).mkString("\n")
+        m.live.map { case (v, n) => s"$v:$n" })).mkString("\n")
     val tmp = rootPath.resolve("CURRENT.tmp")
     Files.writeString(tmp, body)
     // durable before visible: a crash after the rename must not leave a
@@ -197,7 +201,6 @@ class KeyedParquetTable(
 
   private val VersionDir = "v(\\d+)".r
   private def versionDir(v: Int): Path = rootPath.resolve(s"v$v")
-  private def leaf(v: Int, k: Int): Path = versionDir(v).resolve(s"$BucketCol=$k")
 
   private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
@@ -206,123 +209,51 @@ class KeyedParquetTable(
       finally st.close()
     }
 
-  private def list(dir: Path): Seq[Path] = {
-    val ls = Files.list(dir)
-    try ls.iterator().asScala.toVector finally ls.close()
-  }
-
-  /** Bucket → data bytes (checksums and markers excluded) of one version
-    * directory; empty when it has no `_SUCCESS`, i.e. never completed. */
-  private def bucketBytes(v: Int): Map[Int, Long] =
-    if (!Files.exists(versionDir(v).resolve("_SUCCESS"))) Map.empty
-    else list(versionDir(v)).map(_.getFileName.toString)
-      .filter(_.startsWith(s"$BucketCol=")).map { n =>
-        n.stripPrefix(s"$BucketCol=").toInt -> list(versionDir(v).resolve(n))
-          .filter { f =>
-            val name = f.getFileName.toString
-            !name.startsWith(".") && !name.startsWith("_")
-          }.map(Files.size).sum
-      }.toMap
-
-  /** [[bucketBytes]] of committed versions (≤ maxV), which never change. */
-  private val committed = TrieMap[Int, Map[Int, Long]]()
-
-  /** The root as of manifest `m`: the version directories present, and the
-    * buckets held by each completed version up to `upTo`. */
-  private case class Disk(m: Meta, present: Seq[Int],
-      held: Map[Int, Map[Int, Long]]) {
-    def base(k: Int): Int = m.buckets.getOrElse(k, 0)
-    /** Versions in (base(k), upTo] holding bucket k, oldest first. */
-    def runs(k: Int): Seq[Int] =
-      held.toSeq.collect { case (v, bs) if v > base(k) && bs.contains(k) => v }.sorted
-    def runBytes(k: Int): Long = runs(k).map(held(_)(k)).sum
-    def baseBytes(k: Int): Long = held.get(base(k)).flatMap(_.get(k)).getOrElse(0L)
-    /** Buckets with a base or a run. */
-    def buckets: Set[Int] = m.buckets.keySet ++
-      held.flatMap { case (v, bs) => bs.keys.filter(v > base(_)) }
-    /** Versions that are a base or a run of some bucket. */
-    def live: Set[Int] = m.buckets.values.toSet ++
-      held.collect { case (v, bs) if bs.keys.exists(v > base(_)) => v }
-  }
-
-  /** One listing of the root, plus one of each version not yet cached. */
-  private def disk(m: Meta, upTo: Int): Disk = {
-    val present = list(rootPath).map(_.getFileName.toString)
-      .collect { case VersionDir(n) => n.toInt }
-    Disk(m, present, present.filter(_ <= upTo).map { v =>
-      v -> (if (v <= m.maxV) committed.getOrElseUpdate(v, bucketBytes(v))
-        else bucketBytes(v))
-    }.toMap)
-  }
-
-  /** The fold rows of `wanted` buckets (None = every bucket): one scan per
-    * version holding a wanted bucket's base or run, over exactly those
-    * `__bucket=<k>` directories (at most numBuckets paths, so a per-batch
-    * lookup stays under Spark's parallel-listing threshold), its rows
-    * tagged with the version as their run. The explicit schema costs no
-    * footer inference. A live version can still hold a bucket compacted
-    * since; reading leaf directories never touches it.
+  /** The fold rows of versions `vs`: one scan over their directories (at
+    * most [[KeyedParquetTable.MaxRuns]] + 1 paths, under Spark's
+    * parallel-listing threshold), each row's run parsed from the name of
+    * the version directory its file sits in. A column, not a literal per
+    * version, so every read shares one generated plan. The explicit schema
+    * costs no footer inference.
     *
-    * A base whose bucket directory is missing reads as an empty bucket only
-    * when its version completed (`_SUCCESS`: a compaction that kept no row
-    * of the bucket). Any other absence — a reader racing [[vacuum]], a
-    * partial delete, corruption — fails loudly: read as empty, the next
-    * compaction would persist the loss. */
-  private def readRows(d: Disk, wanted: Option[Set[Int]]): DataFrame = {
-    val ks = wanted.getOrElse(d.buckets).toSeq.sorted
-    val bases = ks.flatMap { k =>
-      d.m.buckets.get(k).filter { v =>
-        val present = Files.exists(leaf(v, k))
-        require(present || Files.exists(versionDir(v).resolve("_SUCCESS")),
-          s"state bucket dir ${leaf(v, k)} is referenced by the manifest but " +
-            "its version dir is missing or incomplete — refusing to read the " +
-            "bucket as empty (concurrent vacuum / partial delete / " +
-            "corruption); re-open the table or restore the version dir")
-        present
-      }.map(_ -> k)
+    * A version without `_SUCCESS` — a reader racing [[vacuum]], a partial
+    * delete, corruption — fails loudly: read as empty, the next compaction
+    * would persist the loss. */
+  private def readRows(vs: Seq[Int]): DataFrame = {
+    vs.foreach { v =>
+      require(Files.exists(versionDir(v).resolve("_SUCCESS")),
+        s"state version ${versionDir(v)} is referenced by the manifest but is " +
+          "missing or incomplete — refusing to read it as empty (concurrent " +
+          "vacuum / partial delete / corruption); re-open the table or " +
+          "restore the version dir")
     }
-    val scans = (bases ++ ks.flatMap(k => d.runs(k).map(_ -> k)))
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (v, vks) =>
-        spark.read.schema(fileSchema)
-          .parquet(vks.map(vk => leaf(v, vk._2).toString): _*)
-          .withColumn(Upserts.RunCol, lit(v))
-      }
-    if (scans.isEmpty)
+    if (vs.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         spec.rowsSchema)
-    else scans.reduce(_ union _)
+    else spark.read.schema(fileSchema)
+      .parquet(vs.map(versionDir(_).toString): _*)
+      .withColumn(Upserts.RunCol, regexp_extract(col("_metadata.file_path"),
+        "/v(\\d+)/[^/]+$", 1).cast("int"))
   }
 
   /** Current full state, folded; empty with the fold's columns before any
     * write. */
-  def state(): DataFrame = {
-    val m = currentMeta
-    Upserts.fold(readRows(disk(m, m.maxV), None), spec)
-  }
+  def state(): DataFrame = Upserts.fold(readRows(currentMeta.versions), spec)
 
-  /** The bucket set `keys`' primary-key values hash into — ≤ numBuckets
-    * rows collected; what [[stateForBuckets]] and [[unfoldedForBuckets]]
-    * prune to. */
-  def touchedBuckets(keys: DataFrame): Set[Int] =
-    keys.select(bucketOf.as(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSet
+  /** Every row the base and the runs hold, NOT folded, in the table's
+    * columns: a key appears once per run that wrote it, and a delete reads
+    * like any other row. Existence here equals existence in [[state]] only
+    * for a store whose rows are never deleted — the dedup seen-stores,
+    * whose per-batch lookup therefore needs no fold. */
+  def unfolded(): DataFrame =
+    readRows(currentMeta.versions).select(table.schema.fieldNames.toIndexedSeq.map(col): _*)
 
-  /** Folded state of an already-computed bucket set (partition-pruned). */
-  def stateForBuckets(touched: Set[Int]): DataFrame = {
-    val m = currentMeta
-    Upserts.fold(readRows(disk(m, m.maxV), Some(touched)), spec)
-  }
+  /** Bucket-layout shim for callers that still pass a bucket set: the
+    * store is one bucket, 0, and this runs no job. */
+  def touchedBuckets(keys: DataFrame): Set[Int] = Set(0)
 
-  /** Every row the `touched` buckets' bases and runs hold, NOT folded, in
-    * the table's columns: a key appears once per run that wrote it, and a
-    * delete reads like any other row. Existence here equals existence in
-    * [[state]] only for a store whose rows are never deleted — the dedup
-    * seen-stores, whose per-batch lookup therefore needs no fold. */
-  def unfoldedForBuckets(touched: Set[Int]): DataFrame = {
-    val m = currentMeta
-    readRows(disk(m, m.maxV), Some(touched))
-      .select(table.schema.fieldNames.toIndexedSeq.map(col): _*)
-  }
+  /** Bucket-layout shim: [[state]], whatever the bucket set. */
+  def stateForBuckets(touched: Set[Int]): DataFrame = state()
 
   /** maxConcurrentRequests analogue: cap the write job's task parallelism.
     * `coalesce(n)` is a no-op when the frame already has ≤ n partitions,
@@ -330,75 +261,68 @@ class KeyedParquetTable(
   private def capWrite(df: DataFrame): DataFrame =
     if (maxWriteTasks == Int.MaxValue) df else df.coalesce(maxWriteTasks)
 
-  /** Compact EVERY bucket, keeping only folded rows satisfying `keep` — the
+  /** Write `df` under `dir`, one file per task, replacing whatever a
+    * crashed attempt left there. */
+  private def write(df: DataFrame, dir: Path): Unit =
+    capWrite(df).write.mode("overwrite").option("compression", compression)
+      .parquet(dir.toString)
+
+  /** `df` counting its rows into the returned observation. */
+  private def observed(df: DataFrame): (DataFrame, Observation) = {
+    val obs = new Observation()
+    (df.observe(obs, count(lit(1)).as("rows")), obs)
+  }
+
+  /** The rows an [[observed]] frame's job counted; 0 if it never fired.
+    * The observed rows arrive on the listener bus. */
+  private def counted(obs: Observation): Long = {
+    org.apache.spark.sql.GraftBridge.drainListeners(spark)
+    org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
+      .get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
+  }
+
+  /** Fold `rows` into a base under `dir`, keeping only folded rows
+    * satisfying `keep`; returns the base's rows. */
+  private def writeBase(rows: DataFrame, keep: Option[Column], dir: Path): Long = {
+    val folded = Upserts.fold(rows, spec)
+    val (base, obs) = observed(keep.map(folded.filter).getOrElse(folded))
+    write(base, dir)
+    counted(obs)
+  }
+
+  /** Fold the whole store, keeping only folded rows satisfying `keep` — the
     * physical expiry hook for TTL'd state that no `retain` batch writes to
-    * any more (a `retain` batch folds every bucket). One read + one write
-    * of live state; intended for a periodic maintenance call, not the
+    * any more (a `retain` batch folds the store). One read + one write of
+    * live state; intended for a periodic maintenance call, not the
     * per-batch path. Serialized against [[applyBatch]] (both are manifest
     * read-modify-writes: an interleaving would have two writers race the
-    * same `v<N+1>` directory and the loser's bucket pointers silently
-    * vanish from the manifest — e.g. a maintenance vacuum timer firing
-    * mid-merge). Single-JVM lock: the driver is the only manifest writer,
-    * as in any single-writer table format. */
+    * same `v<N+1>` directory and the loser's versions silently vanish from
+    * the manifest — e.g. a maintenance vacuum timer firing mid-merge).
+    * Single-JVM lock: the driver is the only manifest writer, as in any
+    * single-writer table format. */
   def sweep(keep: Column): Unit = synchronized {
     val m = currentMeta
-    val d = disk(m, m.maxV)
-    if (d.buckets.isEmpty) return
+    if (m.live.isEmpty) return
     val v = m.maxV + 1
-    deleteTree(versionDir(v)) // a crashed write's leftover
-    compact(d, d.buckets, v, Some(keep))
-    writeMeta(m.copy(maxV = v, buckets = m.buckets ++ d.buckets.map(_ -> v)))
+    val rows = writeBase(readRows(m.versions), Some(keep), versionDir(v))
+    writeMeta(m.copy(maxV = v, live = Seq(v -> rows)))
     vacuum()
   }
 
-  /** Write `df` partitioned by bucket under `dir`, replacing whatever a
-    * crashed attempt left there. */
-  private def writeBuckets(df: DataFrame, dir: Path): Unit =
-    capWrite(df.withColumn(BucketCol, bucketOf))
-      .write.mode("overwrite").option("compression", compression)
-      .partitionBy(BucketCol).parquet(dir.toString)
-
-  /** Mark `v<v>/` complete, also when no bucket directory was written. */
-  private def markDone(v: Int): Unit = {
-    Files.createDirectories(versionDir(v))
-    val done = versionDir(v).resolve("_SUCCESS")
-    if (!Files.exists(done)) Files.createFile(done)
-  }
-
-  /** Fold buckets `ks` (base + runs up to `v`) into new bases that take the
-    * place of their directories in `v<v>/`: written to `_compact/` first,
-    * then swapped in one bucket directory at a time. `v` is above the
-    * manifest's maxV until the caller flips it, so no reader sees a
-    * half-swapped version. */
-  private def compact(d: Disk, ks: Set[Int], v: Int, keep: Option[Column]): Unit = {
-    val folded = Upserts.fold(readRows(d, Some(ks)), spec)
-    val tmp = rootPath.resolve("_compact")
-    writeBuckets(keep.map(folded.filter).getOrElse(folded), tmp)
-    Files.createDirectories(versionDir(v))
-    ks.foreach { k =>
-      deleteTree(leaf(v, k))
-      val out = tmp.resolve(s"$BucketCol=$k")
-      if (Files.exists(out)) Files.move(out, leaf(v, k), StandardCopyOption.ATOMIC_MOVE)
-    }
-    markDone(v)
-    deleteTree(tmp)
-  }
-
-  /** Delete every version directory that is neither a base nor a run of any
-    * bucket — superseded bases and runs, runs that landed no row, anything
-    * above maxV (a write that crashed before its flip) — and a leftover
-    * `_compact/`. One listing of the root. `_SUCCESS` goes first: a reader
-    * holding a stale manifest that races the deletion then fails
-    * [[readRows]]' completed-version check instead of reading an
-    * already-deleted bucket as empty state. */
+  /** Delete every version directory that is neither the base nor a run —
+    * superseded bases and runs, anything above maxV (a write that crashed
+    * before its flip) — and a leftover `_compact/`. One listing of the
+    * root. `_SUCCESS` goes first: a reader holding a stale manifest that
+    * races the deletion then fails [[readRows]]' completed-version check
+    * instead of reading an already-deleted version as empty state. */
   def vacuum(): Unit = synchronized {
-    val m = currentMeta
-    val d = disk(m, m.maxV)
-    val live = d.live
-    d.present.filterNot(live).foreach { v =>
+    val live = currentMeta.versions.toSet
+    val ls = Files.list(rootPath)
+    val present = try ls.iterator().asScala.map(_.getFileName.toString)
+      .collect { case VersionDir(n) => n.toInt }.toVector finally ls.close()
+    present.filterNot(live).foreach { v =>
       Files.deleteIfExists(versionDir(v).resolve("_SUCCESS"))
       deleteTree(versionDir(v))
-      committed.remove(v)
     }
     deleteTree(rootPath.resolve("_compact"))
   }
@@ -422,13 +346,13 @@ class KeyedParquetTable(
     * exactly-once. Bindings that fan into the same table pass distinct
     * `binding` keys so each one's batch is tracked independently.
     *
-    * Every bucket the run lands in whose run bytes now exceed its base
-    * bytes is compacted in the same call. `retain`: the batch folds every
-    * bucket, and folded rows failing the predicate are dropped — TTL'd
-    * state (e.g. the dedup seen-hash store) expires physically at every
-    * batch that writes to it.
+    * A run that leaves the runs with more rows than the base is compacted
+    * in the same call. `retain`: the batch folds the store, and folded rows
+    * failing the predicate are dropped — TTL'd state (e.g. the dedup
+    * seen-hash store) expires physically at every batch that writes to it.
     *
-    * `knownTouched` is ignored: neither write needs a bucket set. */
+    * `knownTouched` is ignored (a bucket-layout argument kept for old
+    * callers): neither write needs a bucket set. */
   def applyBatch(batch: DataFrame, batchId: Long = Long.MinValue,
       binding: String = DefaultBinding,
       retain: Option[Column] = None,
@@ -445,87 +369,67 @@ class KeyedParquetTable(
     * Plain bookkeeping. */
   @volatile var lastApplyPhaseMs: Map[String, Long] = Map.empty
 
-  /** What the next batch is predicted to weigh: the heavier of the last two
-    * batches (their rows), at the last run's bytes per row in each bucket.
-    * A load into an empty table is not counted: it says nothing about the
-    * stream's batches. */
-  private var lastRun: (Map[Int, Long], Long) = (Map.empty, 0L)
-  private var recentRows: (Long, Long) = (0L, 0L)
-  private def observed(rows: Long): Unit = recentRows = (recentRows._2, rows)
-  private def predictedBytes(k: Int): Double =
-    if (lastRun._2 <= 0) 0.0
-    else lastRun._1.getOrElse(k, 0L).toDouble *
-      math.max(recentRows._1, recentRows._2) / lastRun._2
-
   private def applyBatchTimed(batch: DataFrame, batchId: Long,
       binding: String, retain: Option[Column],
       timed: StageTimer): Unit = {
     val m = currentMeta
     if (batchId != Long.MinValue && batchId <= m.lastFor(binding)) return
     val v = m.maxV + 1
-    val d = disk(m, m.maxV)
-    val obs = new org.apache.spark.sql.Observation()
-    val rows = Upserts.writeRows(batch, spec, lit(v))
-      .observe(obs, count(lit(1)).as("rows"))
-    val direct = retain.isDefined || d.buckets.isEmpty || d.buckets.exists { k =>
-      d.runs(k).size >= numBuckets ||
-        predictedBytes(k) > d.baseBytes(k) + d.runBytes(k)
-    }
-    val compacted = timed("merge_write") {
-      // the observed rows arrive on the listener bus
-      def observedRows(): Long = {
-        org.apache.spark.sql.GraftBridge.drainListeners(spark)
-        org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-          .get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
+    // a batch's rows fold after every version's: one run number for every
+    // batch, so no batch compiles code of its own
+    val (rows, batchRows) = observed(Upserts.writeRows(batch, spec, lit(Int.MaxValue)))
+    val runRows = m.runs.map(_._2).sum
+    val direct = retain.isDefined || m.live.isEmpty || m.runs.size >= MaxRuns ||
+      m.predicted > m.baseRows + runRows
+    val next = timed("merge_write") {
       if (direct) {
         // the batch's frame leads the union, so the job runs in the
         // batch's session: observations registered there (the caller's
-        // counters, `obs`) fire only for that session's queries
-        val folded = Upserts.fold(rows.union(readRows(d, None)), spec)
-        writeBuckets(retain.map(folded.filter).getOrElse(folded), versionDir(v))
-        markDone(v)
-        val n = observedRows()
-        if (d.buckets.nonEmpty) observed(n)
-        d.buckets ++ bucketBytes(v).keySet
+        // counters, `batchRows`) fire only for that session's queries
+        val base = writeBase(rows.union(readRows(m.versions)), retain, versionDir(v))
+        val n = counted(batchRows)
+        // a load into an empty table says nothing about the stream's batches
+        (if (m.live.isEmpty) m else m.observed(n)).copy(live = Seq(v -> base))
       } else {
-        writeBuckets(rows.drop((Upserts.RunCol +: spec.stateOnly): _*), versionDir(v))
-        val n = observedRows()
-        observed(n)
-        val after = disk(m, v)
-        val landed = after.held.getOrElse(v, Map.empty)
-        lastRun = (landed, n)
-        // runs over base, per bucket (no base: always due)
-        def load(k: Int) = after.runBytes(k).toDouble / math.max(after.baseBytes(k), 1L)
-        val due =
-          if (landed.keys.exists(load(_) > 1)) landed.keySet.filter(load(_) > 0.5)
-          else Set.empty[Int]
-        if (due.nonEmpty) compact(after, due, v, None)
-        due
+        write(rows.drop((Upserts.RunCol +: spec.stateOnly): _*), versionDir(v))
+        val n = counted(batchRows)
+        val ran = m.observed(n).copy(live = m.live :+ (v -> n))
+        if (runRows + n <= m.baseRows) ran
+        else {
+          // the fold reads the run at v, so the base goes through
+          // _compact/; v stays above the manifest's maxV until the flip
+          val tmp = rootPath.resolve("_compact")
+          val base = writeBase(readRows(ran.versions), None, tmp)
+          deleteTree(versionDir(v))
+          Files.move(tmp, versionDir(v), StandardCopyOption.ATOMIC_MOVE)
+          ran.copy(live = Seq(v -> base))
+        }
       }
     }
     timed("meta") {
-      writeMeta(Meta(
-        lastBatch = m.lastBatch + (binding -> math.max(batchId, m.lastFor(binding))),
-        maxV = v,
-        buckets = m.buckets ++ compacted.map(_ -> v)))
+      writeMeta(next.copy(maxV = v,
+        lastBatch = m.lastBatch + (binding -> math.max(batchId, m.lastFor(binding)))))
       vacuum()
     }
   }
 }
 
 object KeyedParquetTable {
+  /** The runs a store holds before the next batch folds them into the
+    * base, whatever their rows: a read scans at most this many runs. */
+  val MaxRuns = 16
+
   /** Run `f` with `spark.sql.files.minPartitionNum = 1` — the micro-batch
     * latency scope (a state merge, a whole processBatch). Spark's split
     * packing aims `bytesPerCore = (totalBytes + files·openCost) /
     * minPartitionNum`, and minPartitionNum DEFAULTS to the session
-    * parallelism — so a touched-bucket state read of ~35 KB-sized files
+    * parallelism — so a state read of ~35 KB-sized files
     * (each padded by the 4 MB openCost) planned ~35 single-file splits just
     * to fill cores, and every micro-batch merge scheduled ~35 no-op tasks
     * per state scan (guide §6 input split size; §2.2 fewer, larger map
     * tasks). With the floor at 1, small reads pack into O(1) splits while
     * big reads are untouched: `maxPartitionBytes` (128 MB default) still
-    * caps every split, so a 100 TB bucket scan plans exactly the same
+    * caps every split, so a 100 TB state scan plans exactly the same
     * splits as before — the setting only stops the artificial fan-out when
     * the data is SMALLER than one split per core, which is precisely the
     * micro-batch case. Restores the previous value on exit; the scope is

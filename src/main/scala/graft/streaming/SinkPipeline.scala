@@ -66,10 +66,10 @@ class SinkPipeline(
 
   // --------------------------------------------------- content-level dedup
   // The `dedup = exact | exactTtl:<ms>` stage (SinkConfig). Seen-hash state
-  // is a pk-bucketed KeyedParquetTable keyed by the 64-bit content hash, one
-  // per binding: the batch-vs-seen anti-join reads only the buckets the
-  // batch's hashes touch (touchedBuckets + unfoldedForBuckets), and a batch's
-  // sightings are appended as one run (with a TTL, folded into the state).
+  // is a KeyedParquetTable keyed by the 64-bit content hash, one per
+  // binding: the batch-vs-seen anti-join reads the store's base and runs
+  // unfolded in one scan, and a batch's sightings are appended as one run
+  // (with a TTL, folded into the state).
   // `exact` passes the first copy of each content hash ever; `exactTtl`
   // forgets a hash after a quiet horizon, and every sighting, dropped
   // copies included, re-arms it.
@@ -167,7 +167,7 @@ class SinkPipeline(
     * every batch. Counters: qualityKeptCount / qualityDroppedCount
     * (dedup-counter naming; tombstones count as neither) — they ride an
     * [[Observation]] that fires with the first downstream job (the table's
-    * run write, or the dedup stage's bucket collect), so the gate
+    * run write), so the gate
     * costs ZERO driver actions of its own per batch. The counts thunk is
     * read only AFTER the table merge is durable — marking before
     * applyBatch would double-count on a failed batch's replay — and never
@@ -250,11 +250,10 @@ class SinkPipeline(
       val first = dedupable.groupBy(col(hcol))
         .agg(min_by(struct(recordCols.toIndexedSeq.map(col): _*),
           struct(col("partition"), col("offset"))).as("__first"))
-      // the lookup reads the touched buckets' sightings unfolded: a sighting
-      // is never deleted and last_seen only grows, so a hash is in the
-      // folded state (under the TTL horizon) iff some sighting row says so
-      val touched = ds.touchedBuckets(first.select(col(hcol).as("h")))
-      val seenAll = ds.unfoldedForBuckets(touched)
+      // the lookup reads the sightings unfolded: a sighting is never
+      // deleted and last_seen only grows, so a hash is in the folded state
+      // (under the TTL horizon) iff some sighting row says so
+      val seenAll = ds.unfolded()
       val seen = b.dedupTtlMs match {
         case Some(t) => seenAll.filter(col("last_seen") >= nowMs - t)
         case None    => seenAll
@@ -281,7 +280,7 @@ class SinkPipeline(
     }
 
   /** `dedup=near`: drop a record sharing any MinHash LSH band with EARLIER
-    * content — earlier batches via the seen-band state (touched-bucket read),
+    * content — earlier batches via the seen-band state,
     * earlier (partition, offset) within the batch via a per-band min. The
     * keep/drop policy matches the batch [[graft.operators.Dedup.applyNearDedup]]
     * over band-bucket candidates exactly: a dropped record's bands still
@@ -309,9 +308,8 @@ class SinkPipeline(
       // compute the banding once
     // near:<k>x<r>:<ttl>: same sliding horizon as exactTtl — bands quiet for
     // a full horizon stop blocking (and expire physically below). Like the
-    // exact path, the lookup reads the touched buckets' sightings unfolded.
-    val touched = ds.touchedBuckets(bandRows.select("band_id", "band_hash"))
-    val seenAll = ds.unfoldedForBuckets(touched)
+    // exact path, the lookup reads the sightings unfolded.
+    val seenAll = ds.unfolded()
     val seen = b.dedupTtlMs match {
       case Some(t) => seenAll.filter(col("last_seen") >= nowMs - t)
       case None    => seenAll
@@ -350,8 +348,8 @@ class SinkPipeline(
     }))
   }
 
-  /** Physically expire dedup state past its TTL horizon in EVERY bucket of
-    * every TTL'd binding's seen store (`exactTtl` content hashes and TTL'd
+  /** Physically expire dedup state past its TTL horizon in the whole seen
+    * store of every TTL'd binding (`exactTtl` content hashes and TTL'd
     * `near` band hashes alike — both carry `last_seen`) — the maintenance
     * sweep for a store no batch has written to lately (every sightings
     * batch with a horizon already expires the whole store). Call

@@ -76,6 +76,23 @@ class StagingSpec extends SparkSuite {
     } finally Staging.releaseAll(sqlc)
   }
 
+  test("staging a plan twice keeps one registry entry, so the budget " +
+      "never evicts a handle the newer stage shares") {
+    val s = sqlc
+    Staging.releaseAll(s)
+    try {
+      Staging.stage(docs(), budget = 2)
+      val second = Staging.stage(docs(), budget = 2)
+      // one more stage fills the budget: a duplicate entry for the first
+      // handle would be evicted here, and unpersisting it uncaches the plan
+      // both handles share
+      Staging.stage(docs().filter(col("doc_id") >= 1L), budget = 2)
+      assert(Staging.registeredCount(s) == 2)
+      assert(s.sharedState.cacheManager.lookupCachedData(
+        second.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined)
+    } finally Staging.releaseAll(s)
+  }
+
   test("budget eviction unpersists the OLDEST stage and keeps results correct") {
     val s = sqlc
     Staging.releaseAll(s)

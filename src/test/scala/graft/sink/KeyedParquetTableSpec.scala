@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
 import graft.SparkSuite
 import graft.operators.RecordMapper
 
-/** Bucketed, append-only state: a batch writes one run holding only the
-  * buckets its keys hash to; reads fold bases and runs exactly as the
-  * sequential per-batch merge would; compaction and vacuum keep disk
+/** Flat, append-only state: a batch writes one run of plain parquet files,
+  * one per write task; reads fold the base and the runs in one scan exactly
+  * as the sequential per-batch merge would; compaction and vacuum keep disk
   * bounded; a crash before the manifest flip leaves nothing visible. */
 class KeyedParquetTableSpec extends SparkSuite {
 
@@ -34,24 +34,26 @@ class KeyedParquetTableSpec extends SparkSuite {
       StructField(RecordMapper.ModeCol, StringType))))
   }
 
-  test("merge touches only the batch's buckets; untouched buckets keep their version") {
-    val root = Files.createTempDirectory("graft-bucket").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 8)
+  test("a batch appends one run of plain files beside the base; a replayed " +
+      "batch id is a no-op") {
+    val root = Files.createTempDirectory("graft-flat").toString
+    val t = new KeyedParquetTable(s, table, root)
 
-    // batch 1: many keys spread over (almost) all buckets
+    // batch 1 lands in an empty table: it folds straight into the base v1
     t.applyBatch(mapped((1L to 64L).map(k => (k, k * 10, 100L)): _*), batchId = 1L)
     assert(t.state().count() == 64)
-    assert(Files.exists(Paths.get(root, "v1")))
+    assert(live(root) == Seq(1 -> 64L))
 
-    // batch 2: a single key — only that key's bucket moves to v2
+    // batch 2: a single key — one run v2 beside the base, which stays
     t.applyBatch(mapped((1L, 999L, 200L)), batchId = 2L)
     val st = t.state().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(st(1L) == 999L && st(2L) == 20L && st.size == 64)
-    // v2 holds exactly one bucket partition; v1 still owns the rest
-    val v2Parts = Files.list(Paths.get(root, "v2")).toArray.map(_.toString)
-      .filter(_.contains("__bucket="))
-    assert(v2Parts.length == 1)
-    assert(Files.exists(Paths.get(root, "v1")))
+    assert(live(root) == Seq(1 -> 64L, 2 -> 1L))
+    // both versions hold files only: no partition directories
+    Seq("v1", "v2").foreach { v =>
+      assert(Files.list(Paths.get(root, v)).iterator().asScala.forall(Files.isRegularFile(_)),
+        s"$v holds a directory")
+    }
 
     // replayed batch id is a no-op (exactly-once)
     t.applyBatch(mapped((1L, 111L, 300L)), batchId = 2L)
@@ -60,9 +62,8 @@ class KeyedParquetTableSpec extends SparkSuite {
 
   test("applyBatch retain: expired rows in touched buckets drop during the merge") {
     val root = Files.createTempDirectory("graft-retain").toString
-    // one bucket → every merge touches ALL state, so the prune is observable
-    // deterministically (no dependence on which bucket a hash lands in)
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 1)
+    // a retain batch folds the whole store, so the prune is observable
+    val t = new KeyedParquetTable(s, table, root)
     t.applyBatch(mapped((1L, 10L, 100L), (2L, 20L, 110L), (3L, 30L, 200L)),
       batchId = 1L)
     assert(t.state().count() == 3)
@@ -76,12 +77,12 @@ class KeyedParquetTableSpec extends SparkSuite {
 
   test("sweep: full-state expiry rewrite shrinks every bucket; manifest stays live") {
     val root = Files.createTempDirectory("graft-sweep").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 8)
+    val t = new KeyedParquetTable(s, table, root)
     t.applyBatch(mapped((1L to 40L).map(k =>
       (k, k, if (k <= 30) 100L else 900L)): _*), batchId = 1L)
     assert(t.state().count() == 40)
     t.sweep(col(RecordMapper.WritetimeCol) >= 500L)
-    // only the 10 recent rows survive, across all buckets
+    // only the 10 recent rows survive
     assert(t.state().collect().map(_.getLong(0)).sorted.toSeq == (31L to 40L))
     // the swept state stays a normal, writable table
     t.applyBatch(mapped((99L, 990L, 1000L)), batchId = 2L)
@@ -95,7 +96,7 @@ class KeyedParquetTableSpec extends SparkSuite {
 
   test("state stays correct and disk-bounded over many micro-batches; manifest survives restart") {
     val root = Files.createTempDirectory("graft-endure").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 4)
+    val t = new KeyedParquetTable(s, table, root)
     // 30 overlapping batches: key k gets its last write at batch (k % 30)
     (1 to 30).foreach { b =>
       t.applyBatch(mapped((0 until 10).map { i =>
@@ -112,19 +113,11 @@ class KeyedParquetTableSpec extends SparkSuite {
       k.toLong -> (b * 1000L + k)
     }
     assert(st == expected)
-    // vacuum keeps exactly the versions that are a base or a run of some
-    // bucket (the disk bound is the 32-batch fresh-keys test's)
-    val ptr = bases(root)
-    versionDirs(root).foreach { d =>
-      val v = d.drop(1).toInt
-      val held = Files.list(Paths.get(root, d)).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toInt).toSet
-      assert(ptr.values.exists(_ == v) || held.exists(k => v > ptr.getOrElse(k, 0)),
-        s"$d is neither a base nor a run")
-    }
+    // vacuum keeps exactly the versions that are the base or a run (the
+    // disk bound is the 32-batch fresh-keys test's)
+    assert(versionDirs(root) == live(root).map(v => s"v${v._1}").toSet)
     // a fresh instance over the same root reloads the manifest (restart)
-    val t2 = new KeyedParquetTable(s, table, root, numBuckets = 4)
+    val t2 = new KeyedParquetTable(s, table, root)
     assert(t2.lastAppliedBatchId == 30L)
     assert(t2.state().count() == expected.size)
     // and a replayed old batch is still a no-op after restart
@@ -132,27 +125,32 @@ class KeyedParquetTableSpec extends SparkSuite {
     assert(t2.state().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
   }
 
-  test("reopening state with a different numBuckets fails fast (manifest pins it)") {
-    val root = Files.createTempDirectory("graft-nbuckets").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 8)
-    t.applyBatch(mapped((1L, 1L, 100L)), batchId = 1L)
-    // re-hashing keys into a different bucket count would silently read the
-    // wrong partitions — must refuse, not corrupt
-    val t2 = new KeyedParquetTable(s, table, root, numBuckets = 16)
-    val e = intercept[IllegalArgumentException] { t2.state() }
-    assert(e.getMessage.contains("numBuckets=8"))
-    // the original bucket count still opens fine
-    val t3 = new KeyedParquetTable(s, table, root, numBuckets = 8)
-    assert(t3.state().count() == 1)
+  test("a store in the bucketed layout fails fast on open, naming the layout") {
+    val root = Files.createTempDirectory("graft-bucketed")
+    // the bucketed layout: `<maxV> <numBuckets> <mergeMode>`, bucket → base
+    // version lines, one __bucket=<k> directory per bucket in each version
+    val leaf = root.resolve("v1").resolve("__bucket=0")
+    Files.createDirectories(leaf)
+    mapped((1L, 1L, 100L)).write.parquet(leaf.resolve("data").toString)
+    Files.createFile(root.resolve("v1").resolve("_SUCCESS"))
+    Files.writeString(root.resolve("CURRENT"), "1 16 row\nb _ 1\n0:1")
+    val t = new KeyedParquetTable(s, table, root.toString)
+    Seq[() => Unit](() => t.state(), () => t.unfolded(),
+      () => t.applyBatch(mapped((2L, 2L, 200L)), batchId = 2L)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("bucketed layout"), e.getMessage)
+    }
+    // refused before anything is written
+    assert(versionDirs(root.toString) == Set("v1"))
   }
 
-  test("unreferenced versions are vacuumed once every bucket moves past them") {
+  test("unreferenced versions are vacuumed once the base moves past them") {
     val root = Files.createTempDirectory("graft-vacuum").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 2)
+    val t = new KeyedParquetTable(s, table, root)
     t.applyBatch(mapped((1L, 1L, 100L), (2L, 2L, 100L), (3L, 3L, 100L),
       (4L, 4L, 100L)), batchId = 1L)
-    // touch every key again, then compact: every bucket's base moves past
-    // v1 and v2, and both become garbage
+    // touch every key again in a run, then compact: the base moves past v1
+    // and v2, and both become garbage
     t.applyBatch(mapped((1L, 11L, 200L), (2L, 22L, 200L), (3L, 33L, 200L),
       (4L, 44L, 200L)), batchId = 2L)
     t.sweep(lit(true))
@@ -161,20 +159,21 @@ class KeyedParquetTableSpec extends SparkSuite {
       Map(1L -> 11L, 2L -> 22L, 3L -> 33L, 4L -> 44L))
   }
 
-  test("a manifest pointing at a version that lost a leaf fails the read loudly") {
+  test("a manifest pointing at a version that lost its files fails the read loudly") {
     val root = Files.createTempDirectory("graft-stale").toString
-    val t = new KeyedParquetTable(s, table, root, numBuckets = 2)
+    val t = new KeyedParquetTable(s, table, root)
     t.applyBatch(mapped((1L, 1L, 100L), (2L, 2L, 100L), (3L, 3L, 100L),
       (4L, 4L, 100L)), batchId = 1L)
-    val v1 = Paths.get(root, "v1")
-    val leaves = Files.list(v1).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.getFileName.toString.startsWith("__bucket="))
-    assert(leaves.length == 2)
-    // the state a vacuum of v1 leaves when it stops after its first leaf:
-    // _SUCCESS is already gone, so the missing leaf cannot pass as a
-    // completed version's zero-row bucket
-    Files.delete(v1.resolve("_SUCCESS"))
-    graft.streaming.SinkPipeline.deleteTree(leaves.head)
+    t.applyBatch(mapped((5L, 5L, 100L)), batchId = 2L)
+    val v2 = Paths.get(root, "v2")
+    val parts = Files.list(v2).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.nonEmpty)
+    // the state a vacuum of v2 leaves when it stops after its first file:
+    // _SUCCESS is already gone, so the missing rows cannot pass as a
+    // completed version's
+    Files.delete(v2.resolve("_SUCCESS"))
+    Files.delete(parts.head)
     val e = intercept[IllegalArgumentException] { t.state().count() }
     assert(e.getMessage.contains("referenced by the manifest"))
   }
@@ -202,7 +201,7 @@ class KeyedParquetTableSpec extends SparkSuite {
         StructField(RecordMapper.ModeCol, StringType))))
     }
     val root = Files.createTempDirectory("graft-cell").toString
-    val t = new KeyedParquetTable(s, wide, root, numBuckets = 4, mergeMode = "cell")
+    val t = new KeyedParquetTable(s, wide, root, mergeMode = "cell")
 
     t.applyBatch(valBatch((1L, 100L, 200L), (2L, 200L, 200L)), batchId = 1L)
     // OLDER writetime on the OTHER column: row-level LWW would refuse this;
@@ -220,7 +219,7 @@ class KeyedParquetTableSpec extends SparkSuite {
       (2L, 200L, null, 200L, None)))  // never-written cell: null value AND null wt
 
     // restart over the same root: manifest + cell wts survive; replay no-op
-    val t2 = new KeyedParquetTable(s, wide, root, numBuckets = 4, mergeMode = "cell")
+    val t2 = new KeyedParquetTable(s, wide, root, mergeMode = "cell")
     assert(t2.lastAppliedBatchId == 3L)
     t2.applyBatch(valBatch((1L, 777L, 500L)), batchId = 3L)
     assert(t2.state().filter(col("my_pk") === 1L).head()
@@ -245,7 +244,7 @@ class KeyedParquetTableSpec extends SparkSuite {
     assert(fin.getAs[Long]("__wt_my_text") == 1600L)
 
     // the state's merge granularity is pinned: row-mode reopen fails fast
-    val tRow = new KeyedParquetTable(s, wide, root, numBuckets = 4)
+    val tRow = new KeyedParquetTable(s, wide, root)
     val e = intercept[IllegalArgumentException] { tRow.state() }
     assert(e.getMessage.contains("mergeMode=cell"))
   }
@@ -267,7 +266,7 @@ class KeyedParquetTableSpec extends SparkSuite {
         StructField(RecordMapper.ModeCol, StringType))))
     }
     val root = Files.createTempDirectory("graft-entry").toString
-    val t = new KeyedParquetTable(s, et, root, numBuckets = 4,
+    val t = new KeyedParquetTable(s, et, root,
       mergeMode = "entry", nullToUnset = false)
 
     t.applyBatch(mapBatch((1L, Map("a" -> 1L, "b" -> 2L), 100L)), batchId = 1L)
@@ -283,7 +282,7 @@ class KeyedParquetTableSpec extends SparkSuite {
 
     // restart over the same root: entry writetimes survive; a stale entry
     // write is still refused after reopen
-    val t2 = new KeyedParquetTable(s, et, root, numBuckets = 4,
+    val t2 = new KeyedParquetTable(s, et, root,
       mergeMode = "entry", nullToUnset = false)
     assert(t2.lastAppliedBatchId == 3L)
     t2.applyBatch(mapBatch((1L, Map("b" -> 99L), 150L)), batchId = 4L)
@@ -295,8 +294,7 @@ class KeyedParquetTableSpec extends SparkSuite {
     assert(t2.state().count() == 0L)
 
     // the merge granularity is pinned in the manifest: cell reopen fails fast
-    val tCell = new KeyedParquetTable(s, et, root, numBuckets = 4,
-      mergeMode = "cell")
+    val tCell = new KeyedParquetTable(s, et, root, mergeMode = "cell")
     val e = intercept[IllegalArgumentException] { tCell.state() }
     assert(e.getMessage.contains("mergeMode=entry"))
   }
@@ -345,13 +343,17 @@ class KeyedParquetTableSpec extends SparkSuite {
     } finally st.close()
   }
 
-  /** Bucket → base version, as the manifest's `k:v` lines say. */
-  private def bases(root: String): Map[Int, Int] =
-    if (!Files.exists(Paths.get(root, "CURRENT"))) Map.empty
-    else Files.readString(Paths.get(root, "CURRENT")).split('\n').drop(1)
+  /** The live versions and their rows, base first, as the manifest's
+    * `v:rows` lines say. */
+  private def live(root: String): Seq[(Int, Long)] =
+    if (!Files.exists(Paths.get(root, "CURRENT"))) Nil
+    else Files.readString(Paths.get(root, "CURRENT")).split('\n').toSeq.drop(1)
       .filter(l => l.nonEmpty && !l.startsWith("b ")).map { l =>
-        val Array(k, v) = l.split(':'); k.toInt -> v.toInt
-      }.toMap
+        val Array(v, n) = l.split(':'); v.toInt -> n.toLong
+      }.sortBy(_._1)
+
+  /** The base version; 0 before any write. */
+  private def base(root: String): Int = live(root).headOption.fold(0)(_._1)
 
   private def versionDirs(root: String): Set[String] =
     Files.list(Paths.get(root)).iterator().asScala.map(_.getFileName.toString)
@@ -458,7 +460,7 @@ class KeyedParquetTableSpec extends SparkSuite {
   }
 
   /** Rows of keys 1000+ that no stream batch touches: a base big enough
-    * that no run outweighs it (1,500 rows per bucket of 8). */
+    * that no run outweighs it (12,000 rows). */
   private def seedOf(d: Diff): org.apache.spark.sql.DataFrame = {
     val r = new java.util.SplittableRandom(99)
     d.name match {
@@ -477,9 +479,9 @@ class KeyedParquetTableSpec extends SparkSuite {
       "mode, with compaction at no batch, some batches and every batch") {
     for (d <- diffs; regime <- Seq("none", "some", "every")) {
       val root = Files.createTempDirectory(s"graft-diff-${d.name}").toString
-      // 8 buckets: the 6 batches stay under the bound of numBuckets runs
+      // the 6 batches stay under the bound of MaxRuns runs
       val t = new KeyedParquetTable(s, d.table, root, nullToUnset = d.nullToUnset,
-        numBuckets = 8, mergeMode = d.mergeMode)
+        mergeMode = d.mergeMode)
       var expected = frame(d.empty, Nil)
       def step(b: org.apache.spark.sql.DataFrame): Unit = {
         val next = d.merge(expected, b)
@@ -490,7 +492,7 @@ class KeyedParquetTableSpec extends SparkSuite {
         t.applyBatch(seed, batchId = 0L)
         step(seed)
       }
-      val seeded = bases(root)
+      val seeded = base(root)
       val r = new java.util.SplittableRandom(d.name.hashCode.toLong * 31 + regime.hashCode)
       (1L to 6L).foreach { id =>
         val (b, binding) = d.batch(r, id)
@@ -509,7 +511,7 @@ class KeyedParquetTableSpec extends SparkSuite {
             s"${d.name}/$regime $c"))
       }
       if (regime == "none")
-        assert(bases(root) == seeded, s"${d.name}: a run outweighed the seeded base")
+        assert(base(root) == seeded, s"${d.name}: a run outweighed the seeded base")
     }
   }
 
@@ -521,11 +523,11 @@ class KeyedParquetTableSpec extends SparkSuite {
       frame(Seq(seen.schema("h"), seen.schema("last_seen"), WtF, ModeF),
         keys.map(k => Row(k, at, at * 1000, RecordMapper.ModeUpsert)))
     val root = Files.createTempDirectory("graft-crash")
-    val t = new KeyedParquetTable(s, seen, root.toString, numBuckets = 2)
+    val t = new KeyedParquetTable(s, seen, root.toString)
     t.applyBatch(sightings(1L to 4000L, 10L), batchId = 1L)
     def snapshot(k: KeyedParquetTable) =
       (rowsOf(k.state(), Seq("h", "last_seen")),
-        k.unfoldedForBuckets(Set(0, 1)).select("h").collect().map(_.getLong(0)).toSet)
+        k.unfolded().select("h").collect().map(_.getLong(0)).toSet)
 
     // batch 2 is a run (no compaction), batch 3 compacts (retain); each one
     // crashes after writing its version and before its manifest flip
@@ -538,11 +540,11 @@ class KeyedParquetTableSpec extends SparkSuite {
       // its new version copied back without the flip
       val copy = Files.createTempDirectory("graft-crash-copy")
       copyTree(root, copy)
-      val tc = new KeyedParquetTable(s, seen, copy.toString, numBuckets = 2)
+      val tc = new KeyedParquetTable(s, seen, copy.toString)
       tc.applyBatch(sightings(keys, id * 10), batchId = id, retain = retain)
       val v = s"v${maxV + 1}"
       assert(Files.exists(copy.resolve(v)))
-      assert(bases(copy.toString).values.exists(_ == maxV + 1) == retain.isDefined,
+      assert((base(copy.toString) == maxV + 1) == retain.isDefined,
         s"batch $id: only the retain batch compacts")
       copyTree(copy.resolve(v), root.resolve(v))
       val leftover = du(root.resolve(v))
@@ -552,7 +554,7 @@ class KeyedParquetTableSpec extends SparkSuite {
 
       // invisible to state and to the dedup lookup
       assert(snapshot(t) == before, s"batch $id: an unflipped version is visible")
-      assert(snapshot(new KeyedParquetTable(s, seen, root.toString, numBuckets = 2)) ==
+      assert(snapshot(new KeyedParquetTable(s, seen, root.toString)) ==
         before, s"batch $id: visible after a restart")
       // the replay overwrites it: the result equals the clean apply, and
       // none of the crashed attempt's files survive
@@ -578,50 +580,47 @@ class KeyedParquetTableSpec extends SparkSuite {
   test("append-only: 32 batches of fresh keys each write about one batch, " +
       "and disk stays within twice a compacted copy plus one batch") {
     // the first batch lands in an empty table, so it folds straight into
-    // bases: run sizes compare to the first run
+    // the base: run sizes compare to the first run
     val root = Files.createTempDirectory("graft-fresh")
-    val t = new KeyedParquetTable(s, table, root.toString, numBuckets = 4)
+    val t = new KeyedParquetTable(s, table, root.toString)
     val r = new java.util.SplittableRandom(5)
     val written = (1 to 32).map { b =>
       t.applyBatch(mapped(Seq.fill(1000) {
         (r.nextLong(), r.nextLong(), b.toLong)
       }: _*), batchId = b.toLong)
-      // each batch is one version; a compaction flips bucket pointers to it
-      val compacted = bases(root.toString).filter(_._2 == b).keySet
+      // each batch is one version; a compaction makes it the base
+      val compacted = base(root.toString) == b
       if (b % 8 == 0) {
         val copy = Files.createTempDirectory("graft-fresh-copy")
         copyTree(root, copy)
-        new KeyedParquetTable(s, table, copy.toString, numBuckets = 4).sweep(lit(true))
+        new KeyedParquetTable(s, table, copy.toString).sweep(lit(true))
         val onDisk = du(root)
         val bound = 2 * du(copy) + du(root.resolve(s"v$b"))
         assert(onDisk <= bound, s"batch $b: $onDisk bytes on disk > $bound")
       }
       (compacted, du(root.resolve(s"v$b")))
     }
-    assert(written.head._1.size == 4, "the first batch compacts into empty buckets")
-    val runs = written.filter(_._1.isEmpty).map(_._2)
+    assert(written.head._1, "the first batch folds into the empty table")
+    val runs = written.filterNot(_._1).map(_._2)
     assert(runs.size >= 16 && runs.forall(_ <= 1.5 * runs.head),
       s"run bytes ${runs.max} vs the first run's ${runs.head}")
-    // a bucket compacts once its runs outweigh its base, so its base grows
-    // geometrically and each row is rewritten O(log n) times. A run is
-    // written one file per (task, bucket), so while runs are small their
-    // bytes per row exceed a base's and compactions come about twice as
-    // often as pure doubling: ≤ 2 log2(32) + 2, not one per batch
-    (0 until 4).foreach { k =>
-      val n = written.count(_._1.contains(k))
-      assert(n >= 2 && n <= 12, s"bucket $k compacted $n times")
-    }
+    // the store compacts once its runs hold more rows than its base, so the
+    // base at least doubles and each row is rewritten O(log n) times: the
+    // 1,000-row batches fold into the empty table at batch 1, then compact
+    // at batches 3, 7, 15 and 31
+    val compactions = written.zipWithIndex.collect { case ((true, _), i) => i + 1 }
+    assert(compactions == Seq(1, 3, 7, 15, 31), s"compacted at batches $compactions")
     assert(t.state().count() == 32000)
   }
 
-  test("append-only: a bucket holds at most numBuckets runs, so a lookup " +
-      "scans a bounded number of versions however many batches ran") {
+  test("append-only: the store holds at most MaxRuns runs, so a read scans " +
+      "a bounded number of versions however many batches ran") {
     val root = Files.createTempDirectory("graft-runs")
-    val t = new KeyedParquetTable(s, table, root.toString, numBuckets = 4)
-    // a base far heavier than the 64 batches together: by bytes alone, no
-    // bucket would ever compact
+    val t = new KeyedParquetTable(s, table, root.toString)
+    // a base far heavier than the 64 batches together: by rows alone, the
+    // store would never compact
     t.applyBatch(mapped((1L to 20000L).map(k => (k, k, 1L)): _*), batchId = 0L)
-    val VersionOf = "/v(\\d+)/".r
+    val VersionOf = "/v(\\d+)/[^/]+$".r
     def versions(df: org.apache.spark.sql.DataFrame): Int =
       df.inputFiles.map(f => VersionOf.findFirstMatchIn(f).get.group(1)).toSet.size
     val r = new java.util.SplittableRandom(7)
@@ -629,36 +628,80 @@ class KeyedParquetTableSpec extends SparkSuite {
       t.applyBatch(mapped(Seq.fill(8) {
         (1L + r.nextLong(20000L), r.nextLong(), b.toLong + 1)
       }: _*), batchId = b.toLong)
-      (0 until 4).map(k => versions(t.unfoldedForBuckets(Set(k)))).max
+      versions(t.unfolded())
     }
-    // a base and at most numBuckets runs, and the bound is what holds it
-    assert(scanned.max == 5, s"versions scanned per bucket lookup: $scanned")
+    // a base and at most MaxRuns runs, and the bound is what holds it
+    assert(scanned.max == KeyedParquetTable.MaxRuns + 1,
+      s"versions scanned per lookup: $scanned")
     assert(t.state().count() == 20000)
   }
 
   test("append-only: a batch that outweighs the state folds straight into " +
       "new bases, without writing a run first") {
     val root = Files.createTempDirectory("graft-hot")
-    val t = new KeyedParquetTable(s, table, root.toString, numBuckets = 4)
+    val t = new KeyedParquetTable(s, table, root.toString)
     // hot keys: every batch writes each of 200 keys twice
     def hot(b: Long) = mapped((0L until 200L).flatMap(k =>
       Seq((k, b * 10, b * 10), (k, b * 10 + 1, b * 10 + 1))): _*)
-    // batch 1 folds into the empty table; batch 2's run tips every bucket,
-    // which predicts that batch 3 will too
-    (1L to 3L).foreach(b => t.applyBatch(hot(b), batchId = b))
-    assert(bases(root.toString).values.toSet == Set(3))
-    // the same batch on a fresh instance of a copy predicts nothing: it
-    // writes a run, then compacts
+    // batch 1 folds into the empty table; batch 2's run outweighs the base
+    // and compacts, which predicts that batch 3 will too
+    val jobs = (1L to 3L).map(b =>
+      jobsDuring(s"hot-$b")(t.applyBatch(hot(b), batchId = b))._2)
+    assert(live(root.toString).map(_._1) == Seq(3))
+    assert(jobs(2) < jobs(1), s"direct fold ran ${jobs(2)} jobs, run + compaction ${jobs(1)}")
+    // the prediction is in the manifest: a fresh instance over a copy folds
+    // the next batch straight into the base too
     val copy = Files.createTempDirectory("graft-hot-copy")
     copyTree(root, copy)
-    val fresh = new KeyedParquetTable(s, table, copy.toString, numBuckets = 4)
-    val (_, viaRun) = jobsDuring("hot-run")(fresh.applyBatch(hot(4), batchId = 4L))
+    val fresh = new KeyedParquetTable(s, table, copy.toString)
+    val (_, reopened) = jobsDuring("hot-reopened")(fresh.applyBatch(hot(4), batchId = 4L))
     val (_, direct) = jobsDuring("hot-direct")(t.applyBatch(hot(4), batchId = 4L))
-    assert(direct < viaRun, s"direct fold ran $direct jobs, run + compaction $viaRun")
-    assert(bases(root.toString).values.toSet == Set(4) &&
-      bases(copy.toString).values.toSet == Set(4))
+    assert(reopened == direct, s"reopened store ran $reopened jobs, the open one $direct")
+    assert(live(root.toString).map(_._1) == Seq(4) && live(copy.toString).map(_._1) == Seq(4))
     val cols = Seq("my_pk", "my_value")
     assert(rowsOf(t.state(), cols) == (0L until 200L).map(k => Seq(k, 41L)))
     assert(rowsOf(fresh.state(), cols) == rowsOf(t.state(), cols))
+  }
+
+  test("a read is one file scan over the base and every run, each row " +
+      "tagged with its run") {
+    val root = Files.createTempDirectory("graft-scan").toString
+    val t = new KeyedParquetTable(s, table, root)
+    t.applyBatch(mapped((1L to 100L).map(k => (k, k, 100L)): _*), batchId = 1L)
+    // four runs write key 1 at one writetime: the latest run wins the tie
+    (2L to 5L).foreach(b => t.applyBatch(mapped((1L, b * 10, 500L)), batchId = b))
+    assert(live(root).map(_._1) == (1 to 5))
+    Seq(t.state(), t.unfolded()).foreach { df =>
+      val plan = df.queryExecution.sparkPlan
+      val scans = plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      assert(scans.size == 1, plan.toString)
+    }
+    assert(t.state().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 100L).map(k => k -> (if (k == 1L) 50L else k)).toMap)
+    // the run is a column, not a literal per version: reads over versions
+    // no read has seen compile no new classes
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    (6L to 8L).foreach { b =>
+      t.applyBatch(mapped((1L, b * 10, 500L)), batchId = b)
+      t.state().collect()
+    }
+    assert(compiles.getCount == before, "a read over new versions compiled classes")
+  }
+
+  test("a run holds at most one part file per write task") {
+    val root = Files.createTempDirectory("graft-tasks").toString
+    val t = new KeyedParquetTable(s, table, root)
+    t.applyBatch(mapped((1L to 4000L).map(k => (k, k, 100L)): _*), batchId = 1L)
+    // three write tasks (kept apart, not coalesced), each holding keys of
+    // every hash
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      t.applyBatch(mapped((1L to 3000L).map(k => (k, -k, 200L)): _*).repartition(3),
+        batchId = 2L)
+    }
+    assert(live(root).map(_._1) == Seq(1, 2))
+    val parts = Files.walk(Paths.get(root, "v2")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+    assert(parts.size == 3, s"run v2 holds ${parts.size} part files: $parts")
   }
 }

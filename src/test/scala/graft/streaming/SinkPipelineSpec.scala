@@ -1046,27 +1046,17 @@ class SinkPipelineSpec extends SparkSuite {
       ("orders", 3L, "4", """{"v": 40}""", 1000L),
       ("orders", 4L, "5", """{"v": 50}""", 1000L),
       ("orders", 5L, "6", """{"v": 60}""", 1000L)), 0L)
-    // cap=1 → ONE write task → exactly one part file per bucket directory
-    // (uncapped, the 32-partition batch frame writes up to one file per
-    // task per bucket); semantics unchanged — all six rows land
+    // cap=1 → ONE write task → exactly one part file in the version (the
+    // first batch folds into the empty table; uncapped, the fold's shuffle
+    // partitions each write one); semantics unchanged — all six rows land
     val v1 = java.nio.file.Paths.get(root, "ks.t1", "v1")
     assert(java.nio.file.Files.exists(v1))
-    val bucketDirs = java.nio.file.Files.list(v1).iterator()
-    var checked = 0
-    while (bucketDirs.hasNext) {
-      val d = bucketDirs.next()
-      if (java.nio.file.Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith("__bucket=")) {
-        val parts = java.nio.file.Files.list(d).iterator()
-        var n = 0
-        while (parts.hasNext) {
-          if (parts.next().getFileName.toString.startsWith("part-")) n += 1
-        }
-        assert(n == 1, s"bucket dir $d has $n part files under cap=1")
-        checked += 1
-      }
+    val parts = java.nio.file.Files.list(v1).iterator()
+    var n = 0
+    while (parts.hasNext) {
+      if (parts.next().getFileName.toString.startsWith("part-")) n += 1
     }
-    assert(checked >= 1)
+    assert(n == 1, s"$v1 has $n part files under cap=1")
     assert(pipe.store(s, cfg.bindings.head).state().count() == 6L)
   }
 
